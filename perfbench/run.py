@@ -167,7 +167,7 @@ def check_output(w, cache: str, work: str) -> dict:
         pages = json.load(fh)
     reasons = []
     if w.entry == "extract":
-        table = ds.dataset(os.path.join(work, "warmup_out.parquet")).to_table()
+        table = ds.dataset(os.path.join(work, "warmup_out")).to_table()
     else:
         out = os.path.join(work, "out")
         with open(os.path.join(out, "_manifest.json")) as fh:

@@ -1,12 +1,13 @@
 """The system under test: one Spark driver process running a closed loop.
 
 ``run.py`` starts this file as a child process.  It starts a ``local[N]``
-session sized to the host, runs one untimed warm-up pass (whose output is
-kept for the correctness check), then runs timed passes back to back,
-one job at a time, until ``--seconds`` have passed.  With ``--trace 1``
-it then runs one more pass with spans recorded around every call into a
-layer, stops the session and times the kernels over a sample of the
-workload's own pages in this single process.
+session sized to the host, runs untimed warm-up passes (the first writes
+parquet through the engine, for the correctness check), then runs timed
+passes back to back, one job at a time, until ``--seconds`` have passed.
+With ``--trace 1`` it then runs one more pass with spans recorded around
+every call into a layer, stops the session and runs the extraction
+operator's own batch function over a sample of the workload's own pages
+in this single process, with each kernel call timed.
 
 Results go to ``<work>/result.json``; spans to ``<work>/spans.json``.
 """
@@ -36,6 +37,11 @@ DRIVER_HEAP = "1g"
 KERNEL_SAMPLE_PAGES = 240
 KERNEL_SAMPLE_MIN_S = 2.0      # repeat the sample until this much time
 MIN_TIMED_PASSES = 3
+# Untimed passes before the timed ones.  Pass times keep falling for a
+# while in a fresh session (JIT, Python worker start): on sharded_resume,
+# 4-CPU host, the passes after one warm-up pass read 5.4, 4.6, 4.2, 4.2,
+# 4.1 s in one session and 5.0, 4.9, 4.7, 4.3, 4.3 s in another.
+WARMUP_PASSES = 2
 
 
 def make_session(slots: int, work: str, event_log: str | None):
@@ -120,25 +126,27 @@ class Job:
         with self.tracer.span("sources.scan_open"):
             return self.spark.read.parquet(self.input_dir)
 
-    def run(self, collect: bool = False):
-        """Run one pass.  Returns the output table when ``collect`` is
-        set (extract), the shard commit timings when tracing (sharded),
-        else None."""
+    def run(self, sink_dir: str | None = None):
+        """Run one pass.  An extract pass writes parquet to ``sink_dir``
+        when given (the warm-up, whose output is checked), else to the
+        noop sink.  Returns the shard commit timings when tracing a
+        sharded pass, else None."""
         if self.w.entry == "extract":
-            return self._extract(collect)
+            return self._extract(sink_dir)
         return self._sharded()
 
-    def _extract(self, collect: bool):
+    def _extract(self, sink_dir: str | None):
         from archive_pdf_tools_spark.plans import run_extraction
 
         docs = self._docs()
         with self.tracer.span("plans.run_extraction"):
             out, _ = run_extraction(docs, with_metrics=False)
-        if collect:
-            with self.tracer.span("sink.collect"):
-                return out.toArrow()
-        with self.tracer.span("sink.noop"):
-            out.write.mode("overwrite").format("noop").save()
+        if sink_dir:
+            with self.tracer.span("sink.parquet"):
+                out.write.mode("overwrite").parquet(sink_dir)
+        else:
+            with self.tracer.span("sink.noop"):
+                out.write.mode("overwrite").format("noop").save()
         return None
 
     def _sharded(self):
@@ -182,62 +190,55 @@ class Job:
                 "resume_s": calls[1][1] - calls[1][0]}
 
 
-def kernel_sample(input_dir: str, n: int) -> list[dict]:
-    """A fixed, evenly strided sample of the input's pages."""
+# span name -> the names the extraction operator calls that kernel by
+KERNELS = {
+    "corpus.render_raster": ("render_raster",),
+    "kernels.mrc_mask": ("mrc_mask_phase",),
+    "kernels.denoise": ("fast_mask_denoise_batch",),
+    "kernels.optimise": ("optimise_gray2_batch", "optimise_rgb2_batch"),
+    "kernels.text_layout": ("render_text_layer",),
+}
+
+
+def kernel_sample(input_dir: str, n: int):
+    """A fixed, evenly strided sample of the input's pages, as the span
+    rows the extraction operator's ``mapInPandas`` body takes."""
+    import pandas as pd
     import pyarrow.parquet as pq
 
-    pages = [span for row in pq.read_table(input_dir).to_pylist()
+    pages = [{"doc_id": row["doc_id"], **span}
+             for row in pq.read_table(input_dir).to_pylist()
              for span in row["spans"]]
     stride = max(1, len(pages) // n)
-    return pages[::stride][:n]
+    return pd.DataFrame(pages[::stride][:n])
 
 
-def time_kernels(pages: list[dict], tracer: Tracer) -> None:
-    """Call each kernel entry point the extraction operator calls, page
-    by page, with the same arguments it builds."""
-    from archive_pdf_tools_spark.corpus.rasters import (
-        page_spec, render_raster, spec_word_data)
-    from archive_pdf_tools_spark.kernels.dpi import (
-        page_geometry, pick_font_scaler)
-    from archive_pdf_tools_spark.kernels.mrc import mrc_mask_phase
-    from archive_pdf_tools_spark.kernels.optimise import (
-        fast_mask_denoise_batch, optimise_gray2_batch, optimise_rgb2_batch)
-    from archive_pdf_tools_spark.kernels.textlayer import render_text_layer
+def time_kernels(frame, tracer: Tracer) -> None:
+    """Run the extraction operator's own ``mapInPandas`` body over
+    ``frame`` in this process, with a span around every kernel call it
+    makes: the kernels see the engine's batching and arguments."""
+    from archive_pdf_tools_spark.operators import extract
 
-    for page in pages:
-        if page["kind"] == "media":
-            spec = page_spec(page["media_ref"])
-            with tracer.span("corpus.render_raster"):
-                raster = render_raster(spec)
-            if spec["bitonal"]:
-                continue
-            with tracer.span("kernels.mrc_mask"):
-                mask, _d, _w = mrc_mask_phase(
-                    raster, spec_word_data(spec), dpi=spec["dpi"],
-                    apply_denoise=False)
-            with tracer.span("kernels.denoise"):
-                masks = fast_mask_denoise_batch(mask[None], 4, 2)
-            opt = optimise_rgb2_batch if raster.ndim == 3 \
-                else optimise_gray2_batch
-            with tracer.span("kernels.optimise"):
-                opt(masks, raster[None], 3)
-                opt(~masks, raster[None], 10)
-        else:
-            payload = json.loads(page["text"])
-            p = payload["page"]
-            width, height, ppi, _w = page_geometry(p["w"], p["h"],
-                                                   doc_dpi=p.get("dpi"))
-            scaler = pick_font_scaler(p.get("scan_res"), ppi)
-            word_data = payload["paragraphs"]
-            if scaler != 1:
-                word_data = [{"lines": [
-                    {**line, "words": [{**wd, "fontsize":
-                                        wd["fontsize"] * scaler}
-                                       for wd in line["words"]]}
-                    for line in para["lines"]]} for para in word_data]
-            with tracer.span("kernels.text_layout"):
-                render_text_layer(word_data, width, height, ppi,
-                                  hocr_ppi=p.get("scan_res"))
+    def timed(name, fn):
+        def call(*args, **kwargs):
+            with tracer.span(name):
+                return fn(*args, **kwargs)
+        return call
+
+    saved = {attr: getattr(extract, attr)
+             for attrs in KERNELS.values() for attr in attrs}
+    for name, attrs in KERNELS.items():
+        for attr in attrs:
+            setattr(extract, attr, timed(name, saved[attr]))
+    try:
+        for out in extract._extract_batches([frame.copy()]):
+            errors = {w for ws in out["warnings"] for w in ws
+                      if w.startswith("extract-error:")}
+            if errors:
+                raise RuntimeError(f"kernel sample failed: {errors}")
+    finally:
+        for attr, fn in saved.items():
+            setattr(extract, attr, fn)
 
 
 def main(argv=None):
@@ -266,11 +267,10 @@ def main(argv=None):
     untraced = Tracer(False)
     job = Job(spark, w, args.input, args.work, untraced)
     result["warmup_start_s"] = time.monotonic() - args.t0
-    warm = job.run(collect=True)
+    job.run(sink_dir=os.path.join(args.work, "warmup_out"))
+    for _ in range(WARMUP_PASSES - 1):
+        job.run()
     result["setup_s"] = time.monotonic() - args.t0
-    if warm is not None:
-        import pyarrow.parquet as pq
-        pq.write_table(warm, os.path.join(args.work, "warmup_out.parquet"))
 
     passes = []
     t_end = time.perf_counter() + args.seconds
@@ -293,19 +293,16 @@ def main(argv=None):
     spark.stop()
 
     if args.trace:
-        pages = kernel_sample(args.input, KERNEL_SAMPLE_PAGES)
+        frame = kernel_sample(args.input, KERNEL_SAMPLE_PAGES)
         timed = 0
         t_end = time.perf_counter() + KERNEL_SAMPLE_MIN_S
         while not timed or time.perf_counter() < t_end:
-            with tracer.span("kernel_sample", pages=len(pages)):
-                time_kernels(pages, tracer)
-            timed += len(pages)
+            with tracer.span("kernel_sample", pages=len(frame)):
+                time_kernels(frame, tracer)
+            timed += len(frame)
         result["kernel_sample_pages"] = timed
         result["kernel_ms_per_page"] = {
-            name: 1000.0 * tracer.total(name) / timed
-            for name in ("corpus.render_raster", "kernels.mrc_mask",
-                         "kernels.denoise", "kernels.optimise",
-                         "kernels.text_layout")}
+            name: 1000.0 * tracer.total(name) / timed for name in KERNELS}
         tracer.dump(os.path.join(args.work, "spans.json"))
     with open(os.path.join(args.work, "result.json"), "w") as fh:
         json.dump(result, fh)

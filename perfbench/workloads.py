@@ -2,11 +2,11 @@
 
 A workload is a corpus shape plus the entry point it drives.  Its input
 is a function of (workload, seed) alone: documents come from the
-engine's own deterministic generator (``corpus.generate.make_doc``),
-which keeps the heavy tail of pages per document (5% of documents have
-101+ pages; ``max_spans`` only caps the tail's length so one document
-cannot be the whole corpus).  The staged input is a parquet table in the
-``(doc_id, spans)`` shape ``job.py --input`` reads.
+engine's own deterministic generator (``corpus.generate.make_doc``)
+with its own heavy tail of pages per document (5% of documents have 101
+to 2000 pages); only the last document is cut short, so that the corpus
+holds the workload's page count.  The staged input is a parquet table in
+the ``(doc_id, spans)`` shape ``job.py --input`` reads.
 
 The oracle is ``operators.extract.extract_document_local`` over every
 document, run in a process pool before the engine starts.  Input and
@@ -34,7 +34,6 @@ class Workload:
     entry: str                  # "extract" (run_extraction) | "sharded"
     media_fraction: float
     pages: int                  # input size, the same for every seed
-    max_spans: int = 200
     shards: int = 0             # sharded only: S
 
 
@@ -46,7 +45,7 @@ class Workload:
 #   after S/2 and a resume.  Each shard rescans the input today, so
 #   single-scan sharding shows here only.  Its 30% media pages also carry
 #   the raster kernels.
-# There is no all-media workload: each run pays about 20 s of session
+# There is no all-media workload: each run pays 25 to 40 s of session
 # start and warm-up, so two workloads with more work per run give steadier
 # figures than three with less.
 # The page count is fixed, not the document count: with the heavy tail,
@@ -55,7 +54,7 @@ class Workload:
 WORKLOADS = {
     w.name: w for w in (
         Workload("extract_text", "extract", 0.0, pages=10000),
-        Workload("sharded_resume", "sharded", 0.3, pages=1000, shards=2),
+        Workload("sharded_resume", "sharded", 0.3, pages=2000, shards=2),
     )
 }
 
@@ -78,9 +77,8 @@ def source_digest(package_dir: str) -> str:
 def _make_doc(args) -> dict:
     from archive_pdf_tools_spark.corpus.generate import make_doc
 
-    index, seed, max_spans, media_fraction = args
-    return make_doc(index, seed=seed, max_spans=max_spans,
-                    media_fraction=media_fraction)
+    index, seed, media_fraction = args
+    return make_doc(index, seed=seed, media_fraction=media_fraction)
 
 
 def _documents(w: Workload, seed: int, pool) -> list[dict]:
@@ -88,10 +86,10 @@ def _documents(w: Workload, seed: int, pool) -> list[dict]:
     pages; the last document is cut short to fit."""
     docs, total = [], 0
     while total < w.pages:
-        # ~20 pages per document on average: ask for a few more than needed
-        batch = range(len(docs), len(docs) + (w.pages - total) // 20 + 4)
-        for doc in pool.map(_make_doc, [(i, seed, w.max_spans,
-                                         w.media_fraction) for i in batch]):
+        # ~65 pages per document on average: ask for a few more than needed
+        batch = range(len(docs), len(docs) + (w.pages - total) // 65 + 4)
+        for doc in pool.map(_make_doc, [(i, seed, w.media_fraction)
+                                        for i in batch]):
             if total == w.pages:
                 break
             doc["spans"] = doc["spans"][:w.pages - total]
