@@ -3,7 +3,7 @@
 Usage, from the root of a checkout::
 
     python3 perfbench/run.py --workload extract_text --seed 1 \\
-        --seconds 12 --trace 0
+        --seconds 16 --trace 0
 
 This process is the load generator.  It stages the workload's input and
 oracle (cached under ``.perfbench/`` per workload, seed and engine source
@@ -11,6 +11,10 @@ digest), starts the system under test (``sut.py``: one Spark driver
 running a closed loop of one job at a time), samples the resident memory
 of that process tree from ``/proc``, checks every document's output
 against the oracle and prints one JSON line last.
+
+Each child runs in a session of its own and is waited for together with
+every process left in its session; this process also reaps the orphans
+below it, and on every way out stops and waits for whatever is left.
 
 ``--trace 0`` reports the end-to-end metrics; ``--trace 1`` reports the
 per-layer metrics from a separate traced pass, Spark's own per-stage
@@ -34,8 +38,8 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-from workloads import (WORKLOADS, prepare_input, source_digest,  # noqa: E402
-                       span_rows)
+from workloads import (WORKLOADS, cache_dir, is_prepared,  # noqa: E402
+                       source_digest, span_rows)
 
 PACKAGE = "archive_pdf_tools_spark"
 NATIVE_OK = "compiled kernels active"
@@ -47,33 +51,46 @@ def _fail(msg: str, code: int = 2):
     sys.exit(code)
 
 
-def _proc_stat(pid: int) -> tuple[int, int, str] | None:
-    """(parent pid, start time, state) of a process, or None when gone."""
+def _proc_stat(pid: int) -> tuple[int, int, int, str] | None:
+    """(parent pid, session id, start time, state) of a process, or None
+    when gone."""
     try:
         with open(f"/proc/{pid}/stat") as fh:
             stat = fh.read()
     except OSError:
         return None
     fields = stat[stat.rindex(")") + 2:].split()
-    return int(fields[1]), int(fields[19]), fields[0]
+    return int(fields[1]), int(fields[3]), int(fields[19]), fields[0]
 
 
-def _descendants(root: int) -> dict[int, int]:
-    """{pid: start time} of ``root`` and every process below it."""
-    children: dict[int, list[int]] = {}
-    starts: dict[int, int] = {}
+def _all_procs() -> dict[int, tuple[int, int, int, str]]:
+    out = {}
     for name in os.listdir("/proc"):
         if name.isdigit():
             st = _proc_stat(int(name))
             if st:
-                children.setdefault(st[0], []).append(int(name))
-                starts[int(name)] = st[1]
-    out, todo = {}, [root]
+                out[int(name)] = st
+    return out
+
+
+def _session(sid: int) -> dict[int, int]:
+    """{pid: start time} of every process in session ``sid``.  A child
+    started with a session of its own keeps every process it starts in
+    it, also those that lost their parent."""
+    return {pid: st[2] for pid, st in _all_procs().items() if st[1] == sid}
+
+
+def _descendants(root: int) -> dict[int, int]:
+    """{pid: start time} of every process below ``root``."""
+    procs = _all_procs()
+    children: dict[int, list[int]] = {}
+    for pid, st in procs.items():
+        children.setdefault(st[0], []).append(pid)
+    out, todo = {}, list(children.get(root, ()))
     while todo:
         pid = todo.pop()
-        if pid in starts:
-            out[pid] = starts[pid]
-            todo.extend(children.get(pid, ()))
+        out[pid] = procs[pid][2]
+        todo.extend(children.get(pid, ()))
     return out
 
 
@@ -82,9 +99,70 @@ def _alive(procs: dict[int, int]) -> list[int]:
     left = []
     for pid, start in procs.items():
         st = _proc_stat(pid)
-        if st and st[1] == start and st[2] != "Z":
+        if st and st[2] == start and st[3] != "Z":
             left.append(pid)
     return left
+
+
+def _existing(procs: dict[int, int]) -> list[int]:
+    """The processes of {pid: start time} still in the process table,
+    ended ones whose parent has not yet collected them included."""
+    left = []
+    for pid, start in procs.items():
+        st = _proc_stat(pid)
+        if st and st[2] == start:
+            left.append(pid)
+    return left
+
+
+def _reap() -> None:
+    """Collect the exit status of every ended child of this process,
+    orphans handed to it included."""
+    while True:
+        try:
+            pid, _status = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def _stop(members, grace_s: float = 5.0) -> None:
+    """Give the processes ``members()`` lists ({pid: start time})
+    ``grace_s`` to end on their own, then SIGTERM, then SIGKILL what is
+    left, and wait until every one is gone from the process table.
+    ``members`` is asked again on every look, so a process started
+    meanwhile (a JVM forks while it shuts down) is stopped too."""
+    procs: dict[int, int] = {}
+
+    def left() -> list[int]:
+        _reap()
+        procs.update(members())
+        return _existing(procs)
+
+    for sig in (None, signal.SIGTERM, signal.SIGKILL):
+        for pid in _alive(procs) if sig else ():
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        deadline = time.monotonic() + grace_s
+        while left() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        if not left():
+            return
+    raise RuntimeError(f"processes {left()} did not stop")
+
+
+def _become_subreaper() -> None:
+    """Have every process below this one that loses its parent handed to
+    this one (Linux ``PR_SET_CHILD_SUBREAPER``), so the final sweep in
+    ``main`` finds it wherever it was started."""
+    import ctypes
+
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(36, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
 
 
 def _pss_bytes(pid: int) -> int:
@@ -100,23 +178,20 @@ def _pss_bytes(pid: int) -> int:
 
 
 class TreeWatcher(threading.Thread):
-    """Samples a process tree from /proc: the peak of its summed resident
-    memory (the JVM and the Python workers are below the root), and every
-    process seen in it, so that all can be stopped at the end even after
-    they lost their parent."""
+    """Samples the session of a child started with a session of its own
+    from /proc: the peak of its summed resident memory (the JVM and the
+    Python workers are in it)."""
 
     def __init__(self, root: int, period_s: float = 0.2):
         super().__init__(daemon=True)
         self.root, self.period_s = root, period_s
         self.peak_bytes = 0
         self.peak_procs: list = []        # [(command, MB)] at the peak
-        self.seen: dict[int, int] = _descendants(root)
         self._halt = threading.Event()
 
     def run(self):
         while not self._halt.wait(self.period_s):
-            members = _descendants(self.root)
-            self.seen.update(members)
+            members = _session(self.root)
             procs = []
             for pid in members:
                 try:
@@ -182,9 +257,17 @@ def check_output(w, cache: str, work: str) -> dict:
                          for k in ks or () if k.startswith("extract-error:")})
         if errors:
             reasons.append(f"error markers {errors}")
-        if sorted(set(metrics.column("shard").to_pylist())) != \
-                list(range(w.shards)):
-            reasons.append("metrics missing shards")
+        # a shard may hold no document at all (with the heavy tail, a
+        # seed can give just two documents, both in one shard), and then
+        # it writes no metrics rows; it still writes its directory
+        missing = [k for k in range(w.shards) if not os.path.isdir(
+            os.path.join(out, "metrics", f"shard={k}"))]
+        if missing:
+            reasons.append(f"no metrics written for shards {missing}")
+        counted = sum(metrics.column("page_count").to_pylist())
+        if counted != sum(pages.values()):
+            reasons.append(f"metrics count {counted} pages, "
+                           f"input has {sum(pages.values())}")
 
     got: dict = {}
     for row in table.select(["doc_id", "spans"]).to_pylist():
@@ -217,11 +300,12 @@ def _cpu_jiffies() -> list[int]:
         return [int(v) for v in fh.readline().split()[1:9]]
 
 
-def _run_sut(cmd: list, env: dict, work: str,
-             timeout_s: float) -> tuple[dict, TreeWatcher]:
-    """Run the system under test to completion; returns its result and
-    the watcher of its process tree."""
-    log_path = os.path.join(work, "sut.log")
+def _run_session(what: str, cmd: list, env: dict, log_path: str,
+                 timeout_s: float) -> TreeWatcher:
+    """Run ``cmd`` to completion in a session of its own, then wait until
+    every process left in that session has ended (the JVM exits after
+    the driver, the Python daemon after the JVM), stopping those that do
+    not.  Returns the watcher of the session."""
     with open(log_path, "w") as log:
         proc = subprocess.Popen(cmd, env=env, stdout=log,
                                 stderr=subprocess.STDOUT,
@@ -229,21 +313,29 @@ def _run_sut(cmd: list, env: dict, work: str,
         tree = TreeWatcher(proc.pid)
         tree.start()
         try:
-            rc = proc.wait(timeout=timeout_s)
+            rc = proc.wait(timeout=max(1.0, timeout_s))
         except subprocess.TimeoutExpired:
             rc = None
         finally:
             tree.stop()
-            _stop_tree(proc, tree.seen)
+            _stop(lambda: _session(proc.pid))
+            proc.wait()
     if rc != 0:
         with open(log_path) as fh:
             sys.stderr.write(fh.read()[-4000:])
-        _fail(f"system under test exited with {rc}", 1)
-    with open(os.path.join(work, "result.json")) as fh:
-        return json.load(fh), tree
+        _fail(f"{what} exited with {rc}", 1)
+    return tree
 
 
 def main(argv=None):
+    _become_subreaper()
+    try:
+        run(argv)
+    finally:
+        _stop(lambda: _descendants(os.getpid()))
+
+
+def run(argv=None):
     started = time.monotonic()
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
@@ -273,20 +365,30 @@ def main(argv=None):
     from archive_pdf_tools_spark.kernels import native
     native.available()
 
-    cache = prepare_input(w, args.seed, os.path.join(work_root, "cache"),
-                          source_digest(os.path.join(root, PACKAGE)), slots)
+    cache = cache_dir(w, args.seed, os.path.join(work_root, "cache"),
+                      source_digest(os.path.join(root, PACKAGE)))
+    if not is_prepared(cache):
+        _run_session("input preparation",
+                     [sys.executable, os.path.join(HERE, "workloads.py"),
+                      w.name, str(args.seed), cache, str(slots)],
+                     env, os.path.join(work, "prepare.log"),
+                     RUN_DEADLINE_S - (time.monotonic() - started))
     with open(os.path.join(cache, "pages.json")) as fh:
         pages = json.load(fh)
     n_pages = sum(pages.values())
 
     cpu0 = _cpu_jiffies()
-    res, tree = _run_sut(
+    tree = _run_session(
+        "system under test",
         [sys.executable, os.path.join(HERE, "sut.py"),
          "--workload", w.name, "--input", os.path.join(cache, "input"),
          "--work", work, "--seconds", str(args.seconds),
          "--trace", str(args.trace), "--slots", str(slots),
-         "--t0", repr(time.monotonic())], env, work,
+         "--t0", repr(time.monotonic())], env,
+        os.path.join(work, "sut.log"),
         RUN_DEADLINE_S - (time.monotonic() - started))
+    with open(os.path.join(work, "result.json")) as fh:
+        res = json.load(fh)
 
     cpu = [b - a for a, b in zip(cpu0, _cpu_jiffies())]
     check = check_output(w, cache, work)
@@ -333,26 +435,6 @@ def main(argv=None):
     print(json.dumps({"correct": not check["reasons"],
                       "attempted": check["attempted"],
                       "failed": check["failed"], "metrics": metrics}))
-
-
-def _stop_tree(proc, seen: dict[int, int]) -> None:
-    """Let the driver's processes end on their own (the JVM exits after
-    the driver, the Python daemon after the JVM), stop what is left, and
-    wait until every process ever seen in the tree has ended."""
-    seen = {**seen, **_descendants(proc.pid)}
-    for sig, grace_s in ((None, 5), (signal.SIGTERM, 5), (signal.SIGKILL, 5)):
-        for pid in _alive(seen) if sig else ():
-            try:
-                os.kill(pid, sig)
-            except ProcessLookupError:
-                pass
-        deadline = time.monotonic() + grace_s
-        while _alive(seen) and time.monotonic() < deadline:
-            time.sleep(0.05)
-        if not _alive(seen):
-            proc.wait()
-            return
-    raise RuntimeError(f"processes {_alive(seen)} did not stop")
 
 
 if __name__ == "__main__":

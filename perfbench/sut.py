@@ -40,8 +40,10 @@ MIN_TIMED_PASSES = 3
 # Untimed passes before the timed ones.  Pass times keep falling for a
 # while in a fresh session (JIT, Python worker start): on sharded_resume,
 # 4-CPU host, the passes after one warm-up pass read 5.4, 4.6, 4.2, 4.2,
-# 4.1 s in one session and 5.0, 4.9, 4.7, 4.3, 4.3 s in another.
-WARMUP_PASSES = 2
+# 4.1 s in one session and 5.0, 4.9, 4.7, 4.3, 4.3 s in another; after
+# two, the timed passes still fell (4.98, 4.81, 4.27 s); after three they
+# were flatter (4.50, 4.38, 4.45, 4.39 s).
+WARMUP_PASSES = 3
 
 
 def make_session(slots: int, work: str, event_log: str | None):

@@ -11,6 +11,7 @@ the ``(doc_id, spans)`` shape ``job.py --input`` reads.
 The oracle is ``operators.extract.extract_document_local`` over every
 document, run in a process pool before the engine starts.  Input and
 oracle are cached together per (workload, seed, engine source digest).
+Run as a script, this module fills one cache directory.
 """
 
 from __future__ import annotations
@@ -22,8 +23,8 @@ import os
 import shutil
 from dataclasses import dataclass
 
-__all__ = ["WORKLOADS", "Workload", "prepare_input", "source_digest",
-           "span_rows"]
+__all__ = ["WORKLOADS", "Workload", "cache_dir", "is_prepared",
+           "prepare_input", "source_digest", "span_rows"]
 
 INPUT_FILES = 8          # files in the staged table, independent of host
 
@@ -45,7 +46,7 @@ class Workload:
 #   after S/2 and a resume.  Each shard rescans the input today, so
 #   single-scan sharding shows here only.  Its 30% media pages also carry
 #   the raster kernels.
-# There is no all-media workload: each run pays 25 to 40 s of session
+# There is no all-media workload: each run pays 30 to 45 s of session
 # start and warm-up, so two workloads with more work per run give steadier
 # figures than three with less.
 # The page count is fixed, not the document count: with the heavy tail,
@@ -132,15 +133,26 @@ def _write_table(docs: list, path: str) -> None:
         pq.write_table(table, os.path.join(path, f"part-{f:05d}.parquet"))
 
 
-def prepare_input(w: Workload, seed: int, cache_root: str, digest: str,
-                  procs: int) -> str:
-    """Return the cache directory holding ``input/`` (parquet table) and
-    ``oracle.json`` ({doc_id: [[kind, text, media_ref, offset], ...]})
-    plus ``pages.json`` ({doc_id: page count}) for (w, seed)."""
+def cache_dir(w: Workload, seed: int, cache_root: str, digest: str) -> str:
+    """The cache directory of (w, seed) for an engine source digest."""
     key = hashlib.sha256(f"{digest} {w!r}".encode()).hexdigest()[:16]
-    final = os.path.join(cache_root, f"{w.name}-seed{seed}-{key}")
-    if os.path.exists(os.path.join(final, "oracle.json")):
-        return final
+    return os.path.join(cache_root, f"{w.name}-seed{seed}-{key}")
+
+
+def is_prepared(final: str) -> bool:
+    return os.path.exists(os.path.join(final, "oracle.json"))
+
+
+def prepare_input(w: Workload, seed: int, final: str, procs: int) -> None:
+    """Fill the cache directory ``final`` with ``input/`` (parquet table),
+    ``oracle.json`` ({doc_id: [[kind, text, media_ref, offset], ...]})
+    and ``pages.json`` ({doc_id: page count}) for (w, seed).
+
+    The process pool starts a resource tracker that lives as long as
+    the process that made the pool, so ``run.py`` calls this through the
+    command line below, in a process of its own."""
+    if is_prepared(final):
+        return
     tmp = f"{final}.tmp{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
@@ -159,4 +171,11 @@ def prepare_input(w: Workload, seed: int, cache_root: str, digest: str,
                   fh, ensure_ascii=False)
     shutil.rmtree(final, ignore_errors=True)
     os.replace(tmp, final)
-    return final
+
+
+if __name__ == "__main__":
+    # python3 perfbench/workloads.py WORKLOAD SEED CACHE_DIR PROCS
+    import sys
+
+    name, seed, final, procs = sys.argv[1:]
+    prepare_input(WORKLOADS[name], int(seed), final, int(procs))
