@@ -433,9 +433,12 @@ def minhash_lsh_pairs(documents: DataFrame, n: int = 3, k: int = 32,
         sb = sharr.select(F.col("doc_id").alias("doc_b"),
                           F.col("shs").alias("shs_b"),
                           F.col("n_sh").alias("n_b"))
+        # the join shape only yields pairs sharing a shingle; keep the
+        # same pair set here, or tau <= 0 admits disjoint candidates
         verified = (cand.join(sa, "doc_a").join(sb, "doc_b")
                     .withColumn("n_inter", F.size(
-                        F.array_intersect("shs_a", "shs_b"))))
+                        F.array_intersect("shs_a", "shs_b")))
+                    .where(F.col("n_inter") > 0))
     return (verified
             .withColumn("jaccard",
                         F.round(F.col("n_inter") /

@@ -34,8 +34,10 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import platform
 import subprocess
 import tempfile
+import threading
 
 import numpy as np
 
@@ -104,28 +106,55 @@ def _cache_dir() -> str:
 # Bit-parity is preserved because neither flag licenses FP
 # reassociation (-ffast-math stays off and -ffp-contract=off below
 # keeps FMA fusion disabled), so float64 expression trees still
-# evaluate IEEE per-op exactly like NumPy's.  -march=native is safe
-# in-sandbox (compile host == run host); SPARK_GRAFT_CKERN_ARCH=
-# overrides for heterogeneous clusters (set to e.g. x86-64-v3, or
-# empty to drop the flag entirely).
+# evaluate IEEE per-op exactly like NumPy's.  A -march=native build is
+# tagged with the host's ISA fingerprint, so a cache directory shared
+# by hosts of different CPU generations never hands one host another's
+# instructions; SPARK_GRAFT_CKERN_ARCH= overrides (set to e.g.
+# x86-64-v3, or empty to drop the flag entirely).
 def _arch_flags() -> list:
     arch = os.environ.get("SPARK_GRAFT_CKERN_ARCH", "native")
     return [f"-march={arch}"] if arch else []
 
 
-def _compile(src: str) -> str:
-    flags = ["-O3"] + _arch_flags()
-    tag = hashlib.sha256((" ".join(flags) + "\0" + src)
-                         .encode()).hexdigest()[:16]
-    cache = _cache_dir()
-    so = os.path.join(cache, f"apts_ckern_{tag}.so")
-    if os.path.exists(so):
-        st = os.lstat(so)
-        # reuse only regular files the current uid owns
-        if st.st_uid == os.getuid() and os.path.isfile(so) \
-                and not os.path.islink(so):
-            return so
-        os.unlink(so)
+def _host_isa() -> str:
+    """Machine name plus the CPU feature flags ``/proc/cpuinfo`` lists
+    (the first ``flags``/``Features`` line); what ``-march=native``
+    compiles for."""
+    feats = ""
+    try:
+        with open("/proc/cpuinfo") as f:
+            for line in f:
+                if line.startswith(("flags", "Features")):
+                    feats = line.split(":", 1)[1].strip()
+                    break
+    except OSError:
+        pass
+    return f"{platform.machine()}\0{feats}"
+
+
+def _so_path(cache: str, flags: list, src: str, isa: str) -> str:
+    """Cache file for ``src`` built with ``flags``; a native-ISA build
+    is keyed by the host fingerprint ``isa`` as well."""
+    key = " ".join(flags) + "\0" + src
+    if "-march=native" in flags:
+        key += "\0" + isa
+    tag = hashlib.sha256(key.encode()).hexdigest()[:16]
+    return os.path.join(cache, f"apts_ckern_{tag}.so")
+
+
+def _cached(so: str) -> bool:
+    if not os.path.exists(so):
+        return False
+    st = os.lstat(so)
+    # reuse only regular files the current uid owns
+    if st.st_uid == os.getuid() and os.path.isfile(so) \
+            and not os.path.islink(so):
+        return True
+    os.unlink(so)
+    return False
+
+
+def _build(so: str, flags: list, src: str, cache: str) -> None:
     fd, cpath = tempfile.mkstemp(suffix=".c", dir=cache)
     try:
         with os.fdopen(fd, "w") as f:
@@ -135,25 +164,35 @@ def _compile(src: str) -> str:
         # matches numpy's unfused expression trees bit-for-bit
         cmd = (["gcc"] + flags +
                ["-shared", "-fPIC", "-fvisibility=hidden",
-                "-ffp-contract=off", "-o", tmp_so, cpath])
-        try:
-            subprocess.run(cmd, check=True, capture_output=True,
-                           timeout=300)
-        except subprocess.CalledProcessError:
-            if "-march=native" not in cmd:
-                raise
-            # Ancient toolchains without -march=native support: retry
-            # with the portable flag set.
-            cmd = [a for a in cmd if a != "-march=native"]
-            subprocess.run(cmd, check=True, capture_output=True,
-                           timeout=300)
+                "-ffp-contract=off", "-o", tmp_so, cpath, "-lm"])
+        subprocess.run(cmd, check=True, capture_output=True, timeout=300)
         os.replace(tmp_so, so)   # atomic: concurrent builders race safely
     finally:
         try:
             os.unlink(cpath)
         except OSError:
             pass
-    return so
+
+
+def _compile(src: str) -> str:
+    flags = ["-O3"] + _arch_flags()
+    # Ancient toolchains without -march=native support fall back to
+    # the portable flag set, cached under its own tag.
+    variants = [flags]
+    if "-march=native" in flags:
+        variants.append([a for a in flags if a != "-march=native"])
+    cache = _cache_dir()
+    isa = _host_isa()
+    for fl in variants:
+        so = _so_path(cache, fl, src, isa)
+        if _cached(so):
+            return so
+        try:
+            _build(so, fl, src, cache)
+            return so
+        except subprocess.CalledProcessError:
+            if fl is variants[-1]:
+                raise
 
 
 def _bind(lib) -> None:
@@ -308,16 +347,43 @@ def _bind(lib) -> None:
     lib.apts_jb2_encode_flush.argtypes = [_I64P, _U8P,
                                           ctypes.c_int64, _I64P]
     lib.apts_jb2_encode_flush.restype = ctypes.c_int32
+    vp, i64, f64 = ctypes.c_void_p, ctypes.c_int64, ctypes.c_double
+    lib.apts_text_layer.argtypes = [
+        vp, i64, vp, i64, vp, i64, f64, f64, f64, f64, ctypes.c_int32,
+        vp, i64, _I64P,
+    ]
+    lib.apts_text_layer.restype = ctypes.c_int32
 
 
 def _u8(a: np.ndarray):
     return a.ctypes.data_as(_U8P)
 
 
+# One text page for the self-test: Tm and Td placement, an RTL word,
+# the fontsize fallback, an astral codepoint and a float font scale.
+_TEXT_PAGE = [{"lines": [{
+    "bbox": [10, 10, 200, 30], "baseline": [0.05, -2.5], "words": [
+        {"text": "spark", "bbox": [10, 10, 60, 30], "fontsize": 11.5,
+         "writing_direction": 0},
+        {"text": "query", "bbox": [64, 11, 100, 30], "fontsize": 11.5,
+         "writing_direction": 1},
+        {"text": "\u05e9\u05dc\u05d5\u05dd", "bbox": [104, 10, 130, 30],
+         "fontsize": 0, "writing_direction": 2},
+        {"text": "\U0001d518x", "bbox": [140, 12, 190, 31], "fontsize": 9,
+         "writing_direction": 1}]}]}]
+
+
 def _self_test(lib) -> bool:
-    """Round-trip a small block through both coders; any mismatch
-    disables the compiled path for the process."""
+    """Round-trip a small block through both coders and render one text
+    page both ways; any mismatch disables the compiled path for the
+    process."""
     from ..jp2codec import t1_decode, t1_encode
+    from ..textlayer import _render_native, _render_text_layer_py
+
+    args = (_TEXT_PAGE, 612.0, 792.0, 72.0, 0.24)
+    nat = _render_native(*args, _lib=lib)
+    if nat is None or nat != _render_text_layer_py(*args):
+        return False
 
     rng = np.random.default_rng(20260818)
     coefs = rng.integers(-900, 900, size=(23, 17)).astype(np.int64)
@@ -685,6 +751,40 @@ def optimise2_native(mask: np.ndarray, img: np.ndarray, n_size: int):
     if rc:
         return None
     return out.reshape(img.shape)
+
+
+def text_layer_native(ints, nums, blob: bytes, width, height, ppi,
+                      scale, scale_mode: int, _lib=None):
+    """Text-op stream of one packed page (``array('i')`` structure,
+    ``array('d')`` geometry, hex payload blob; the layout is documented
+    at ``apts_text_layer``); None = the page needs the Python path."""
+    lib = _lib if _lib is not None else _load()
+    if lib is None:
+        return None
+    out = _tl_out
+    if not hasattr(out, "n"):     # first call on this thread
+        out.n = ctypes.c_int64(0)
+        out.n_ref = ctypes.byref(out.n)
+        out.buf = np.empty(0, dtype=np.uint8)
+    need = 64 + 4 * len(ints) + 24 * len(nums) + len(blob)
+    while True:
+        if len(out.buf) < need:
+            out.buf = np.empty(need, dtype=np.uint8)
+            out.addr = out.buf.ctypes.data
+        cap = len(out.buf)
+        rc = lib.apts_text_layer(
+            ints.buffer_info()[0], len(ints), nums.buffer_info()[0],
+            len(nums), blob, len(blob), width, height, ppi, scale,
+            scale_mode, out.addr, cap, out.n_ref)
+        if rc:
+            return None
+        if out.n.value <= cap:
+            return ctypes.string_at(out.addr, out.n.value)
+        need = out.n.value
+
+
+# Per-thread op-stream buffer: the foreign call releases the GIL.
+_tl_out = threading.local()
 
 
 def sauvola_native(img: np.ndarray, ww: int, wh: int, k: float,

@@ -3339,3 +3339,395 @@ EXPORT int apts_box_downsample(const uint8_t *img, int64_t h, int64_t w,
     free(xmap);
     return 0;
 }
+
+/* ------------------------------------------------ hOCR text layer
+ *
+ * The Tm/Td/Tf/Tz/TJ op stream of kernels/textlayer.py::
+ * _render_text_layer_py, op for op.  The caller packs one page in
+ * traversal order (paragraphs without ink already dropped):
+ *
+ *   iv: n_paras, then per paragraph n_lines; per line n_words and a
+ *       flag "left/right/bottom/slope/intercept are all Python ints";
+ *       per word a flag "fontsize is a Python int"
+ *   dv: per line left, right, bottom, slope, intercept; per word
+ *       x1, y1, x2, y2, fontsize, writing direction
+ *   blob: the words' UTF-16BE hex payloads (kept codepoints plus the
+ *       synthetic space), joined by single spaces
+ *
+ * Python does the geometry on exact ints where the JSON gave ints; the
+ * kernel reproduces that only while every coordinate stays below 2^24
+ * (all products then stay exact in a double), and it declines (returns
+ * 1, the caller re-runs the page in Python) any page with a value it
+ * cannot reproduce: non-finite intermediates (where Python raises
+ * ValueError/OverflowError/ZeroDivisionError or prints "nan"), a float
+ * font size whose repr is not fixed-point, or a non-'.' decimal point.
+ * math calls go through volatile pointers so the compiler can neither
+ * fuse sin/cos into sincos nor turn pow(x, 0.5) into sqrt: Python
+ * calls each libm function by itself.
+ */
+#include <locale.h>
+#include <stdio.h>
+
+static double (*volatile tl_sin)(double) = sin;
+static double (*volatile tl_cos)(double) = cos;
+static double (*volatile tl_atan2)(double, double) = atan2;
+static double (*volatile tl_pow)(double, double) = pow;
+
+#define TL_EXACT 16777216.0     /* 2^24 */
+
+typedef struct {
+    uint8_t *buf;
+    int64_t cap, n;
+} TLOut;
+
+static void tl_put(TLOut *o, const char *s, int64_t len) {
+    if (o->n + len <= o->cap) memcpy(o->buf + o->n, s, (size_t)len);
+    o->n += len;
+}
+
+#define TL_LIT(o, s) tl_put((o), (s), (int64_t)sizeof(s) - 1)
+
+/* textlayer.prec keeps round(x * 1000) (half to even); Python's round
+ * raises on inf/nan: decline.  The value is then that integer / 1000. */
+static int tl_prec_k(double x, double *k) {
+    double s = x * 1000.0;
+    if (!isfinite(s)) return 1;
+    *k = rint(s);
+    return 0;
+}
+
+/* textlayer.floatbytes(k / 1000, digits) for digits >= 3.  Below 1e7
+ * the double nearest k/1000 is within 2^-30 of it, so "%.<digits>f"
+ * prints k/1000 exactly: write its digits directly.  Beyond that,
+ * format the double (both sides round exactly).  prec folds -0 to 0,
+ * so a zero k prints unsigned. */
+static void tl_milli(TLOut *o, double k, int digits) {
+    char tmp[400];
+    int len = 0;
+    if (fabs(k) < 1e10) {
+        long long q = (long long)k, ip;
+        char rev[16];
+        int nr = 0;
+        if (q < 0) {
+            tmp[len++] = '-';
+            q = -q;
+        }
+        ip = q / 1000;
+        do {
+            rev[nr++] = (char)('0' + ip % 10);
+            ip /= 10;
+        } while (ip);
+        while (nr) tmp[len++] = rev[--nr];
+        tmp[len++] = '.';
+        tmp[len++] = (char)('0' + q / 100 % 10);
+        tmp[len++] = (char)('0' + q / 10 % 10);
+        tmp[len++] = (char)('0' + q % 10);
+        for (int i = 3; i < digits; i++) tmp[len++] = '0';
+    } else {
+        double a = k / 1000.0;
+        len = snprintf(tmp, sizeof tmp, "%.*f", digits, a == 0 ? 0.0 : a);
+    }
+    tl_put(o, tmp, len);
+}
+
+static int tl_prec_fixed(TLOut *o, double v) {
+    double k;
+    if (tl_prec_k(v, &k)) return 1;
+    tl_milli(o, k, 8);
+    return 0;
+}
+
+typedef unsigned __int128 tl_u128;
+
+static tl_u128 tl_p10(int n) {        /* 0 <= n <= 20 */
+    static const uint64_t p10[20] = {
+        1ULL, 10ULL, 100ULL, 1000ULL, 10000ULL, 100000ULL, 1000000ULL,
+        10000000ULL, 100000000ULL, 1000000000ULL, 10000000000ULL,
+        100000000000ULL, 1000000000000ULL, 10000000000000ULL,
+        100000000000000ULL, 1000000000000000ULL, 10000000000000000ULL,
+        100000000000000000ULL, 1000000000000000000ULL,
+        10000000000000000000ULL};
+    return n < 20 ? (tl_u128)p10[n] : (tl_u128)p10[19] * 10;
+}
+
+/* str(v) of a positive finite Python float: repr's shortest digit
+ * string that reads back as v, in fixed-point.  Exact integer
+ * arithmetic on v = m / 2^sh: the shortest string is the correctly
+ * rounded one at the first precision that reads back, and any string
+ * of 15 or fewer digits is the 15-digit rounding with its trailing
+ * zeros stripped.  Declines where repr would use an exponent
+ * (v < 1e-4 or v >= 1e16; this kernel stops at 1e15), and at 16-17
+ * digits for a power of two, whose lopsided rounding interval can make
+ * the shortest string other than the nearest one. */
+static int tl_float_repr(TLOut *o, double v) {
+    char dig[24], res[48];
+    int ex, sh, E, p, nd = 0, decpt, i, k = 0;
+    uint64_t m;
+    tl_u128 D = 0;
+    if (!(v >= 1e-4 && v < 1e15)) return 1;
+    m = (uint64_t)ldexp(frexp(v, &ex), 53);
+    sh = 53 - ex;                     /* v = m / 2^sh, 3 <= sh <= 66 */
+    E = (int)floor(log10(v));
+    for (;;) {                        /* exact: 10^E <= v < 10^(E+1) */
+        tl_u128 t;
+        if (E < -4 || E > 14) return 1;
+        t = ((tl_u128)m * tl_p10(16 - E)) >> sh;
+        if (t >= tl_p10(17)) E++;
+        else if (t < tl_p10(16)) E--;
+        else break;
+    }
+    for (p = 15; p <= 17; p++) {
+        int S = p - 1 - E;            /* D / 10^S approximates v */
+        tl_u128 B = (tl_u128)m * tl_p10(S), A, diff, lim = tl_p10(S);
+        tl_u128 rem = B & (((tl_u128)1 << sh) - 1);
+        tl_u128 half = (tl_u128)1 << (sh - 1);
+        int below;
+        if (p >= 16 && m == (1ULL << 52)) return 1;
+        D = B >> sh;                  /* round half to even */
+        if (rem > half || (rem == half && (D & 1))) D++;
+        /* reads back iff |D/10^S - v| is within half an ulp (2^-sh),
+         * ties to even m; below a power of two the gap halves */
+        A = D << sh;
+        below = A < B;
+        diff = 2 * (below ? B - A : A - B);
+        if (below && m == (1ULL << 52)) diff *= 2;
+        if (diff < lim || (diff == lim && !(m & 1))) break;
+    }
+    if (p > 17) return 1;
+    if (D == tl_p10(p)) {             /* rounded up to the next decade */
+        D = tl_p10(p - 1);
+        E++;
+    }
+    for (i = p - 1; i >= 0; i--) {
+        dig[i] = (char)('0' + (int)(D % 10));
+        D /= 10;
+    }
+    nd = p;
+    while (nd > 1 && dig[nd - 1] == '0') nd--;
+    decpt = E + 1;
+    if (decpt <= 0) {
+        res[k++] = '0';
+        res[k++] = '.';
+        for (i = 0; i < -decpt; i++) res[k++] = '0';
+        for (i = 0; i < nd; i++) res[k++] = dig[i];
+    } else if (decpt >= nd) {
+        for (i = 0; i < nd; i++) res[k++] = dig[i];
+        for (i = nd; i < decpt; i++) res[k++] = '0';
+        res[k++] = '.';
+        res[k++] = '0';
+    } else {
+        for (i = 0; i < decpt; i++) res[k++] = dig[i];
+        res[k++] = '.';
+        for (i = decpt; i < nd; i++) res[k++] = dig[i];
+    }
+    tl_put(o, res, k);
+    return 0;
+}
+
+/* Returns 0 (out_len = bytes the stream needs; the caller retries
+ * with a bigger buffer when that exceeds cap), 1 = decline,
+ * 2 = malformed pack. */
+EXPORT int32_t apts_text_layer(const int32_t *iv, int64_t ni,
+                               const double *dv, int64_t nd,
+                               const uint8_t *blob, int64_t nb,
+                               double width, double height, double ppi,
+                               double scale, int32_t scale_mode,
+                               uint8_t *out, int64_t cap,
+                               int64_t *out_len) {
+    TLOut o = {out, cap, 0};
+    const struct lconv *lc = localeconv();
+    int64_t ii = 0, di = 0, bi = 0;
+    int32_t n_paras, p;
+    double cur_x = 0.0, cur_y = 0.0, cur_dir = 1.0;
+    double ra = 1.0, rb = 0.0, rc = 0.0, rd = 1.0;
+    double s0 = 0, s1 = 0, s2 = 0, s3 = 0, seg_dir = 1.0;
+    int seg_int = 0;
+    double v;
+
+    if (lc->decimal_point[0] != '.' || lc->decimal_point[1]) return 1;
+    if (!isfinite(ppi) || ppi == 0 || fabs(ppi) >= 2147483648.0) return 1;
+    if (scale_mode && !isfinite(scale)) return 1;
+    TL_LIT(&o, "q ");
+    if (tl_prec_k(width, &v)) return 1;
+    tl_milli(&o, v, 3);
+    TL_LIT(&o, " 0 0 ");
+    if (tl_prec_k(height, &v)) return 1;
+    tl_milli(&o, v, 3);
+    TL_LIT(&o, " 0 0 cm Q\n");
+
+    if (ni < 1) return 2;
+    n_paras = iv[ii++];
+    for (p = 0; p < n_paras; p++) {
+        int32_t n_lines, l;
+        double shown = 0.0;
+        int pending_block = 1;
+        if (ii >= ni) return 2;
+        n_lines = iv[ii++];
+        TL_LIT(&o, "BT\n3 Tr");
+        for (l = 0; l < n_lines; l++) {
+            int32_t n_words, line_int, w;
+            const double *L;
+            int need_baseline = 1;
+            if (ii + 2 > ni || di + 5 > nd) return 2;
+            n_words = iv[ii++];
+            line_int = iv[ii++];
+            L = dv + di;
+            di += 5;
+            for (w = 0; w < n_words; w++) {
+                const double *W;
+                int32_t fs_int;
+                int64_t plen = 0, n_glyphs = 0;
+                double wx1, wy1, wx2, wy2, l2, x, y, adv, size;
+                int size_int;
+                if (ii + 1 > ni || di + 6 > nd) return 2;
+                fs_int = iv[ii++];
+                W = dv + di;
+                di += 6;
+                /* glyphs = 4-digit units less the low halves of
+                 * surrogate pairs (the payload holds no lone ones) */
+                while (bi + plen < nb && blob[bi + plen] != ' ') {
+                    const uint8_t *u = blob + bi + plen;
+                    if (bi + plen + 4 > nb) return 2;
+                    if (!(u[0] == 'D' && u[1] >= '8' && u[1] <= 'B'))
+                        n_glyphs++;
+                    plen += 4;
+                }
+                if (n_glyphs < 1 || n_glyphs >= (1 << 22)) return 1;
+                for (int k = 0; k < 4; k++)
+                    if (!(fabs(W[k]) < TL_EXACT)) return 1;
+
+                if (need_baseline) {
+                    /* textlayer._baseline_for + clip_baseline */
+                    double left = L[0], right = L[1], bottom = L[2];
+                    double y_left, y_right;
+                    int clipped = 0;
+                    for (int k = 0; k < 5; k++)
+                        if (!(fabs(L[k]) < TL_EXACT)) return 1;
+                    y_left = bottom + L[4];
+                    y_right = y_left + L[3] * (right - left);
+                    s0 = left;
+                    s1 = y_left;
+                    s2 = right;
+                    s3 = y_right;
+                    if (fabs(y_right - y_left) * 72 < 2 * ppi
+                            && 2 * ppi < fabs(right - left) * 72) {
+                        s1 = s3 = (y_left + y_right) / 2;
+                        clipped = 1;
+                    }
+                    if (!(fabs(s1) < TL_EXACT && fabs(s3) < TL_EXACT))
+                        return 1;
+                    seg_int = line_int && !clipped;
+                    seg_dir = W[5];
+                    if (seg_dir == 0) seg_dir = 1.0;
+                }
+
+                /* textlayer.get_word_baseline */
+                wx1 = W[0];
+                wy1 = W[1];
+                wx2 = W[2];
+                wy2 = W[3];
+                if (seg_dir == 2) {
+                    double t;
+                    t = wx1; wx1 = wx2; wx2 = t;
+                    t = wy1; wy1 = wy2; wy2 = t;
+                }
+                l2 = (s2 - s0) * (s2 - s0) + (s3 - s1) * (s3 - s1);
+                if (l2 == 0) {
+                    x = s0;
+                    y = s1;
+                } else {
+                    double t = ((wx1 - s2) * (s2 - s0)
+                                + (wy1 - s3) * (s3 - s1)) / l2;
+                    x = s2 + t * (s2 - s0);
+                    y = s3 + t * (s3 - s1);
+                }
+                adv = tl_pow((wx2 - wx1) * (wx2 - wx1)
+                             + (wy2 - wy1) * (wy2 - wy1), 0.5);
+                adv = adv * 72.0 / ppi;
+                x = x * 72 / ppi;
+                y = height - (y * 72.0 / ppi);
+                if (!isfinite(x) || !isfinite(y) || !isfinite(adv))
+                    return 1;
+
+                if (pending_block || seg_dir != cur_dir) {
+                    /* textlayer.affine_matrix */
+                    double theta = tl_atan2(s1 - s3, s2 - s0);
+                    double rv[6];
+                    ra = tl_cos(theta);
+                    rb = tl_sin(theta);
+                    rc = -tl_sin(theta);
+                    rd = tl_cos(theta);
+                    if (seg_dir == 2) {
+                        ra = -ra;
+                        rb = -rb;
+                    }
+                    rv[0] = ra; rv[1] = rb; rv[2] = rc; rv[3] = rd;
+                    rv[4] = x; rv[5] = y;
+                    for (int k = 0; k < 6; k++) {
+                        TL_LIT(&o, " ");
+                        if (tl_prec_fixed(&o, rv[k])) return 1;
+                    }
+                    TL_LIT(&o, " Tm ");
+                    pending_block = 0;
+                } else {
+                    double dx = x - cur_x, dy = y - cur_y;
+                    TL_LIT(&o, " ");
+                    if (tl_prec_fixed(&o, dx * ra + dy * rb)) return 1;
+                    TL_LIT(&o, " ");
+                    if (tl_prec_fixed(&o, dx * rc + dy * rd)) return 1;
+                    TL_LIT(&o, " Td ");
+                    need_baseline = 0;
+                }
+                cur_x = x;
+                cur_y = y;
+                cur_dir = seg_dir;
+
+                size = W[4];
+                size_int = fs_int;
+                if (scale_mode) {
+                    size = size * scale;
+                    size_int = fs_int && scale_mode == 2;
+                }
+                if (size <= 0) {
+                    size = fabs(s3 - s1);       /* clipped line height */
+                    size_int = seg_int;
+                    if (size <= 0) {
+                        size = 8;
+                        size_int = 1;
+                    }
+                }
+                if (!isfinite(size)) return 1;
+                if (size_int && size >= 2147483648.0) return 1;
+                if (size != shown) {
+                    TL_LIT(&o, "/f-0-0 ");
+                    if (size_int) {
+                        char tmp[24];
+                        int len = snprintf(tmp, sizeof tmp, "%lld",
+                                           (long long)size);
+                        tl_put(&o, tmp, len);
+                    } else if (tl_float_repr(&o, size)) {
+                        return 1;
+                    }
+                    TL_LIT(&o, " Tf ");
+                    shown = size;
+                }
+
+                if (adv > 0) {
+                    double st;
+                    if (tl_prec_k(100.0 * adv / (size * n_glyphs), &st))
+                        return 1;
+                    tl_milli(&o, 2 * st, 8);      /* K_CHAR_WIDTH * prec */
+                    TL_LIT(&o, " Tz [ <");
+                    tl_put(&o, (const char *)blob + bi, plen);
+                    TL_LIT(&o, "> ] TJ");
+                }
+                bi += plen + (bi + plen < nb);  /* and the separator */
+            }
+            TL_LIT(&o, " \n");
+        }
+        TL_LIT(&o, "ET\n");
+    }
+    if (ii != ni || di != nd || bi != nb) return 2;
+    *out_len = o.n;
+    return 0;
+}

@@ -27,9 +27,12 @@ Quirks preserved on purpose (they are the reference's semantics):
 
 from __future__ import annotations
 
+from array import array
 from dataclasses import dataclass, field
 from functools import lru_cache
 from math import atan2, cos, sin
+
+from . import native
 
 __all__ = ["prec", "floatbytes", "dist2", "get_word_baseline",
            "affine_matrix", "clip_baseline", "codepoint_to_utf16be",
@@ -184,9 +187,124 @@ def _utf16_payload(text: str):
 
 
 def render_text_layer(word_data: list, width: float, height: float,
-                      ppi: float, hocr_ppi=None) -> PageTextResult:
+                      ppi: float, hocr_ppi=None,
+                      font_scale=1) -> PageTextResult:
     """Reading-order traversal producing the extracted line texts and the
     byte-exact Tm/Td/Tf/Tz/TJ op stream (the placement digest).
+
+    ``font_scale`` (the hOCR font scaler, ``recode.py:205-209``)
+    multiplies every word's font size when it is not 1.
+
+    Runs the compiled kernel (``native.apts_text_layer``) when it is
+    loaded and the page is one it reproduces exactly; otherwise, and
+    for every page it declines, the pure-Python body below, which is
+    the oracle the compiled kernel is tested against."""
+    res = _render_native(word_data, width, height, ppi, font_scale)
+    if res is None:
+        res = _render_text_layer_py(word_data, width, height, ppi,
+                                    font_scale)
+    return res
+
+
+_NUM_TYPES = frozenset((int, float))
+
+
+@lru_cache(maxsize=1 << 16)
+def _packed_word(text: str):
+    """(hex payload, kept text, dropped count, text has ink, kept text
+    has ink) for one word, as the packer needs them."""
+    payload, kept, dropped = _utf16_payload(text)
+    kept_text = "".join(kept)
+    return (payload, kept_text, dropped, bool(text.strip()),
+            bool(kept_text.strip()))
+
+
+def _pack(word_data):
+    """One page in the stream layout ``apts_text_layer`` walks, plus the
+    outputs that need no geometry: (ints, nums, blob, lines, dropped).
+
+    Paragraphs without ink are left out (they emit nothing).  Any
+    malformed input raises here; the caller then runs the Python body,
+    which raises its own error for the page."""
+    ints = [0]
+    nums: list = []
+    payloads: list = []
+    lines: list = []
+    dropped = 0
+    n_paras = 0
+    for para in word_data:
+        marks = len(ints), len(nums), len(payloads), len(lines), dropped
+        ink = False
+        para_lines = para["lines"]
+        ints.append(len(para_lines))
+        for line in para_lines:
+            words = line["words"]
+            if words:
+                left, _top, right, bottom = line["bbox"]
+                slope, intercept = line["baseline"]
+                nums += (left, right, bottom, slope, intercept)
+                ints += (len(words), type(left) is type(right)
+                         is type(bottom) is type(slope)
+                         is type(intercept) is int)
+            else:
+                nums += (0, 0, 0, 0, 0)
+                ints += (0, 0)
+            kept = []
+            line_ink = False
+            for word in words:
+                payload, kept_text, drop, w_ink, k_ink = \
+                    _packed_word(word["text"])
+                x1, y1, x2, y2 = word["bbox"]
+                size = word["fontsize"]
+                nums += (x1, y1, x2, y2, size, word["writing_direction"])
+                ints.append(type(size) is int)
+                payloads.append(payload)
+                kept.append(kept_text)
+                dropped += drop
+                ink = ink or w_ink
+                line_ink = line_ink or k_ink
+            if line_ink:
+                lines.append(" ".join(kept))
+        if ink:
+            n_paras += 1
+        else:
+            i0, n0, p0, l0, dropped = marks
+            del ints[i0:], nums[n0:], payloads[p0:], lines[l0:]
+    if not _NUM_TYPES.issuperset(map(type, nums)):
+        raise TypeError("non-int/float geometry")
+    ints[0] = n_paras
+    return (array("i", ints), array("d", nums), b" ".join(payloads),
+            lines, dropped)
+
+
+def _render_native(word_data, width, height, ppi, font_scale, _lib=None):
+    """The compiled kernel's result, or None when it is not loaded or
+    the page needs the Python body."""
+    lib = _lib if _lib is not None else native._load()
+    if lib is None:
+        return None
+    # the Python body must see the same input again if this declines
+    if type(word_data) not in (list, tuple) or not _NUM_TYPES.issuperset(
+            (type(width), type(height), type(ppi), type(font_scale))):
+        return None
+    try:
+        ints, nums, blob, lines, dropped = _pack(word_data)
+        scale_mode = (0 if font_scale == 1
+                      else 2 if type(font_scale) is int else 1)
+        ops = native.text_layer_native(ints, nums, blob, width, height,
+                                       ppi, font_scale, scale_mode,
+                                       _lib=lib)
+    except Exception:  # noqa: BLE001 — malformed page: Python decides
+        return None
+    if ops is None:
+        return None
+    return PageTextResult(lines=lines, text_ops=ops,
+                          dropped_codepoints=dropped)
+
+
+def _render_text_layer_py(word_data: list, width: float, height: float,
+                          ppi: float, font_scale=1) -> PageTextResult:
+    """The pure-Python renderer (bit-exact oracle of the C kernel).
 
     Semantics match the reference renderer (textonly mode of
     ``internetarchivepdf/pdfrenderer.py:61-207``, itself an Apache-2.0
@@ -196,9 +314,9 @@ def render_text_layer(word_data: list, width: float, height: float,
     * the line baseline (and the word-supplied writing direction) is
       re-read for every word until the first ``Td`` is emitted — a word
       placed via ``Tm`` does not consume the line's first-word state;
-    * the fontsize fallback chain is word value -> pixel-space clipped
-      line height -> 8, and ``Tf`` spells the size with ``str()``
-      (so int vs float spelling is data-dependent);
+    * the fontsize fallback chain is word value (times ``font_scale``)
+      -> pixel-space clipped line height -> 8, and ``Tf`` spells the
+      size with ``str()`` (so int vs float spelling is data-dependent);
     * transform state (position, rotation, direction) carries across
       paragraphs; only the fontsize tracker and block flag reset.
     """
@@ -250,6 +368,8 @@ def render_text_layer(word_data: list, width: float, height: float,
                 cur_x, cur_y, cur_dir = x, y, seg_dir
 
                 size = word["fontsize"]
+                if font_scale != 1:
+                    size = size * font_scale
                 if size <= 0:
                     size = abs(seg[3] - seg[1])         # clipped line height
                     if size <= 0:

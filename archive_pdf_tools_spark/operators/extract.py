@@ -133,20 +133,12 @@ def extract_one(kind: str, text: str, media_ref: str):
         width, height, ppi, warns = page_geometry(
             page["w"], page["h"], doc_dpi=page.get("dpi"))
         warnings.extend(warns)
+        # the hOCR font scaler applies to font sizes only (consumed at
+        # pdfrenderer.py:166); geometry stays in pixels
         scaler = pick_font_scaler(page.get("scan_res"), ppi)
-        word_data = payload["paragraphs"]
-        if scaler != 1:
-            # hocr_page_to_word_data applies the font scaler to font sizes
-            # (consumed at pdfrenderer.py:166); geometry stays in pixels.
-            word_data = [
-                {"lines": [
-                    {**line,
-                     "words": [{**w, "fontsize": w["fontsize"] * scaler}
-                               for w in line["words"]]}
-                    for line in para["lines"]]}
-                for para in word_data]
-        res = render_text_layer(word_data, width, height, ppi,
-                                hocr_ppi=page.get("scan_res"))
+        res = render_text_layer(payload["paragraphs"], width, height, ppi,
+                                hocr_ppi=page.get("scan_res"),
+                                font_scale=scaler)
         ops_sha = hashlib.sha1(res.text_ops).hexdigest()[:16]
         for line_text in res.lines:
             out.append(("text", line_text, ""))

@@ -20,3 +20,31 @@ def spark():
          .getOrCreate())
     yield s
     s.stop()
+
+
+@pytest.fixture
+def native_modes():
+    """``for mode in native_modes(spark=None)`` runs a test body twice:
+    with the compiled kernels as loaded ("native"), then with them off
+    ("python") in this process and, given a session, in the Spark Python
+    workers of the queries built from then on (``SparkContext.
+    environment`` reaches the workers through each Python function's
+    environment).  Teardown restores both."""
+    from archive_pdf_tools_spark.kernels import native
+
+    saved = native._lib, native._tried, native._status
+    envs = []
+
+    def modes(spark=None):
+        yield "native"
+        native._lib, native._tried = None, True
+        native._status = "disabled by SPARK_GRAFT_CKERN"
+        if spark is not None:
+            envs.append(spark.sparkContext.environment)
+            envs[-1]["SPARK_GRAFT_CKERN"] = "0"
+        yield "python"
+
+    yield modes
+    native._lib, native._tried, native._status = saved
+    for env in envs:
+        env.pop("SPARK_GRAFT_CKERN", None)

@@ -79,23 +79,34 @@ def test_minhash_lsh_finds_planted_pairs(docs_with_dups):
     assert all(a in (0, 1, 2) and b in (0, 1, 2) for a, b in pairs)
 
 
-def test_minhash_lsh_verify_shapes_agree(docs_with_dups, monkeypatch):
+def test_minhash_lsh_verify_shapes_agree(spark, docs_with_dups,
+                                        monkeypatch):
     """The r10 array_intersect verify must return exactly what the
     exploded-shingle equi-join verify returns (same pairs, same
-    rounded jaccard), including near-misses under the tau filter."""
+    rounded jaccard), including near-misses under the tau filter and
+    tau = 0, where a candidate pair sharing no shingle must not pass."""
     import os
 
-    def run(shape):
+    def run(shape, docs, tau, bands=8):
         monkeypatch.setitem(os.environ, "SPARK_GRAFT_LSH_VERIFY", shape)
         return sorted(
             (r["doc_a"], r["doc_b"], r["jaccard"]) for r in
-            minhash_lsh_pairs(docs_with_dups, n=3, k=32, bands=8,
-                              tau=0.3).collect())
+            minhash_lsh_pairs(docs, n=3, k=32, bands=bands,
+                              tau=tau).collect())
 
-    got_join = run("join")
-    got_intersect = run("intersect")
-    assert got_intersect == got_join
-    assert got_intersect                      # non-vacuous
+    for tau in (0.3, 0.0):
+        got_join = run("join", docs_with_dups, tau)
+        got_intersect = run("intersect", docs_with_dups, tau)
+        assert got_intersect == got_join, tau
+        assert got_intersect                  # non-vacuous
+    # one shingle each, disjoint, but their minhashes agree in
+    # permutation row 28 (k=32, seed 7): with one row per band they
+    # are an LSH candidate pair whose Jaccard is 0
+    disjoint = spark.createDataFrame(
+        [(0, "alpha9411 beta gamma"), (1, "alpha11313 beta gamma")],
+        "doc_id bigint, text string")
+    for shape in ("join", "intersect"):
+        assert run(shape, disjoint, 0.0, bands=32) == []
 
 
 @pytest.fixture(scope="module")

@@ -160,7 +160,7 @@ def _word(text, bbox, conf=90.0, fontsize=10.0, wd=0):
             "fontsize": fontsize, "writing_direction": wd}
 
 
-def test_render_text_layer_basic():
+def test_render_text_layer_basic(native_modes):
     word_data = [
         {"lines": [
             {"bbox": [10, 10, 200, 30], "baseline": [0.0, 0.0],
@@ -172,33 +172,46 @@ def test_render_text_layer_basic():
              "words": [_word("   ", [10, 40, 60, 60])]},
         ]},
     ]
-    res = render_text_layer(word_data, 612, 792, ppi=72.0)
-    assert res.lines == ["hello world"]
-    ops = res.text_ops
-    assert ops.count(b"BT") == 1          # second paragraph skipped
-    assert b"Tm" in ops and b"Td" in ops and b"TJ" in ops
+    results = []
+    for _mode in native_modes():
+        res = render_text_layer(word_data, 612, 792, ppi=72.0)
+        results.append(res)
+        assert res.lines == ["hello world"]
+        ops = res.text_ops
+        assert ops.count(b"BT") == 1          # second paragraph skipped
+        assert b"Tm" in ops and b"Td" in ops and b"TJ" in ops
+    assert results[0] == results[1]           # same bytes either way
 
 
-def test_render_text_layer_drops_invalid_codepoints():
+def test_render_text_layer_drops_invalid_codepoints(native_modes):
     bad = chr(0xD800 + 1) if False else "a\udcff"  # lone surrogate via literal
     word_data = [{"lines": [
         {"bbox": [0, 0, 50, 10], "baseline": [0.0, 0.0],
          "words": [_word(bad, [0, 0, 50, 10])]},
     ]}]
-    res = render_text_layer(word_data, 612, 792, ppi=72.0)
-    assert res.dropped_codepoints == 1
-    assert res.lines == ["a"]
+    results = []
+    for _mode in native_modes():
+        res = render_text_layer(word_data, 612, 792, ppi=72.0)
+        results.append(res)
+        assert res.dropped_codepoints == 1
+        assert res.lines == ["a"]
+    assert results[0] == results[1]           # same bytes either way
 
 
-def test_render_text_layer_fontsize_fallback_and_rtl():
+def test_render_text_layer_fontsize_fallback_and_rtl(native_modes):
     word_data = [{"lines": [
         {"bbox": [0, 0, 100, 20], "baseline": [0.0, 0.0],
          "words": [_word("rtl", [0, 0, 40, 20], fontsize=0, wd=2)]},
     ]}]
-    res = render_text_layer(word_data, 612, 792, ppi=72.0)
-    # fontsize fell back to clipped line height (0 after flatten) -> default 8
-    assert b"/f-0-0 8 Tf" in res.text_ops
-    assert res.lines == ["rtl"]
+    results = []
+    for _mode in native_modes():
+        res = render_text_layer(word_data, 612, 792, ppi=72.0)
+        results.append(res)
+        # fontsize fell back to clipped line height (0 after flatten)
+        # -> default 8
+        assert b"/f-0-0 8 Tf" in res.text_ops
+        assert res.lines == ["rtl"]
+    assert results[0] == results[1]           # same bytes either way
 
 
 def test_mrc_gray_mode_special():

@@ -12,8 +12,11 @@ from archive_pdf_tools_spark.kernels.jp2codec import (_mq_decode_fn,
                                                       t1_decode,
                                                       t1_encode)
 
-pytestmark = pytest.mark.skipif(not native.available(),
-                                reason="no C compiler in environment")
+# Skip only when the kernels could not be built or are switched off: a
+# build that fails its self-test must show up as failures here.
+pytestmark = pytest.mark.skipif(
+    native.status().startswith(("build failed", "disabled")),
+    reason="compiled kernels not built (no C compiler) or disabled")
 
 
 def test_kernels_active_in_container():
@@ -677,3 +680,356 @@ def test_dwt2_hh_native_parity():
             return
         ref = _dwt_axis(_dwt_axis(a, _DB2_HI, 0), _DB2_HI, 1)
         assert got.shape == ref.shape and np.array_equal(got, ref), (h, w)
+
+
+# ------------------------------------------------------------ text layer
+
+from archive_pdf_tools_spark.kernels import textlayer as tl  # noqa: E402
+
+_TEXTS = ["spark", "Grüße", "文書", "Ω", "𝔘𝔫𝔦", "🚀", "שלום", "مرحبا",
+          "   ", "", " \t", "a\udcff", "\ud800", "\U0010ffff", "x y",
+          "􏿿", "b "]
+
+
+def _tl_both(word_data, width, height, ppi, font_scale=1):
+    return (tl._render_native(word_data, width, height, ppi, font_scale),
+            tl._render_text_layer_py(word_data, width, height, ppi,
+                                     font_scale))
+
+
+def _assert_same(nat, py):
+    assert nat is not None, "compiled kernel declined"
+    assert nat.text_ops == py.text_ops
+    assert nat.lines == py.lines
+    assert nat.dropped_codepoints == py.dropped_codepoints
+
+
+def _fuzz_word(rng, x, y, h, para_blank):
+    text = "   " if para_blank else _TEXTS[rng.integers(len(_TEXTS))]
+    if rng.random() < 0.2:          # random codepoints, surrogates too
+        text = "".join(chr(int(c)) for c in
+                       rng.integers(0xD700, 0xE100, rng.integers(1, 4)))
+    w = int(rng.integers(0, 60))
+    bbox = [x, y, x + w, y + h]
+    if rng.random() < 0.15:
+        bbox = [float(v) + 0.5 for v in bbox]
+    if rng.random() < 0.05:
+        bbox = [x + w, y + h, x, y]                 # inverted
+    size = [0, 0.0, -2, -2.5, int(rng.integers(1, 30)),
+            float(np.round(rng.uniform(4, 20), 2)),
+            float(rng.uniform(4, 20))][rng.integers(7)]
+    return {"text": text, "bbox": bbox, "confidence": 90.0,
+            "fontsize": size, "writing_direction": int(rng.integers(4))}
+
+
+def _fuzz_page(rng):
+    paras = []
+    for _p in range(int(rng.integers(0, 5))):
+        blank = rng.random() < 0.15                 # whitespace-only
+        lines = []
+        for _l in range(int(rng.integers(0, 5))):
+            y = int(rng.integers(0, 3000))
+            h = int(rng.integers(0, 40))
+            x = left = int(rng.integers(0, 500))
+            words = []
+            for _w in range(int(rng.integers(0, 7))):
+                words.append(_fuzz_word(rng, x, y, h, blank))
+                x += int(rng.integers(-5, 70))
+            right = x
+            slope = [0, 0.0, float(np.round(rng.uniform(-0.05, 0.05), 5)),
+                     0.5, -1, 1][rng.integers(6)]
+            intercept = [0, int(rng.integers(-5, 5)),
+                         float(np.round(rng.uniform(-3, 3), 2))][
+                rng.integers(3)]
+            r = rng.random()
+            if r < 0.15:
+                right, slope = left, 0              # l2 == 0
+            elif r < 0.25:
+                left, right = right, left           # inverted
+            lines.append({"bbox": [left, y, right, y + h],
+                          "baseline": [slope, intercept], "words": words})
+        paras.append({"lines": lines})
+    return paras
+
+
+def test_text_layer_parity_fuzz():
+    """C text layer vs the Python body, byte for byte, over RTL and
+    unspecified directions, fontsize <= 0 (line-height and default-8
+    fallbacks), int/float sizes with and without a font scale, lone
+    surrogates and astral codepoints, whitespace-only paragraphs, empty
+    lines, zero-length and near-horizontal (clipped) baselines."""
+    rng = np.random.default_rng(20261017)
+    scales = [1, 1.0, 0.24, 300 / 96, 2, 0.5, 150 / 72.0]
+    for i in range(1500):
+        page = _fuzz_page(rng)
+        ppi = [72.0, 300.0, 96, 150.0, 600.0][i % 5]
+        scale = scales[i % len(scales)]
+        _assert_same(*_tl_both(page, 612.0 + i, 792, ppi, scale))
+
+
+def test_text_layer_parity_corpus_pages():
+    """Every text page of the synthetic corpus, with the operator's own
+    page geometry and font scaler: none declined, all identical."""
+    import json
+
+    from archive_pdf_tools_spark.corpus.generate import make_doc
+    from archive_pdf_tools_spark.kernels.dpi import (page_geometry,
+                                                     pick_font_scaler)
+
+    n = 0
+    for d in range(60):
+        for s in make_doc(d, max_spans=20)["spans"]:
+            if s["kind"] != "text":
+                continue
+            payload = json.loads(s["text"])
+            pg = payload["page"]
+            w, h, ppi, _ = page_geometry(pg["w"], pg["h"],
+                                         doc_dpi=pg.get("dpi"))
+            scale = pick_font_scaler(pg.get("scan_res"), ppi)
+            _assert_same(*_tl_both(payload["paragraphs"], w, h, ppi,
+                                   scale))
+            n += 1
+    assert n > 200
+
+
+def test_text_layer_rounding_edges():
+    """Rotation and Td terms that round to -0 print as 0; ties round to
+    even; Tf spells int and float sizes as str() does, up to 16
+    digits and down to 1e-4."""
+    def page(size, baseline=(0.0, 0.0)):
+        return [{"lines": [{"bbox": [0, 0, 100, 10],
+                            "baseline": list(baseline), "words": [
+            {"text": "a", "bbox": [0, 0, 10, 10], "fontsize": size,
+             "writing_direction": 1},
+            {"text": "b", "bbox": [0, 0, 10, 10], "fontsize": size,
+             "writing_direction": 1}]}]}]
+
+    for size in (7, 7.0, 0.0001, 0.1 + 0.2, 123456789012345.6, 1e14,
+                 2.0 ** -13, 1 / 3, 9.999999999999999, 10.000000000000002,
+                 0.00012345678901234567, 4503599627370495.5 / 8):
+        nat, py = _tl_both(page(size), 612.0, 792.0, 72.0)
+        _assert_same(nat, py)
+        assert b"/f-0-0 " + str(size).encode() + b" Tf" in py.text_ops
+    # fontsize <= 0 falls back to the line height, an int when the
+    # line's bbox and baseline are ints and the baseline is not clipped
+    for baseline, want in (((-1, 2), b" 100 Tf"), ((-1.0, 2), b" 100.0 Tf"),
+                           ((0.001, 2), b" 8 Tf")):
+        wd = page(0, baseline=baseline)
+        nat, py = _tl_both(wd, 612.0, 792.0, 72.0)
+        _assert_same(nat, py)
+        assert want in py.text_ops
+    for w0 in (0.0005, -0.0005, 0.0015, 2.5e-4):
+        wd = page(10.0)
+        wd[0]["lines"][0]["words"][1]["bbox"] = [w0, 0, 10, 10]
+        nat, py = _tl_both(wd, 612.0, 792.0, 72.0)
+        _assert_same(nat, py)
+        assert b"-0.00000000" not in py.text_ops
+
+
+@pytest.mark.parametrize("case", [
+    "nan_bbox", "inf_bbox", "nan_baseline", "ppi0", "inf_size",
+    "nan_size", "bool_size", "float32_bbox", "huge_int", "tiny_size",
+    "huge_size", "short_bbox", "no_fontsize", "str_text", "nan_scale",
+    "decimal_bbox"])
+def test_text_layer_declines_to_python(case):
+    """Pages the C kernel cannot reproduce exactly come back None, and
+    ``render_text_layer`` then gives the Python body's result or
+    raises its exception."""
+    from decimal import Decimal
+
+    word = {"text": "ab", "bbox": [1, 2, 30, 12], "fontsize": 10.0,
+            "writing_direction": 0}
+    line = {"bbox": [1, 2, 100, 12], "baseline": [0.01, -1.0],
+            "words": [word, dict(word, bbox=[40, 2, 60, 12])]}
+    ppi, scale = 72.0, 1
+    if case == "nan_bbox":
+        word["bbox"] = [1, float("nan"), 30, 12]
+    elif case == "inf_bbox":
+        word["bbox"] = [1, 2, float("inf"), 12]
+    elif case == "nan_baseline":
+        line["baseline"] = [float("nan"), 0.0]
+    elif case == "ppi0":
+        ppi = 0.0
+    elif case == "inf_size":
+        word["fontsize"] = float("inf")
+    elif case == "nan_size":
+        word["fontsize"] = float("nan")
+    elif case == "bool_size":
+        word["fontsize"] = True
+    elif case == "float32_bbox":
+        word["bbox"] = [np.float32(v) + np.float32(0.1) for v in (1, 2, 30, 12)]
+    elif case == "huge_int":
+        word["bbox"] = [2 ** 60 + 1, 2, 2 ** 60 + 7, 12]
+    elif case == "tiny_size":
+        word["fontsize"] = 1e-5
+    elif case == "huge_size":
+        word["fontsize"] = 1e16
+    elif case == "short_bbox":
+        word["bbox"] = [1, 2, 30]
+    elif case == "no_fontsize":
+        del word["fontsize"]
+    elif case == "str_text":
+        word["text"] = 5
+    elif case == "nan_scale":
+        scale = float("nan")
+    elif case == "decimal_bbox":
+        word["bbox"] = [Decimal(1), 2, 30, 12]
+    page = [{"lines": [line]}]
+    assert tl._render_native(page, 612.0, 792.0, ppi, scale) is None
+
+    def outcome(fn):
+        try:
+            return fn(page, 612.0, 792.0, ppi, font_scale=scale)
+        except Exception as exc:  # noqa: BLE001
+            return type(exc)
+
+    assert outcome(tl.render_text_layer) == outcome(
+        tl._render_text_layer_py)
+
+
+def test_text_layer_self_test_mismatch_falls_back(monkeypatch):
+    """A build whose text layer disagrees with Python fails the load
+    self-test: the process runs pure Python and ``status()`` says so."""
+    monkeypatch.setattr(native, "text_layer_native",
+                        lambda *a, **k: b"q 0 0 cm Q\n")
+    monkeypatch.setattr(native, "_tried", False)
+    monkeypatch.setattr(native, "_lib", None)
+    monkeypatch.setattr(native, "_status", native._status)
+    assert not native.available()
+    assert native.status() == "self-test mismatch; pure Python"
+    args = (native._TEXT_PAGE, 612.0, 792.0, 72.0, 0.24)
+    assert tl.render_text_layer(*args[:4], font_scale=0.24) == \
+        tl._render_text_layer_py(*args)
+
+
+def test_text_layer_error_parity(spark, native_modes):
+    """Malformed and non-finite text spans give the same
+    ``extract-error:<Class>`` markers and the same partition_metrics
+    rows with the compiled kernels on and off (the C kernel declines
+    them and the page re-runs in Python)."""
+    import json
+
+    from archive_pdf_tools_spark.operators.extract import (
+        PAGE_MARKER, extract_spans, partition_metrics)
+
+    def span(offset, mutate=None):
+        paras = json.loads(json.dumps(native._TEXT_PAGE))
+        if mutate:
+            mutate(paras[0]["lines"][0]["words"][0], paras)
+        payload = {"page": {"w": 1700, "h": 2200, "dpi": 200,
+                            "scan_res": 300}, "paragraphs": paras}
+        return {"kind": "text", "text": json.dumps(payload),
+                "media_ref": "", "offset": offset}
+
+    def setter(key, value):
+        return lambda w, _p: w.__setitem__(key, value)
+
+    def huge_line(_w, paras):       # l2 = inf: the projection is nan
+        paras[0]["lines"][0]["bbox"] = [-1e200, 10, 1e200, 30]
+
+    spans = [span(0), span(1, setter("bbox", [10, 1e300, 60, 30])),
+             span(2, huge_line), span(3, setter("bbox", [10, 10, 60])),
+             span(4, setter("fontsize", 1e308)),
+             span(5, lambda _w, p: p[0].pop("lines")),
+             span(6, setter("fontsize", "big"))]
+    rows = [("d0", spans[:4]), ("d1", spans[4:])]
+    ddl = ("doc_id string, spans array<struct<kind:string,text:string,"
+           "media_ref:string,offset:int>>")
+    seen = []
+    for _mode in native_modes(spark):
+        docs = spark.createDataFrame(rows, ddl)
+        ext = extract_spans(docs, num_partitions=2)
+        markers = sorted(
+            (r["doc_id"], r["in_offset"], tuple(r["warnings"]),
+             r["ops_sha"])
+            for r in ext.where(ext.kind == PAGE_MARKER).collect())
+        metrics = sorted(
+            (r["partition_id"], r["doc_count"], r["page_count"],
+             r["text_pages"], r["media_pages"],
+             tuple(sorted(r["warning_kinds"])))
+            for r in partition_metrics(ext).collect())
+        seen.append((markers, metrics))
+    assert seen[0] == seen[1]
+    kinds = {w for _d, _o, ws, _s in seen[0][0] for w in ws}
+    assert {"extract-error:ValueError", "extract-error:OverflowError",
+            "extract-error:TypeError", "extract-error:KeyError"} <= kinds
+
+
+def test_native_cache_tag_tracks_host_isa(monkeypatch, tmp_path):
+    """A -march=native build is cached per host ISA fingerprint; the
+    portable fallback build has a tag of its own."""
+    import subprocess
+
+    built = []
+
+    def fake_build(so, flags, src, cache):
+        if "-march=native" in flags and "noisa" in so_isa[0]:
+            raise subprocess.CalledProcessError(1, "gcc")
+        built.append(so)
+        open(so, "w").close()
+
+    host_isa = native._host_isa()
+    so_isa = [""]
+    monkeypatch.setenv("SPARK_GRAFT_NATIVE_CACHE", str(tmp_path))
+    monkeypatch.delenv("SPARK_GRAFT_CKERN_ARCH", raising=False)
+    monkeypatch.setattr(native, "_build", fake_build)
+    paths = []
+    for isa in ("x86_64\0sse2 avx2", "x86_64\0sse2 avx2 avx512f",
+                "x86_64\0sse2 avx2", "noisa"):
+        so_isa[0] = isa
+        monkeypatch.setattr(native, "_host_isa", lambda isa=isa: isa)
+        paths.append(native._compile("int x;"))
+    native_a, native_b, again, portable = paths
+    assert native_a != native_b                   # two hosts, two files
+    assert again == native_a and len(built) == 3  # cache hit, no rebuild
+    assert portable not in (native_a, native_b)
+    cache = native._cache_dir()
+    assert portable == native._so_path(cache, ["-O3"], "int x;", "any")
+    assert host_isa.startswith(__import__("platform").machine())
+
+
+def test_text_layer_threads_keep_their_buffers():
+    """The foreign call releases the GIL: threads rendering at once
+    must each get their own page's bytes."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    rng = np.random.default_rng(7)
+    pages = [_fuzz_page(rng) for _ in range(64)]
+    want = [tl._render_text_layer_py(p, 612.0, 792.0, 72.0, 0.24)
+            for p in pages]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            futs = [ex.submit(tl.render_text_layer, p, 612.0, 792.0, 72.0,
+                              font_scale=0.24)
+                    for _ in range(8) for p in pages]
+            got = [f.result(timeout=60) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert got == want * 8
+
+
+def test_text_layer_output_larger_than_first_buffer():
+    """A stream longer than the first buffer estimate (a Tm and a Tf
+    for every word, coordinates near 10^15 pt) is rendered again into a
+    buffer of the size the kernel reported."""
+    import threading
+
+    words = [{"text": "ab", "bbox": [16_000_000 - 9 * i, 2, 16_000_000, 12],
+              "fontsize": 10 + i / 7, "writing_direction": 1 + i % 2}
+             for i in range(50)]
+    page = [{"lines": [{"bbox": [0, 2, 16_000_000, 12],
+                        "baseline": [0.0, 0.0], "words": words}]}]
+    ints, nums, blob, _lines, _dropped = tl._pack(page)
+    first_estimate = 64 + 4 * len(ints) + 24 * len(nums) + len(blob)
+    got = []                      # a fresh thread: a fresh buffer
+    t = threading.Thread(target=lambda: got.append(
+        tl._render_native(page, 612.0, 1e15, 1e-6, 1)))
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive()
+    py = tl._render_text_layer_py(page, 612.0, 1e15, 1e-6)
+    assert len(py.text_ops) > first_estimate
+    _assert_same(got[0], py)
