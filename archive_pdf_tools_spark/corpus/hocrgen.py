@@ -65,12 +65,9 @@ def _page_div(page: dict, paragraphs: list, page_no: int) -> list[str]:
                       f"x_fsize {_fmt(word['fontsize'])}")
                 d = _DIR_ATTRS.get(word.get("writing_direction", 0))
                 dattr = f" dir='{d}'" if d else ""
-                t = word["text"]
-                if "&" in t or "<" in t or ">" in t:
-                    t = escape(t)
                 out.append(f"<span class='ocrx_word' id='w_{page_no}_{wid}'"
                            f' title="{wt}"{dattr}>'
-                           f"{t}</span> ")
+                           f"{escape(word['text'])}</span> ")
                 wid += 1
             out.append("</span>\n")
         out.append("</p>\n")

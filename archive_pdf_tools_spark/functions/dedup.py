@@ -33,8 +33,6 @@ Scale notes (10^12-doc design point):
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
@@ -400,45 +398,27 @@ def minhash_lsh_pairs(documents: DataFrame, n: int = 3, k: int = 32,
                  .distinct())
     sh = shingles_df(documents.join(cand_docs, "doc_id", "left_semi"),
                      n).cache()
-    if os.environ.get("SPARK_GRAFT_LSH_VERIFY", "intersect") == "join":
-        # legacy shape kept A/B-able: exploded shingle equi-join +
-        # pair-keyed aggregation
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-        ash = sh.select(F.col("doc_id").alias("doc_a"),
-                        F.col("shingle").alias("s"))
-        bsh = sh.select(F.col("doc_id").alias("doc_b"),
-                        F.col("shingle").alias("s"))
-        inter = (cand.join(ash, "doc_a").join(bsh, ["doc_b", "s"])
-                 .groupBy("doc_a", "doc_b")
-                 .agg(F.count("*").alias("n_inter")))
-        sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                          F.col("n_sh").alias("n_a"))
-        sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                          F.col("n_sh").alias("n_b"))
-        verified = inter.join(sa, "doc_a").join(sb, "doc_b")
-    else:
-        # Per-doc shingle ARRAYS + array_intersect: shingles are
-        # per-doc distinct (shingles_df), so
-        # size(array_intersect(A, B)) == |A∩B| exactly — same n_inter
-        # as the exploded equi-join, but the |cand|·|shingles/doc|
-        # intermediate and its pair-keyed aggregation exchange never
-        # exist.  Still candidate-bounded: the arrays table is
-        # O(candidate docs), two id-keyed joins attach it to the pairs.
-        sharr = sh.groupBy("doc_id").agg(
-            F.collect_list("shingle").alias("shs"),
-            F.count("*").alias("n_sh"))
-        sa = sharr.select(F.col("doc_id").alias("doc_a"),
-                          F.col("shs").alias("shs_a"),
-                          F.col("n_sh").alias("n_a"))
-        sb = sharr.select(F.col("doc_id").alias("doc_b"),
-                          F.col("shs").alias("shs_b"),
-                          F.col("n_sh").alias("n_b"))
-        # the join shape only yields pairs sharing a shingle; keep the
-        # same pair set here, or tau <= 0 admits disjoint candidates
-        verified = (cand.join(sa, "doc_a").join(sb, "doc_b")
-                    .withColumn("n_inter", F.size(
-                        F.array_intersect("shs_a", "shs_b")))
-                    .where(F.col("n_inter") > 0))
+    # Per-doc shingle ARRAYS + array_intersect: shingles are per-doc
+    # distinct (shingles_df), so size(array_intersect(A, B)) == |A∩B|
+    # exactly, with no |cand|·|shingles/doc| exploded equi-join and no
+    # pair-keyed aggregation exchange.  Still candidate-bounded: the
+    # arrays table is O(candidate docs), two id-keyed joins attach it
+    # to the pairs.
+    sharr = sh.groupBy("doc_id").agg(
+        F.collect_list("shingle").alias("shs"),
+        F.count("*").alias("n_sh"))
+    sa = sharr.select(F.col("doc_id").alias("doc_a"),
+                      F.col("shs").alias("shs_a"),
+                      F.col("n_sh").alias("n_a"))
+    sb = sharr.select(F.col("doc_id").alias("doc_b"),
+                      F.col("shs").alias("shs_b"),
+                      F.col("n_sh").alias("n_b"))
+    # only pairs sharing a shingle are near-duplicates: without the
+    # n_inter filter, tau <= 0 would admit disjoint candidates
+    verified = (cand.join(sa, "doc_a").join(sb, "doc_b")
+                .withColumn("n_inter", F.size(
+                    F.array_intersect("shs_a", "shs_b")))
+                .where(F.col("n_inter") > 0))
     return (verified
             .withColumn("jaccard",
                         F.round(F.col("n_inter") /

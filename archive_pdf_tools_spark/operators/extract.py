@@ -43,13 +43,14 @@ import time
 from typing import Iterable, Iterator
 
 try:                                    # optional fast path for the per-page
-    import orjson as _fastjson          # payload parse (absent in-sandbox;
-except ImportError:                     # stdlib json is the fallback)
+    import orjson as _fastjson          # payload parse; stdlib json is the
+except ImportError:                     # fallback where it is not installed
     _fastjson = None
 
 def _loads(payload: str):
-    # Measured (cProfile over 376 text-heavy pages): the stdlib parse is
-    # ~4% of the text-span kernel — the placement math dominates.  A
+    # Measured (cProfile over 376 text-heavy pages): even the stdlib
+    # parse is ~4% of the text-span kernel, and the workers take the
+    # orjson path whenever the package is installed.  A
     # typed-struct payload via from_json would swap a 4% Python parse
     # for a JVM Jackson parse + Arrow struct transfer + pandas dict
     # materialization; not worth the golden-stability risk.  Re-measure
@@ -67,6 +68,7 @@ from ..kernels.mrc import create_mrc_components, mrc_mask_phase
 from ..kernels.optimise import (fast_mask_denoise_batch,
                                 optimise_gray2_batch, optimise_rgb2_batch)
 from ..kernels.textlayer import render_text_layer
+from ..pyworker import python_task
 
 __all__ = ["extract_one", "extract_document_local", "extract_spans",
            "reassemble", "partition_metrics", "INTERMEDIATE_SCHEMA_DDL",
@@ -187,6 +189,7 @@ def extract_document_local(doc: dict, skip_offsets=None,
                       for i, (k, t, m) in enumerate(rows)]}
 
 
+@python_task
 def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas body: span rows in, sub-span + page-marker rows out.
 

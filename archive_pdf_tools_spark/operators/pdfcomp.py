@@ -28,6 +28,8 @@ from typing import Iterable, Iterator
 
 import numpy as np
 
+from ..pyworker import python_task
+
 __all__ = ["recode_existing_pdfs", "pdfs_to_spans", "recompress_pdfs",
            "run_pdf_checkpoint", "run_recompress_checkpoint",
            "PDFCOMP_SCHEMA_DDL", "RECOMPRESS_SCHEMA_DDL"]
@@ -138,6 +140,7 @@ def pdfs_to_spans(df, pdf_col: str = "pdf", hocr_col: str | None = "hocr",
 
     from ..operators.extract import OUTPUT_SCHEMA_DDL
 
+    @python_task
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdfb in batches:
             ids, spans_col = [], []
@@ -187,6 +190,7 @@ def recode_existing_pdfs(df, pdf_col: str = "pdf", hocr_col: str = "hocr"):
     """(doc_id, pdf, hocr) -> one row per recoded image XObject."""
     import pandas as pd
 
+    @python_task
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["doc_id", "page_idx", "xref", "src_w", "src_h",
                 "accepted_lines", "mask_sha", "fg_sha", "bg_sha",
@@ -236,6 +240,7 @@ def recompress_pdfs(df, pdf_col: str = "pdf",
 
     has_hocr = hocr_col is not None and hocr_col in df.columns
 
+    @python_task
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdfb in batches:
             rows = []

@@ -19,6 +19,8 @@ from typing import Iterable, Iterator
 
 import pandas as pd
 
+from ..pyworker import python_task
+
 SPANS_JSON_SCHEMA = ("array<struct<kind:string,text:string,"
                      "media_ref:string,offset:int>>")
 # Same shape, used as a mapInPandas output schema when the span structs
@@ -29,6 +31,7 @@ SPANS_STRUCT_DDL = SPANS_JSON_SCHEMA
 def _gen_batches(seed: int, max_spans: int, media_fraction: float):
     from ..corpus.generate import make_doc
 
+    @python_task
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

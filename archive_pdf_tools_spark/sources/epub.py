@@ -44,6 +44,8 @@ import re
 import zipfile
 from xml.etree import ElementTree as ET
 
+from ..pyworker import python_task
+
 __all__ = ["EpubError", "parse_epub", "epub_to_pdf", "epubs_to_pdf",
            "EPUB_SCHEMA_DDL"]
 
@@ -304,6 +306,7 @@ def epubs_to_pdf(df, epub_col: str = "epub", id_col: str = "doc_id"):
     NULL degradation."""
     import pandas as pd
 
+    @python_task
     def gen(batches):
         for rows in batches:
             out = []

@@ -30,6 +30,8 @@ import io
 import json
 from typing import Iterable, Iterator
 
+from ..pyworker import python_task
+
 __all__ = ["parse_properties", "iter_pages", "page_dimensions",
            "page_scan_res", "page_word_data", "page_payload",
            "hocr_documents"]
@@ -280,6 +282,7 @@ def page_payload(page, doc_dpi=None) -> str:
 def _convert_batches(hocr_col: str, dpi_col):
     import pandas as pd
 
+    @python_task
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             dpis = pdf[dpi_col].values if dpi_col else [None] * len(pdf)

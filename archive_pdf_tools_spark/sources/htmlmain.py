@@ -48,6 +48,8 @@ _VOID_TAGS = frozenset({"area", "base", "br", "col", "embed", "hr", "img",
 from html.parser import HTMLParser as _HTMLParser
 from xml.etree import ElementTree as _ET
 
+from ..pyworker import python_task
+
 
 class _Builder(_HTMLParser):
     """HTML-tolerant tree builder (module-level: defining it inside
@@ -202,6 +204,7 @@ def html_documents(df, html_col: str = "html", payloads: bool = False):
 
     from .corpus_source import SPANS_STRUCT_DDL
 
+    @python_task
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if payloads:
             from .spans_from_text import layout_text

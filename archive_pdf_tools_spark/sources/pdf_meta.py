@@ -33,6 +33,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from ..pyworker import python_task
+
 __all__ = ["parse_pdf", "pdf_metadata", "PDF_META_SCHEMA_DDL"]
 
 _FILTER_FORMAT = {                     # C21 filter->format map
@@ -1109,6 +1111,7 @@ def pdf_metadata(df, pdf_col: str = "pdf", id_col: str = "doc_id"):
     """(doc_id, pdf binary) -> per-page metadata rows (mapInPandas)."""
     import pandas as pd
 
+    @python_task
     def _parse(batches):
         for pdf_batch in batches:
             rows = []

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
+from ..pyworker import python_task
+
 __all__ = ["parse_scandata", "scandata_df"]
 
 
@@ -107,6 +109,7 @@ def scandata_df(df, xml_col: str = "scandata_xml", id_col: str = "doc_id"):
     """(doc_id, scandata_xml) -> parsed metadata rows via mapInPandas."""
     import pandas as pd
 
+    @python_task
     def _parse(batches):
         for pdf in batches:
             rows = []

@@ -23,6 +23,7 @@ import pandas as pd
 
 from .corpus_source import SPANS_JSON_SCHEMA
 from ..corpus.rasters import make_media_ref
+from ..pyworker import python_task
 
 __all__ = ["documents_to_spans", "layout_text"]
 
@@ -65,6 +66,7 @@ def layout_payload(text: str, max_words: int = 400) -> dict:
     }
 
 
+@python_task
 def _convert(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []

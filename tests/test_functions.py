@@ -79,34 +79,37 @@ def test_minhash_lsh_finds_planted_pairs(docs_with_dups):
     assert all(a in (0, 1, 2) and b in (0, 1, 2) for a, b in pairs)
 
 
-def test_minhash_lsh_verify_shapes_agree(spark, docs_with_dups,
-                                        monkeypatch):
-    """The r10 array_intersect verify must return exactly what the
-    exploded-shingle equi-join verify returns (same pairs, same
-    rounded jaccard), including near-misses under the tau filter and
-    tau = 0, where a candidate pair sharing no shingle must not pass."""
-    import os
+def test_minhash_lsh_verify_shapes_agree(spark, docs_with_dups):
+    """Every pair the LSH verify returns carries the exact rounded
+    Jaccard of its two documents' shingle sets, computed here in plain
+    Python, at tau > 0 and at tau = 0, where a candidate pair sharing no
+    shingle must not pass."""
+    texts = {r["doc_id"]: r["text"] for r in docs_with_dups.collect()}
 
-    def run(shape, docs, tau, bands=8):
-        monkeypatch.setitem(os.environ, "SPARK_GRAFT_LSH_VERIFY", shape)
+    def shingles(text, n=3):
+        toks = text.lower().split()
+        return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+    def run(docs, tau, bands=8):
         return sorted(
             (r["doc_a"], r["doc_b"], r["jaccard"]) for r in
             minhash_lsh_pairs(docs, n=3, k=32, bands=bands,
                               tau=tau).collect())
 
     for tau in (0.3, 0.0):
-        got_join = run("join", docs_with_dups, tau)
-        got_intersect = run("intersect", docs_with_dups, tau)
-        assert got_intersect == got_join, tau
-        assert got_intersect                  # non-vacuous
+        pairs = run(docs_with_dups, tau)
+        assert pairs                          # non-vacuous
+        for a, b, jaccard in pairs:
+            sa, sb = shingles(texts[a]), shingles(texts[b])
+            assert jaccard == round(len(sa & sb) / len(sa | sb), 4), (a, b)
+            assert jaccard >= tau and sa & sb, (a, b)
     # one shingle each, disjoint, but their minhashes agree in
     # permutation row 28 (k=32, seed 7): with one row per band they
     # are an LSH candidate pair whose Jaccard is 0
     disjoint = spark.createDataFrame(
         [(0, "alpha9411 beta gamma"), (1, "alpha11313 beta gamma")],
         "doc_id bigint, text string")
-    for shape in ("join", "intersect"):
-        assert run(shape, disjoint, 0.0, bands=32) == []
+    assert run(disjoint, 0.0, bands=32) == []
 
 
 @pytest.fixture(scope="module")

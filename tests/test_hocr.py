@@ -27,9 +27,12 @@ def test_title_property_parsing():
 
 
 def test_payload_roundtrip_exact():
-    """parse(render(payload)) == payload, byte-for-byte JSON."""
-    for words in (1, 7, 8, 9, 50):
-        payload = layout_text(" ".join(PROSE.split()[:words]))
+    """parse(render(payload)) == payload, byte-for-byte JSON, including
+    words that need XML escaping."""
+    texts = [" ".join(PROSE.split()[:words]) for words in (1, 7, 8, 9, 50)]
+    texts.append("fish&chips <b> a>b&lt; R&D")
+    for text in texts:
+        payload = layout_text(text)
         markup = hocr_from_pages([payload])
         pages = list(iter_pages(markup))
         assert len(pages) == 1
