@@ -208,11 +208,12 @@ def run_imagestack_checkpoint(spark, df, out_dir: str,
                               shards: int = 16,
                               stop_after_shards: int | None = None,
                               hocr_col: str | None = "hocr") -> dict:
-    """Sharded snapshot commits for the imagestack front door — the
-    shared ``checkpoint.run_sharded`` protocol, same as PDFs."""
-    from .checkpoint import run_spans_checkpoint
+    """Sharded snapshot commits for the imagestack front door: spans to
+    ``<out>/spans/shard=k`` with a doc/span-count metrics row, the same
+    ``checkpoint.run_sharded`` commit as PDFs."""
+    from .checkpoint import run_sharded, span_count_metrics
 
-    return run_spans_checkpoint(
-        df, out_dir, shards,
-        lambda d: imagestack_to_spans(d, hocr_col=hocr_col),
-        stop_after_shards=stop_after_shards)
+    return run_sharded(df, out_dir, shards,
+                       lambda d: imagestack_to_spans(d, hocr_col=hocr_col),
+                       span_count_metrics, "spans",
+                       stop_after_shards=stop_after_shards)

@@ -174,16 +174,14 @@ def run_pdf_checkpoint(spark, pdf_df, out_dir: str, shards: int = 16,
                        password: bytes | str = b"") -> dict:
     """Sharded snapshot commits for the PDF front door: the conversion
     IS the extraction here, so each shard writes ``pdfs_to_spans``
-    output directly plus a small metrics row.  The commit protocol
-    itself (shard assignment, manifest, resume, kill simulation) is the
-    shared ``checkpoint.run_sharded`` — one crash-safety implementation
-    for every front door."""
-    from .checkpoint import run_spans_checkpoint
+    output to ``<out>/spans/shard=k`` with a doc/span-count metrics
+    row (``checkpoint.run_sharded``)."""
+    from .checkpoint import run_sharded, span_count_metrics
 
-    return run_spans_checkpoint(
-        pdf_df, out_dir, shards,
-        lambda d: pdfs_to_spans(d, password=password),
-        stop_after_shards=stop_after_shards)
+    return run_sharded(pdf_df, out_dir, shards,
+                       lambda d: pdfs_to_spans(d, password=password),
+                       span_count_metrics, "spans",
+                       stop_after_shards=stop_after_shards)
 
 
 def recode_existing_pdfs(df, pdf_col: str = "pdf", hocr_col: str = "hocr"):
@@ -279,34 +277,17 @@ def run_recompress_checkpoint(spark, pdf_df, out_dir: str,
                               hocr_col: str | None = "hocr",
                               password: bytes | str = b"") -> dict:
     """Sharded snapshot commits for the PDF-recompress sink: finished
-    PDFs land in ``<out>/pdfs/shard=k`` with a per-shard metrics row —
-    the same crash-safe protocol as ``run_recode_checkpoint``."""
-    import os
-
+    PDFs land in ``<out>/pdfs/shard=k`` with a per-shard metrics row
+    (``checkpoint.run_sharded``)."""
     from pyspark.sql import functions as F
 
-    from .checkpoint import run_sharded
+    from .checkpoint import pdf_count_metrics, run_sharded
 
-    def write_shard(shard_df, k: int):
-        out = recompress_pdfs(shard_df, hocr_col=hocr_col,
-                              password=password).persist()
-        try:
-            out.write.mode("overwrite").parquet(
-                os.path.join(out_dir, "pdfs", f"shard={k}"))
-            (out.select(
-                F.count("*").alias("doc_count"),
-                F.sum("n_pages").alias("page_count"),
-                F.sum("n_images").alias("image_count"),
-                F.sum("orig_image_bytes").alias("orig_image_bytes"),
-                F.sum("new_image_bytes").alias("new_image_bytes"),
-                F.sum(F.length("pdf")).alias("pdf_bytes"),
-                F.sum(F.col("error").isNotNull().cast("long"))
-                 .alias("error_count"))
-             .withColumn("shard", F.lit(k))
-             .write.mode("overwrite").parquet(
-                 os.path.join(out_dir, "metrics", f"shard={k}")))
-        finally:
-            out.unpersist()
-
-    return run_sharded(pdf_df, out_dir, shards, write_shard,
-                       stop_after_shards=stop_after_shards)
+    return run_sharded(
+        pdf_df, out_dir, shards,
+        lambda d: recompress_pdfs(d, hocr_col=hocr_col, password=password),
+        lambda d: pdf_count_metrics(
+            d, F.sum("n_images").alias("image_count"),
+            F.sum("orig_image_bytes").alias("orig_image_bytes"),
+            F.sum("new_image_bytes").alias("new_image_bytes")),
+        "pdfs", stop_after_shards=stop_after_shards)

@@ -307,37 +307,15 @@ def recode_to_pdf(df, image_col: str = "image",
 
 def run_recode_checkpoint(spark, df, out_dir: str,
                           shards: int = 16,
-                       stop_after_shards: int | None = None,
-                       hocr_col: str | None = "hocr",
-                       **recode_opts) -> dict:
-    """Sharded snapshot commits for the PDF recode sink — the shared
-    ``checkpoint.run_sharded`` protocol (same crash-safety layout as
-    the spans front doors): finished PDFs land in
-    ``<out>/pdfs/shard=k`` with a per-shard metrics row (doc / page /
-    error counts, total output bytes)."""
-    import os
+                          stop_after_shards: int | None = None,
+                          hocr_col: str | None = "hocr",
+                          **recode_opts) -> dict:
+    """Sharded snapshot commits for the PDF recode sink: finished PDFs
+    land in ``<out>/pdfs/shard=k`` with a per-shard metrics row
+    (``checkpoint.run_sharded``)."""
+    from .checkpoint import pdf_count_metrics, run_sharded
 
-    from pyspark.sql import functions as F
-
-    from .checkpoint import run_sharded
-
-    def write_shard(shard_df, k: int):
-        out = recode_to_pdf(shard_df, hocr_col=hocr_col,
-                            **recode_opts).persist()
-        try:
-            out.write.mode("overwrite").parquet(
-                os.path.join(out_dir, "pdfs", f"shard={k}"))
-            (out.select(
-                F.count("*").alias("doc_count"),
-                F.sum("n_pages").alias("page_count"),
-                F.sum(F.length("pdf")).alias("pdf_bytes"),
-                F.sum(F.col("error").isNotNull().cast("long"))
-                 .alias("error_count"))
-             .withColumn("shard", F.lit(k))
-             .write.mode("overwrite").parquet(
-                 os.path.join(out_dir, "metrics", f"shard={k}")))
-        finally:
-            out.unpersist()
-
-    return run_sharded(df, out_dir, shards, write_shard,
-                       stop_after_shards=stop_after_shards)
+    return run_sharded(
+        df, out_dir, shards,
+        lambda d: recode_to_pdf(d, hocr_col=hocr_col, **recode_opts),
+        pdf_count_metrics, "pdfs", stop_after_shards=stop_after_shards)

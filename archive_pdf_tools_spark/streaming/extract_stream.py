@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 
+from ..operators.checkpoint import commit_unit
 from ..operators.extract import (OUTPUT_SCHEMA_DDL, extract_spans,
                                  partition_metrics, reassemble)
 
@@ -47,17 +48,9 @@ def stream_extraction(spark, in_path: str, out_dir: str,
               .parquet(in_path))
 
     def process_batch(batch_df, batch_id: int):
-        extracted = extract_spans(batch_df, num_partitions=num_partitions)
-        extracted.persist()
-        try:
-            (reassemble(extracted).write.mode("overwrite")
-             .parquet(os.path.join(out_dir, "spans",
-                                   f"batch={batch_id}")))
-            (partition_metrics(extracted).write.mode("overwrite")
-             .parquet(os.path.join(out_dir, "metrics",
-                                   f"batch={batch_id}")))
-        finally:
-            extracted.unpersist()
+        commit_unit(extract_spans(batch_df, num_partitions=num_partitions),
+                    out_dir, f"batch={batch_id}", "spans",
+                    partition_metrics, product=reassemble)
 
     writer = (stream.writeStream
               .foreachBatch(process_batch)

@@ -6,11 +6,11 @@ Deployment shape required by the north rule::
     zip -r engine.zip archive_pdf_tools_spark
     spark-submit --py-files engine.zip job.py \
         --input  <documents table path (parquet dir / Iceberg table)> \
-        --output <output dir> [--shards 64] [--resume] [--synthetic N]
+        --output <output dir> [--shards 64] [-t N] [--synthetic N]
 
-Runs the extraction pipeline with sharded snapshot checkpointing
-(``operators/checkpoint.py``); re-running after a failure resumes from
-the last committed shard (plus a doc-level anti-join when ``--resume``).
+Runs the chosen front door with sharded snapshot checkpointing
+(``operators/checkpoint.py``); re-running after a failure skips the
+shards the manifest lists as committed and recomputes the rest.
 """
 
 from __future__ import annotations
@@ -19,8 +19,13 @@ import argparse
 import json
 import sys
 
+# recode_document keywords taken verbatim from the same-named options
+_RECODE_OPTS = ("image_mode", "mrc_image_format", "mask_compression",
+                "grayscale", "bw", "dpi", "downsample", "fg_downsample",
+                "bg_downsample", "denoise_mask", "hq_pages", "jpeg_quality")
 
-def main(argv=None):
+
+def parse_args(argv=None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="documents table path (parquet)")
     ap.add_argument("--input-format", choices=("spans", "hocr", "html",
@@ -82,8 +87,9 @@ def main(argv=None):
     comp.add_argument("--mask-compression", choices=("jbig2", "ccitt"),
                       default="jbig2", help="mask (lossless) codec")
     comp.add_argument("--grayscale-pdf", action="store_true",
+                      dest="grayscale",
                       help="special_gray_convert input before recode")
-    comp.add_argument("--bw-pdf", action="store_true",
+    comp.add_argument("--bw-pdf", action="store_true", dest="bw",
                       help="1-bit output: the MRC text mask is the "
                            "page image")
     comp.add_argument("-D", "--dpi", type=int, default=None,
@@ -118,8 +124,63 @@ def main(argv=None):
             ap.error("--output-format pdf needs a real --input table "
                      "(--synthetic generates interleaved span docs, "
                      "not page images)")
+    if not (args.synthetic or args.input):
+        ap.error("one of --input / --synthetic is required")
+    return args
 
-    import os as _os
+
+def run(spark, args: argparse.Namespace) -> dict:
+    """Run the front door ``args`` names through its sharded checkpoint
+    on ``spark``; returns the manifest."""
+    from archive_pdf_tools_spark.operators import (checkpoint, imagestack,
+                                                   pdfcomp, recode)
+    from archive_pdf_tools_spark.sources import (hocr, htmlmain,
+                                                 synthetic_documents)
+
+    commit = dict(shards=args.shards,
+                  stop_after_shards=args.stop_after_shards)
+    if args.synthetic:
+        docs = synthetic_documents(spark, n_docs=args.synthetic,
+                                   num_partitions=args.partitions)
+        return checkpoint.run_with_checkpoint(
+            spark, docs, args.output, num_partitions=args.partitions, **commit)
+    docs = spark.read.parquet(args.input)
+    door = (args.input_format, args.output_format)
+    if door == ("imagestack", "pdf"):
+        md = {f: getattr(args, f"metadata_{f}")
+              for f in ("title", "author", "subject", "keywords",
+                        "creatortool")
+              if getattr(args, f"metadata_{f}")}
+        return recode.run_recode_checkpoint(
+            spark, docs, args.output, metadata=md or None,
+            lang=args.metadata_language, **commit,
+            **{o: getattr(args, o) for o in _RECODE_OPTS})
+    if door == ("imagestack", "spans"):
+        return imagestack.run_imagestack_checkpoint(spark, docs, args.output,
+                                                   **commit)
+    if door == ("pdf", "pdf"):
+        # Recompress: the MRC-recoded PDF itself is the product
+        # (bin/compress-pdf-images as a cluster job).
+        return pdfcomp.run_recompress_checkpoint(
+            spark, docs, args.output, password=args.pdf_password, **commit)
+    if door == ("pdf", "spans"):
+        # The conversion IS the extraction for PDFs (content-stream
+        # text + MRC-recoded images): shard-committed directly.
+        return pdfcomp.run_pdf_checkpoint(
+            spark, docs, args.output, password=args.pdf_password, **commit)
+    if args.input_format == "hocr":
+        docs = hocr.hocr_documents(
+            docs, dpi_col="dpi" if "dpi" in docs.columns else None)
+    elif args.input_format == "html":
+        docs = htmlmain.html_documents(docs, payloads=True)
+    return checkpoint.run_with_checkpoint(
+        spark, docs, args.output, num_partitions=args.partitions, **commit)
+
+
+def main(argv=None):
+    args = parse_args(argv)
+
+    import os
 
     from pyspark.sql import SparkSession
 
@@ -130,7 +191,7 @@ def main(argv=None):
                        "64"))
     if args.native_codecs:
         # registry.py honors this at import in every python worker
-        _os.environ["SPARK_GRAFT_NATIVE_CODECS"] = "1"
+        os.environ["SPARK_GRAFT_NATIVE_CODECS"] = "1"
         builder = builder.config(
             "spark.executorEnv.SPARK_GRAFT_NATIVE_CODECS", "1")
     spark = builder.getOrCreate()
@@ -140,90 +201,10 @@ def main(argv=None):
         from archive_pdf_tools_spark.kernels import registry
         print(json.dumps({"native_codecs_swapped":
                           registry.ENV_SWAPPED}))
-
-    from archive_pdf_tools_spark.operators.checkpoint import run_with_checkpoint
-    from archive_pdf_tools_spark.sources import synthetic_documents
-
-    if args.synthetic:
-        docs = synthetic_documents(spark, n_docs=args.synthetic,
-                                   num_partitions=args.partitions)
-    elif args.input:
-        docs = spark.read.parquet(args.input)
-        if args.input_format == "imagestack":
-            if args.output_format == "pdf":
-                from archive_pdf_tools_spark.operators.recode import (
-                    run_recode_checkpoint)
-                md = {f: getattr(args, f"metadata_{f}")
-                      for f in ("title", "author", "subject",
-                                "keywords", "creatortool")
-                      if getattr(args, f"metadata_{f}")}
-                recode_opts = dict(
-                    image_mode=args.image_mode,
-                    mrc_image_format=args.mrc_image_format,
-                    mask_compression=args.mask_compression,
-                    grayscale=args.grayscale_pdf, bw=args.bw_pdf,
-                    dpi=args.dpi, downsample=args.downsample,
-                    fg_downsample=args.fg_downsample,
-                    bg_downsample=args.bg_downsample,
-                    denoise_mask=args.denoise_mask,
-                    hq_pages=args.hq_pages,
-                    jpeg_quality=args.jpeg_quality,
-                    metadata=md or None,
-                    lang=args.metadata_language)
-                manifest = run_recode_checkpoint(
-                    spark, docs, args.output, shards=args.shards,
-                    stop_after_shards=args.stop_after_shards,
-                    **recode_opts)
-            else:
-                from archive_pdf_tools_spark.operators.imagestack import (
-                    run_imagestack_checkpoint)
-                manifest = run_imagestack_checkpoint(
-                    spark, docs, args.output, shards=args.shards,
-                    stop_after_shards=args.stop_after_shards)
-            print(json.dumps(manifest))
-            spark.stop()
-            return
-        if args.input_format == "pdf":
-            if args.output_format == "pdf":
-                # Recompress: the MRC-recoded PDF itself is the
-                # product (bin/compress-pdf-images as a cluster job).
-                from archive_pdf_tools_spark.operators.pdfcomp import (
-                    run_recompress_checkpoint)
-                manifest = run_recompress_checkpoint(
-                    spark, docs, args.output, shards=args.shards,
-                    stop_after_shards=args.stop_after_shards,
-                    password=args.pdf_password)
-                print(json.dumps(manifest))
-                spark.stop()
-                return
-            # The conversion IS the extraction for PDFs (content-stream
-            # text + MRC-recoded images): shard-committed directly.
-            from archive_pdf_tools_spark.operators.pdfcomp import (
-                run_pdf_checkpoint)
-            manifest = run_pdf_checkpoint(
-                spark, docs, args.output, shards=args.shards,
-                stop_after_shards=args.stop_after_shards,
-                password=args.pdf_password)
-            print(json.dumps(manifest))
-            spark.stop()
-            return
-        if args.input_format == "hocr":
-            from archive_pdf_tools_spark.sources.hocr import hocr_documents
-            docs = hocr_documents(
-                docs, dpi_col="dpi" if "dpi" in docs.columns else None)
-        elif args.input_format == "html":
-            from archive_pdf_tools_spark.sources.htmlmain import (
-                html_documents)
-            docs = html_documents(docs, payloads=True)
-    else:
-        ap.error("one of --input / --synthetic is required")
-
-    manifest = run_with_checkpoint(
-        spark, docs, args.output, shards=args.shards,
-        num_partitions=args.partitions,
-        stop_after_shards=args.stop_after_shards)
-    print(json.dumps(manifest))
-    spark.stop()
+    try:
+        print(json.dumps(run(spark, args)))
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -6,7 +6,7 @@ import os
 import pytest
 
 from archive_pdf_tools_spark.operators.checkpoint import (
-    read_manifest, resume_filter, run_with_checkpoint)
+    read_manifest, run_with_checkpoint)
 from archive_pdf_tools_spark.operators.extract import OUTPUT_SCHEMA_DDL
 from archive_pdf_tools_spark.sources import synthetic_documents
 
@@ -69,18 +69,13 @@ def test_shard_count_mismatch_rejected(spark, docs_df, tmp_path):
     run_with_checkpoint(spark, docs_df, out, shards=2)
     with pytest.raises(ValueError):
         run_with_checkpoint(spark, docs_df, out, shards=8)
-
-
-def test_resume_filter_anti_join(spark, docs_df, tmp_path):
-    out = str(tmp_path / "cp")
-    run_with_checkpoint(spark, docs_df, out, shards=4)
-    done = spark.read.parquet(os.path.join(out, "spans"))
-    remaining = resume_filter(docs_df, done)
-    assert remaining.count() == 0
-    # Drop half the output -> those docs come back
-    half = done.limit(8)
-    remaining = resume_filter(docs_df, half)
-    assert remaining.count() == 8
+    # bad shard arguments are rejected before anything is written
+    for i, bad in enumerate(({"shards": 0},
+                             {"shards": 2, "stop_after_shards": -1})):
+        fresh = str(tmp_path / f"bad{i}")
+        with pytest.raises(ValueError):
+            run_with_checkpoint(spark, docs_df, fresh, **bad)
+        assert not os.path.exists(fresh)
 
 
 def test_stop_after_shards_simulated_kill(spark, docs_df, tmp_path):

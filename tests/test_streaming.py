@@ -40,6 +40,12 @@ def test_stream_matches_batch_and_is_exactly_once(spark, tmp_path):
             for r in got.collect()}
     assert len(rows) == 10
     assert got.count() == 10  # exactly once
+    # every batch committed its metrics alongside its spans
+    from pyspark.sql import functions as F
+    pages = spark.read.parquet(in_dir).select(
+        F.sum(F.size("spans"))).first()[0]
+    metrics = spark.read.parquet(os.path.join(out_dir, "metrics"))
+    assert metrics.select(F.sum("page_count")).first()[0] == pages
 
     # Parity with the local single-process runner.
     from archive_pdf_tools_spark.corpus.generate import make_doc
