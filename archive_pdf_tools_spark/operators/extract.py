@@ -27,12 +27,13 @@ Per-span outputs:
 * bitonal media (the reference's 1-bit passthrough ``recode.py:376-396``)
   -> single media span with the raster hash, no segmentation.
 
-Every input span additionally emits one ``__page__`` marker row carrying
-its kernel timing, warnings and placement digest; ``reassemble`` drops the
-markers (so documents whose spans produce nothing still appear, with empty
-span arrays) and ``partition_metrics`` aggregates exactly one marker per
-page — mirroring the reference's per-page timing/errors reporting
-(``recode.py:237-262, 494-525``; errors set ``const.py:35-45``).
+The intermediate is one row per input span (page): its kind, kernel
+timing, warnings and placement digest, plus the ordered output spans in a
+``subs`` array.  ``reassemble`` sorts a document's pages and flattens their
+``subs`` (so documents whose spans produce nothing still appear, with empty
+span arrays) and ``partition_metrics`` aggregates the page rows — mirroring
+the reference's per-page timing/errors reporting (``recode.py:237-262,
+494-525``; errors set ``const.py:35-45``).
 """
 
 from __future__ import annotations
@@ -72,14 +73,12 @@ from ..pyworker import python_task
 
 __all__ = ["extract_one", "extract_document_local", "extract_spans",
            "reassemble", "partition_metrics", "INTERMEDIATE_SCHEMA_DDL",
-           "OUTPUT_SCHEMA_DDL", "PAGE_MARKER"]
-
-PAGE_MARKER = "__page__"
+           "OUTPUT_SCHEMA_DDL"]
 
 INTERMEDIATE_SCHEMA_DDL = (
-    "doc_id string, in_offset int, sub_idx int, kind string, text string, "
-    "media_ref string, ops_sha string, warnings array<string>, "
-    "elapsed_ms double"
+    "doc_id string, in_offset int, page_kind string, ops_sha string, "
+    "warnings array<string>, elapsed_ms double, "
+    "subs array<struct<kind:string,text:string,media_ref:string>>"
 )
 
 OUTPUT_SCHEMA_DDL = (
@@ -191,7 +190,7 @@ def extract_document_local(doc: dict, skip_offsets=None,
 
 @python_task
 def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: span rows in, sub-span + page-marker rows out.
+    """mapInPandas body: span rows in, one page row per span out.
 
     Non-bitonal media pages are executed in two phases: per-page mask
     building, then fg/bg optimise *batched across same-shape pages* of
@@ -207,8 +206,6 @@ def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     64-row batches).  Coalescing is memory-safe here because span rows
     are small (refs + hOCR payloads — rasters are rendered inside this
     stage and never cross the boundary)."""
-    cols = ["doc_id", "in_offset", "sub_idx", "kind", "text", "media_ref",
-            "ops_sha", "warnings", "elapsed_ms"]
     # Cap the pixels stacked per optimise group (memory bound per worker).
     max_group_px = 4_000_000
     min_batch_rows = 512
@@ -228,6 +225,7 @@ def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in _coalesced(batches):
         n = len(pdf)
         results: list = [None] * n          # slot -> (subs, ops_sha, warns)
+        offsets: list = [None] * n
         elapsed = [0.0] * n
         deferred: dict[tuple, list] = {}    # (h,w,ndim) -> [(slot, pa)]
 
@@ -235,9 +233,10 @@ def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         pdf["kind"].values, pdf["text"].values,
                         pdf["media_ref"].values))
 
-        for slot, (_doc, _off, kind, text, media_ref) in enumerate(rows):
+        for slot, (_doc, offset, kind, text, media_ref) in enumerate(rows):
             t0 = time.perf_counter()
             try:
+                offsets[slot] = int(offset)     # a null offset arrives as NaN
                 if kind == "media":
                     pa = _media_phase_a(media_ref, apply_denoise=False)
                     if pa["bitonal"]:
@@ -252,7 +251,7 @@ def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     results[slot] = extract_one(kind, text, media_ref)
             except Exception as exc:  # noqa: BLE001 — poison-row guard:
                 # a malformed span must not kill a 10^12-doc job; it
-                # becomes an empty page whose marker carries the error
+                # becomes an empty page whose row carries the error
                 # (surfaced via the metrics/lineage table).
                 results[slot] = ([], "", [f"extract-error:{type(exc).__name__}"])
             elapsed[slot] = (time.perf_counter() - t0) * 1000.0
@@ -281,21 +280,17 @@ def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                                      "", list(pa["warnings"]))
                     elapsed[slot] += share
 
-        recs = []
-        for slot, (doc_id, in_offset, kind, _text, _ref) in enumerate(rows):
-            subs, ops_sha, warns = results[slot]
-            in_offset = int(in_offset)
-            recs.append((doc_id, in_offset, -1, PAGE_MARKER, kind, "",
-                         ops_sha, warns, elapsed[slot]))
-            for sub_idx, (k, t, m) in enumerate(subs):
-                recs.append((doc_id, in_offset, sub_idx, k, t, m,
-                             "", [], 0.0))
-        yield pd.DataFrame(recs, columns=cols)
+        yield pd.DataFrame({
+            "doc_id": pdf["doc_id"].values, "in_offset": offsets,
+            "page_kind": pdf["kind"].values,
+            "ops_sha": [r[1] for r in results],
+            "warnings": [r[2] for r in results],
+            "elapsed_ms": elapsed, "subs": [r[0] for r in results]})
 
 
 def extract_spans(documents_df, num_partitions: int | None = None,
                   skip_offsets=None, stop_after: int | None = None):
-    """documents (doc_id, spans) -> intermediate sub-span rows.
+    """documents (doc_id, spans) -> intermediate page rows.
 
     Explicit skew handling: pages of one huge document are spread across
     all partitions by hashing (doc_id, offset) — the reference analogue is
@@ -330,23 +325,20 @@ def extract_spans(documents_df, num_partitions: int | None = None,
 
 
 def reassemble(extracted_df):
-    """Sub-span rows -> (doc_id, spans) with contiguous re-numbered offsets.
+    """Page rows -> (doc_id, spans) with contiguous re-numbered offsets.
 
     Order is data, never partition order (SURVEY.md §7.4): array_sort on
-    (in_offset, sub_idx) restores reading order after the shuffle, then
-    ``transform`` renumbers — all JVM-side, no Python.  Page markers are
-    folded to NULL inside collect_list (skipped), so empty documents
-    survive with spans = [].
+    in_offset restores page order after the shuffle, ``flatten`` joins the
+    pages' ``subs`` (each page's spans stay together, also when two pages
+    share an offset) and ``transform`` renumbers — all JVM-side, no
+    Python.  A document whose pages emit nothing gets spans = [].
     """
     from pyspark.sql import functions as F
 
-    sortable = F.when(
-        F.col("kind") != PAGE_MARKER,
-        F.struct(F.col("in_offset"), F.col("sub_idx"),
-                 F.col("kind"), F.col("text"), F.col("media_ref")))
+    pages = F.array_sort(F.collect_list(F.struct("in_offset", "subs")))
     return (extracted_df
             .groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list(sortable)).alias("_s"))
+            .agg(F.flatten(pages["subs"]).alias("_s"))
             .select(
                 "doc_id",
                 F.transform(
@@ -365,19 +357,17 @@ def placements(extracted_df):
     from pyspark.sql import functions as F
 
     return (extracted_df
-            .where((F.col("kind") == PAGE_MARKER) & (F.col("ops_sha") != ""))
+            .where(F.col("ops_sha") != "")
             .select("doc_id", "in_offset", "ops_sha"))
 
 
 def partition_metrics(extracted_df):
-    """Per-partition lineage + metrics rows from the page markers."""
+    """Per-partition lineage + metrics rows from the page rows."""
     from pyspark.sql import functions as F
 
-    pages = extracted_df.where(F.col("kind") == PAGE_MARKER)
-    return (pages
+    return (extracted_df
             .select(F.spark_partition_id().alias("partition_id"),
-                    "doc_id", "elapsed_ms", "warnings",
-                    F.col("text").alias("page_kind"))
+                    "doc_id", "elapsed_ms", "warnings", "page_kind")
             .groupBy("partition_id")
             .agg(F.countDistinct("doc_id").alias("doc_count"),
                  F.count("*").alias("page_count"),

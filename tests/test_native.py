@@ -910,7 +910,7 @@ def test_text_layer_error_parity(spark, native_modes):
     import json
 
     from archive_pdf_tools_spark.operators.extract import (
-        PAGE_MARKER, extract_spans, partition_metrics)
+        extract_spans, partition_metrics)
 
     def span(offset, mutate=None):
         paras = json.loads(json.dumps(native._TEXT_PAGE))
@@ -939,16 +939,17 @@ def test_text_layer_error_parity(spark, native_modes):
     for _mode in native_modes(spark):
         docs = spark.createDataFrame(rows, ddl)
         ext = extract_spans(docs, num_partitions=2)
-        markers = sorted(
+        pages = sorted(
             (r["doc_id"], r["in_offset"], tuple(r["warnings"]),
              r["ops_sha"])
-            for r in ext.where(ext.kind == PAGE_MARKER).collect())
+            for r in ext.select("doc_id", "in_offset", "warnings",
+                                "ops_sha").collect())
         metrics = sorted(
             (r["partition_id"], r["doc_count"], r["page_count"],
              r["text_pages"], r["media_pages"],
              tuple(sorted(r["warning_kinds"])))
             for r in partition_metrics(ext).collect())
-        seen.append((markers, metrics))
+        seen.append((pages, metrics))
     assert seen[0] == seen[1]
     kinds = {w for _d, _o, ws, _s in seen[0][0] for w in ws}
     assert {"extract-error:ValueError", "extract-error:OverflowError",

@@ -62,6 +62,7 @@ def test_metrics_cover_every_page(spark, input_df, corpus):
     extracted = extract_spans(input_df, num_partitions=8)
     m = partition_metrics(extracted).collect()
     total_pages = sum(len(d["spans"]) for d in corpus)
+    assert extracted.count() == total_pages      # one row per page
     assert sum(r["page_count"] for r in m) == total_pages
     assert sum(r["doc_count"] for r in m) >= N_DOCS  # docs may span partitions
     assert all(r["kernel_ms"] >= 0 for r in m)
@@ -96,7 +97,9 @@ def test_poison_row_does_not_kill_job(spark):
         ("ok", [("text", '{"page": {"w": 800, "h": 1000, "dpi": 300, '
                  '"scan_res": null}, "paragraphs": []}', "", 0)]),
         ("poison", [("text", "{not json", "", 0),
-                    ("text", None, "", 1)]),
+                    ("text", None, "", 1),
+                    ("text", '{"page": {"w": 800, "h": 1000, "dpi": 300, '
+                     '"scan_res": null}, "paragraphs": []}', "", None)]),
     ]
     df = spark.createDataFrame(rows, schema=OUTPUT_SCHEMA_DDL)
     extracted = extract_spans(df, num_partitions=2).cache()
@@ -107,6 +110,7 @@ def test_poison_row_does_not_kill_job(spark):
     for r in partition_metrics(extracted).collect():
         warn_kinds.update(r["warning_kinds"])
     assert any(w.startswith("extract-error:") for w in warn_kinds)
+    assert "extract-error:ValueError" in warn_kinds      # the null offset
     extracted.unpersist()
 
 
@@ -123,3 +127,34 @@ def test_arrow_batch_size_invariance(spark, input_df, golden):
             assert got[doc_id] == golden[doc_id], doc_id
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_pages_sharing_an_offset_stay_contiguous(spark):
+    """Nothing stops a document from repeating an offset: each page's
+    spans must still come out together (which tied page comes first is
+    not part of the contract)."""
+    import json
+
+    from archive_pdf_tools_spark.operators.extract import OUTPUT_SCHEMA_DDL
+
+    def page(*lines):
+        paras = [{"lines": [{"bbox": [10, 10 + 30 * i, 200, 30 + 30 * i],
+                             "baseline": [0, 0],
+                             "words": [{"text": t, "fontsize": 10,
+                                        "writing_direction": 0,
+                                        "bbox": [10, 10 + 30 * i, 60,
+                                                 30 + 30 * i]}]}
+                            for i, t in enumerate(lines)]}]
+        return json.dumps({"page": {"w": 800, "h": 1000, "dpi": 300,
+                                    "scan_res": None}, "paragraphs": paras})
+
+    rows = [("dup", [("text", page("a1", "a2"), "", 0),
+                     ("text", page("b1", "b2"), "", 0),
+                     ("text", page("c1"), "", 1)])]
+    df = spark.createDataFrame(rows, schema=OUTPUT_SCHEMA_DDL)
+    for parts in (1, 3):
+        out = reassemble(extract_spans(df, num_partitions=parts)).collect()
+        texts = [s["text"] for s in out[0]["spans"]]
+        assert texts in (["a1", "a2", "b1", "b2", "c1"],
+                         ["b1", "b2", "a1", "a2", "c1"]), texts
+        assert [s["offset"] for s in out[0]["spans"]] == list(range(5))

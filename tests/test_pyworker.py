@@ -173,7 +173,7 @@ def test_worker_task_rereads_no_engine_archive(spark, tmp_path):
             zipimport._read_directory = read_directory
         root = os.path.join(SparkFiles.getRootDirectory(), "")
         yield pd.DataFrame({"result": [json.dumps({
-            "texts": out["text"].tolist(),
+            "texts": [t for subs in out["subs"] for _k, t, _m in subs],
             "outside": [r for r in reads if not r.startswith(root)],
             "inside": [os.path.basename(r) for r in reads
                        if r.startswith(root)],

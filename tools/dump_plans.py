@@ -15,8 +15,9 @@ COMMENT = {
     "extraction": (
         "Exactly two Exchanges: the explicit full-cardinality salt and the "
         "per-doc regroup.  Rasters/payloads cross only the first; the "
-        "second moves extracted span rows.  ObjectHashAggregate handles "
-        "collect_list; array_sort/transform run inside the same stage."),
+        "second moves extracted page rows.  ObjectHashAggregate handles "
+        "collect_list; array_sort/flatten/transform run inside the same "
+        "stage."),
     "nation_revenue": (
         "nation/region stay BroadcastHashJoin (explicit broadcast hints); "
         "lineitem-orders-customer are shuffle joins sized by AQE; partial "
