@@ -65,7 +65,7 @@ import pandas as pd
 
 from ..corpus.rasters import page_spec, render_raster, spec_word_data
 from ..kernels.dpi import page_geometry, pick_font_scaler
-from ..kernels.mrc import create_mrc_components, mrc_mask_phase
+from ..kernels.mrc import mrc_mask_phase
 from ..kernels.optimise import (fast_mask_denoise_batch,
                                 optimise_gray2_batch, optimise_rgb2_batch)
 from ..kernels.textlayer import render_text_layer
@@ -167,21 +167,41 @@ def extract_one(kind: str, text: str, media_ref: str):
     return out, ops_sha, warnings
 
 
+def _guarded(offset, page, *args):
+    """The poison-row guard, shared by the Spark body and the oracle:
+    ``(int(offset), page(*args))``, where ``page`` returns (subs, ops_sha,
+    warnings).  If either raises (a malformed payload, a null offset),
+    the page is empty and its one warning names the error: a malformed
+    span must not kill a 10^12-doc job, and the metrics table surfaces
+    the error."""
+    in_offset = None
+    try:
+        in_offset = int(offset)
+        return in_offset, page(*args)
+    except Exception as exc:  # noqa: BLE001
+        return in_offset, ([], "", [f"extract-error:{type(exc).__name__}"])
+
+
 def extract_document_local(doc: dict, skip_offsets=None,
                            stop_after: int | None = None) -> dict:
     """Single-process reference runner (test oracle / bench baseline):
-    same kernels, same ordering contract, no Spark."""
+    same kernels, same ordering contract, same poison-row guard, no
+    Spark.  Null offsets sort first and fall to a non-empty skip
+    filter, as in Spark's ``orderBy`` and ``isin``."""
     rows = []
     skip = set(skip_offsets or ())
     kept = 0
-    for span in sorted(doc["spans"], key=lambda s: s["offset"]):
-        if span["offset"] in skip:          # recode.py:114-118
+    for span in sorted(doc["spans"],
+                       key=lambda s: (s["offset"] is not None, s["offset"])):
+        if skip and (span["offset"] is None      # recode.py:114-118
+                     or span["offset"] in skip):
             continue
         if stop_after is not None and kept >= stop_after:
             break                            # recode.py:120-121
         kept += 1
-        subs, _sha, _warns = extract_one(span["kind"], span["text"],
-                                         span["media_ref"])
+        _offset, (subs, _sha, _warns) = _guarded(
+            span["offset"], extract_one, span["kind"], span["text"],
+            span["media_ref"])
         rows.extend(subs)
     return {"doc_id": doc["doc_id"],
             "spans": [{"kind": k, "text": t, "media_ref": m, "offset": i}
@@ -233,27 +253,22 @@ def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         pdf["kind"].values, pdf["text"].values,
                         pdf["media_ref"].values))
 
+        def first_phase(slot, kind, text, media_ref):
+            if kind != "media":
+                return extract_one(kind, text, media_ref)
+            pa = _media_phase_a(media_ref, apply_denoise=False)
+            if pa["bitonal"]:
+                return ([("media", "",
+                          f"{media_ref}#bitonal={_sha12(pa['raster'])}")],
+                        "", [])
+            deferred.setdefault(pa["raster"].shape, []).append((slot, pa))
+            return None                     # filled in by the batched phase
+
         for slot, (_doc, offset, kind, text, media_ref) in enumerate(rows):
             t0 = time.perf_counter()
-            try:
-                offsets[slot] = int(offset)     # a null offset arrives as NaN
-                if kind == "media":
-                    pa = _media_phase_a(media_ref, apply_denoise=False)
-                    if pa["bitonal"]:
-                        results[slot] = (
-                            [("media", "",
-                              f"{media_ref}#bitonal={_sha12(pa['raster'])}")],
-                            "", [])
-                    else:
-                        key = pa["raster"].shape
-                        deferred.setdefault(key, []).append((slot, pa))
-                else:
-                    results[slot] = extract_one(kind, text, media_ref)
-            except Exception as exc:  # noqa: BLE001 — poison-row guard:
-                # a malformed span must not kill a 10^12-doc job; it
-                # becomes an empty page whose row carries the error
-                # (surfaced via the metrics/lineage table).
-                results[slot] = ([], "", [f"extract-error:{type(exc).__name__}"])
+            # a null offset arrives as NaN and fails int() in the guard
+            offsets[slot], results[slot] = _guarded(
+                offset, first_phase, slot, kind, text, media_ref)
             elapsed[slot] = (time.perf_counter() - t0) * 1000.0
 
         for key, group in deferred.items():

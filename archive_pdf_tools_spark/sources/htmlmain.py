@@ -24,7 +24,6 @@ page-at-a-time); the whole extractor is one map-only vectorized stage
 
 from __future__ import annotations
 
-import json
 import re
 from typing import Iterable, Iterator
 

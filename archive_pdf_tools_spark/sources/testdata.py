@@ -14,11 +14,9 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
 # size recovers scan parallelism on few-file inputs while leaving
 # many-file warehouse layouts unaffected (their files already outnumber
 # cores; a file smaller than the split is never split further...  i.e.
-# only files BIGGER than this value are cut).  Parameterised:
-# production deployments with large sequential scans should raise it
-# (guide: 512 MB-1 GB) via SPARK_GRAFT_MAX_PARTITION_BYTES.
-_MAX_PARTITION_BYTES = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
-                                      "16m")
+# only files BIGGER than this value are cut).  Only these testdata
+# loaders set it; ``job.py`` reads its input without them.
+_MAX_PARTITION_BYTES = "16m"
 
 
 def load_table(spark, sf_dir: str, name: str):

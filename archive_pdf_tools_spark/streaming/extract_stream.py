@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from ..operators.checkpoint import commit_unit
+from ..operators.checkpoint import commit_unit, span_count_metrics
 from ..operators.extract import (OUTPUT_SCHEMA_DDL, extract_spans,
                                  partition_metrics, reassemble)
 
@@ -148,8 +148,7 @@ def stream_imagestack(spark, in_path: str, out_dir: str,
                       trigger_available_now: bool = True,
                       hocr_col: str | None = "hocr",
                       expected_col: str | None = "n_pages",
-                      idle_flush_ms: int | None = None,
-                      max_files_per_trigger: int | None = None):
+                      idle_flush_ms: int | None = None):
     """Streaming imagestack ingest: continuously pick up new
     (doc_id, page_idx, image[, hocr][, n_pages]) parquet files —
     scanner output landing as pages — and emit per-doc ordered spans.
@@ -167,23 +166,16 @@ def stream_imagestack(spark, in_path: str, out_dir: str,
       through the streaming parquet sink, whose ``_spark_metadata``
       manifest makes the file commit exactly-once.
     * **per-batch** (no ``n_pages``): the batch operator runs per
-      micro-batch via ``foreachBatch`` with an idempotent
-      ``batch=<id>`` overwrite write; a document must then land within
-      one micro-batch (the archival ``*_tif.zip`` whole-item shape
-      always does — it is a single row)."""
-    from ..operators.extract import OUTPUT_SCHEMA_DDL
+      micro-batch via ``foreachBatch``, and ``commit_unit`` writes
+      ``spans/batch=<id>`` and its doc/span-count row to
+      ``metrics/batch=<id>``, both overwriting (idempotent on replay);
+      a document must then land within one micro-batch (the archival
+      ``*_tif.zip`` whole-item shape always does — it is a single
+      row)."""
     from ..operators.imagestack import imagestack_to_spans
 
     if checkpoint_dir is None:
         checkpoint_dir = os.path.join(out_dir, "_stream_checkpoint")
-    schema = "doc_id string, page_idx int, image binary" + (
-        f", {hocr_col} binary" if hocr_col else "") + (
-        f", {expected_col} int" if expected_col else "")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
 
     # Mode pick: stateful needs the expected-count column in the data.
     have_expected = False
@@ -194,16 +186,16 @@ def stream_imagestack(spark, in_path: str, out_dir: str,
         except Exception:  # noqa: BLE001 — empty dir at start time
             have_expected = False
 
-    if not have_expected:
-        schema = "doc_id string, page_idx int, image binary" + (
-            f", {hocr_col} binary" if hocr_col else "")
-        stream = spark.readStream.schema(schema).parquet(in_path)
+    schema = "doc_id string, page_idx int, image binary" + (
+        f", {hocr_col} binary" if hocr_col else "") + (
+        f", {expected_col} int" if have_expected else "")
+    stream = spark.readStream.schema(schema).parquet(in_path)
 
+    if not have_expected:
         def process_batch(batch_df, batch_id: int):
-            (imagestack_to_spans(batch_df, hocr_col=hocr_col)
-             .write.mode("overwrite")
-             .parquet(os.path.join(out_dir, "spans",
-                                   f"batch={batch_id}")))
+            commit_unit(imagestack_to_spans(batch_df, hocr_col=hocr_col),
+                        out_dir, f"batch={batch_id}", "spans",
+                        span_count_metrics)
 
         writer = (stream.writeStream
                   .foreachBatch(process_batch)
@@ -214,7 +206,6 @@ def stream_imagestack(spark, in_path: str, out_dir: str,
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    stream = reader.parquet(in_path)
     timeout = (GroupStateTimeout.NoTimeout if idle_flush_ms is None
                else GroupStateTimeout.ProcessingTimeTimeout)
     spans = (stream.groupBy("doc_id")

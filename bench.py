@@ -437,8 +437,9 @@ throughput RISES with corpus size because the bench-sized corpus
 under-fills the 128 partitions and fixed costs dominate.  The direction
 matters for the 100-TB claim: the job gets MORE efficient as the input
 grows.  (Reproduce: `python bench.py --extract-only 32 <sf_dir> 600`
-vs `... 6000`; the round-9 re-run is `tools/bench_scale10.py`,
-probe-gated, full report in BENCH/scale10_r9.json.)
+vs `... 6000`; the round-9 re-run was `tools/bench_scale10.py`,
+probe-gated, full report in BENCH/scale10_r9.json; read the deleted
+script with `git show b208ea28aeac:tools/bench_scale10.py`.)
 
 | when | docs | pages | wall sec | pages/sec |
 |---|---|---|---|---|

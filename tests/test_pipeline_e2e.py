@@ -87,25 +87,42 @@ def test_skip_and_stop_after_match_local(spark, input_df, corpus):
 
 def test_poison_row_does_not_kill_job(spark):
     """Malformed payloads become empty pages with an error marker in the
-    metrics table; healthy rows are unaffected."""
-    from pyspark.sql import functions as F
+    metrics table; healthy rows are unaffected, and the single-process
+    oracle degrades the same way."""
+    from archive_pdf_tools_spark.operators.extract import OUTPUT_SCHEMA_DDL
 
-    from archive_pdf_tools_spark.operators.extract import (
-        OUTPUT_SCHEMA_DDL, extract_spans, partition_metrics, reassemble)
-
+    empty_page = ('{"page": {"w": 800, "h": 1000, "dpi": 300, '
+                  '"scan_res": null}, "paragraphs": []}')
+    line_page = ('{"page": {"w": 800, "h": 1000, "dpi": 300, '
+                 '"scan_res": null}, "paragraphs": [{"lines": [{'
+                 '"bbox": [10, 10, 200, 30], "baseline": [0, 0], '
+                 '"words": [{"text": "kept", "fontsize": 10, '
+                 '"writing_direction": 0, "bbox": [10, 10, 60, 30]}]}]}]}')
     rows = [
-        ("ok", [("text", '{"page": {"w": 800, "h": 1000, "dpi": 300, '
-                 '"scan_res": null}, "paragraphs": []}', "", 0)]),
+        ("ok", [("text", empty_page, "", 0)]),
         ("poison", [("text", "{not json", "", 0),
                     ("text", None, "", 1),
-                    ("text", '{"page": {"w": 800, "h": 1000, "dpi": 300, '
-                     '"scan_res": null}, "paragraphs": []}', "", None)]),
+                    ("text", empty_page, "", None),
+                    ("text", line_page, "", 2)]),
     ]
     df = spark.createDataFrame(rows, schema=OUTPUT_SCHEMA_DDL)
     extracted = extract_spans(df, num_partitions=2).cache()
-    out = {r["doc_id"]: r["spans"] for r in reassemble(extracted).collect()}
+    out = {r["doc_id"]: [s.asDict() for s in r["spans"]]
+           for r in reassemble(extracted).collect()}
     assert set(out) == {"ok", "poison"}
-    assert out["poison"] == []            # empty, not crashed
+    assert [s["text"] for s in out["poison"]] == ["kept"]   # not crashed
+    poison = {"doc_id": "poison",
+              "spans": [dict(zip(("kind", "text", "media_ref", "offset"), s))
+                        for s in rows[1][1]]}
+    assert out["poison"] == extract_document_local(poison)["spans"]
+    # Spark's skip filter drops the null offset, and its stop_after
+    # window counts it first: the oracle must agree on both
+    for skip, stop in (([1], 2), (None, 3)):
+        got = (reassemble(extract_spans(df, num_partitions=2,
+                                        skip_offsets=skip, stop_after=stop))
+               .where("doc_id = 'poison'").first()["spans"])
+        want = extract_document_local(poison, skip, stop)["spans"]
+        assert [s.asDict() for s in got] == want, (skip, stop)
     warn_kinds = set()
     for r in partition_metrics(extracted).collect():
         warn_kinds.update(r["warning_kinds"])

@@ -97,6 +97,8 @@ def test_stream_imagestack_matches_batch_exactly_once(spark, tmp_path):
     q2.awaitTermination(120)
     got = spark.read.parquet(os.path.join(out_dir, "spans"))
     assert got.count() == 5                  # exactly once
+    metrics = spark.read.parquet(os.path.join(out_dir, "metrics"))
+    assert sum(r["doc_count"] for r in metrics.collect()) == 5
 
     # batch/stream parity on the first wave
     want = {r["doc_id"]: [s.asDict() for s in r["spans"]]
