@@ -5,9 +5,15 @@ The reference's only 'tests' are hard-coded series pretty-printed by hand
 reference module (it depends only on `re` + the `roman` package, which we
 shim with our own strict parser) and assert exact equality of
 parse_series() output on the reference's own series plus randomized ones.
+
+The parity tests (the ones that take the `ref` fixture) need the reference
+checkout at REF_PATH and are skipped, with that path named, where it is
+absent.  test_roman_values and test_parse_series_review_cases need nothing
+outside the repo.
 """
 
 import importlib.util
+import os
 import random
 import sys
 import types
@@ -21,6 +27,8 @@ REF_PATH = "/root/reference/internetarchivepdf/pagenumbers.py"
 
 @pytest.fixture(scope="module")
 def ref():
+    if not os.path.exists(REF_PATH):
+        pytest.skip("reference checkout absent: " + REF_PATH)
     # Shim the external `roman` package with our strict parser so the
     # reference module can load without site-packages deps.
     roman = types.ModuleType("roman")
@@ -102,7 +110,7 @@ def test_alpha_to_number_evince_style(ref):
         assert ours.alpha_to_number(s) == ref.alpha_to_number(s)
 
 
-def test_roman_values(ref):
+def test_roman_values():
     import itertools
     # all strings the strict grammar accepts up to 20 chars would be huge;
     # sample numbers instead
