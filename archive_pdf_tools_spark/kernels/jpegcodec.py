@@ -159,15 +159,36 @@ def _dct_matrix() -> np.ndarray:
 DCT_A = _dct_matrix()
 
 
+_MUL_CHUNK = 2048        # blocks per pass: one (8, 8, chunk) plane ~1 MB
+
+
 def _blocks_mul(blocks: np.ndarray, left: np.ndarray,
                 right: np.ndarray) -> np.ndarray:
-    """Per-block ``left @ B @ right`` over (n, 8, 8) via two large GEMMs
-    (reshape to (n*8, 8) and multiply once) instead of n tiny matmuls or
-    a generic einsum — the IDCT/DCT stage at one pass per image."""
+    """Per-block ``left @ B @ right`` over (n, 8, 8) — the IDCT/DCT stage
+    — as broadcast multiply-adds over an (8, 8, n) copy, a chunk of
+    blocks per pass.
+
+    Not a BLAS GEMM: OpenBLAS picks its kernel by CPU, and its FMA
+    kernels (Haswell and later) round ``a*b + c`` once where the older
+    ones round twice, so coefficients on a quantiser's .5 boundary land
+    on different integers and the encoded bytes (and every md5 pinned
+    over them) follow the host.  Here each product and each partial sum
+    (k = 0..7, in order) is rounded on its own: the same bits on every
+    host."""
     n = blocks.shape[0]
-    c = blocks.reshape(n * 8, 8) @ right
-    c = c.reshape(n, 8, 8).transpose(0, 2, 1).reshape(n * 8, 8) @ left.T
-    return c.reshape(n, 8, 8).transpose(0, 2, 1)
+    planes = np.ascontiguousarray(blocks.transpose(1, 2, 0),
+                                  dtype=np.float64)
+    out = np.empty((8, 8, n))
+    for s in range(0, n, _MUL_CHUNK):
+        b = planes[:, :, s:s + _MUL_CHUNK]
+        t = b[:, 0, None] * right[0][None, :, None]
+        for k in range(1, 8):
+            t += b[:, k, None] * right[k][None, :, None]
+        c = out[:, :, s:s + _MUL_CHUNK]
+        np.multiply(left[:, 0, None, None], t[0], out=c)
+        for k in range(1, 8):
+            c += left[:, k, None, None] * t[k]
+    return out.transpose(2, 0, 1)
 
 
 def _scaled_qtbl(base: np.ndarray, quality: int) -> np.ndarray:

@@ -337,6 +337,37 @@ def test_transforms_match_the_t81_definition_sums():
         assert np.allclose(fdct[i], fdct_ref(s), atol=1e-8), f"FDCT blk {i}"
 
 
+def test_transforms_are_bit_stable_across_hosts():
+    """Both transform passes give exactly the bits of the in-order sum
+    with every product and partial sum rounded on its own (plain Python
+    floats).  A BLAS GEMM gives other bits on hosts whose OpenBLAS
+    kernel fuses multiply-add, and then a coefficient on a quantiser's
+    .5 boundary, and every md5 pinned over encoded bytes, follows the
+    host."""
+    from archive_pdf_tools_spark.kernels.jpegcodec import DCT_A, _blocks_mul
+
+    def mul_ref(a, b):
+        return [[sum_in_order(a[i][k] * b[k][j] for k in range(8))
+                 for j in range(8)] for i in range(8)]
+
+    def sum_in_order(terms):
+        terms = iter(terms)
+        acc = next(terms)
+        for t in terms:
+            acc += t
+        return acc
+
+    rng = np.random.default_rng(7)
+    coefs = rng.integers(-1024, 1024, size=(24, 8, 8)).astype(float)
+    pix = rng.integers(-128, 128, size=(24, 8, 8)).astype(float)
+    A, At = DCT_A.tolist(), DCT_A.T.tolist()
+    for blocks, left, right in ((coefs, At, A), (pix, A, At)):
+        got = _blocks_mul(blocks, np.array(left), np.array(right))
+        for i, blk in enumerate(blocks):
+            want = mul_ref(left, mul_ref(blk.tolist(), right))
+            assert got[i].tolist() == want, f"block {i}"
+
+
 def test_progressive_decodes_bit_identical_to_baseline():
     """SOF2 parity oracle: encode_progressive shares encode_baseline's
     quantized coefficients, so the decoded pixels must match the
