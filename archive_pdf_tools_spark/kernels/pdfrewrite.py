@@ -241,7 +241,7 @@ def recompress_pdf(pdf: bytes, hocr=None, fg_downsample: int = 3,
 
     Pages whose images cannot decode (gated codec profiles) keep those
     images untouched; their count lands in ``skipped``."""
-    from ..sources.hocr import iter_pages, page_word_data
+    from ..sources.hocr import word_data_by_page
     from ..sources.pdf_meta import (PdfError, _Reader, _dict_region,
                                     _stream_data,
                                     extract_page_images, parse_pdf)
@@ -262,10 +262,7 @@ def recompress_pdf(pdf: bytes, hocr=None, fg_downsample: int = 3,
     # not save an authenticated doc decrypted without its own decrypt
     # pass — this goes one step further than parity.)
 
-    word_data_by_page: dict[int, list] = {}
-    if hocr:
-        for idx, hp in enumerate(iter_pages(hocr)):
-            word_data_by_page[idx] = page_word_data(hp)
+    words_by_page = word_data_by_page(hocr)
 
     # oid -> replacement body; dropped image oids; appended new bodies
     rewritten: dict[int, bytes] = {}
@@ -357,7 +354,7 @@ def recompress_pdf(pdf: bytes, hocr=None, fg_downsample: int = 3,
         ops = b"\n".join(parts)
         page_changed = False
 
-        words = word_data_by_page.get(pidx, [])
+        words = words_by_page.get(pidx, [])
         for nm, oid, cont in todo:
             pat = re.compile(rb"/" + re.escape(nm) + rb"\s+Do\b")
             if not pat.search(ops):

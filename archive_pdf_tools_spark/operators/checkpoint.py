@@ -100,8 +100,9 @@ def run_sharded(documents_df, out_dir: str, shards: int, stage, metrics,
     """The shard-commit protocol shared by every front door:
     deterministic doc->shard assignment (``pmod(xxhash64(doc_id),
     shards)``); per uncommitted shard ``commit_unit(stage(shard_df),
-    ...)`` with the shard number appended to ``metrics``' row(s); an
-    atomic manifest rewrite after each.  Returns the manifest.
+    ...)``, whose ``metrics/shard=k`` directory carries the shard
+    number; an atomic manifest rewrite after each.  Returns the
+    manifest.
 
     ``stop_after_shards``: stop after committing that many shards THIS
     run (a deterministic stand-in for a mid-job kill, used by the
@@ -129,9 +130,7 @@ def run_sharded(documents_df, out_dir: str, shards: int, stage, metrics,
         if stop_after_shards is not None and done_this_run >= stop_after_shards:
             break
         commit_unit(stage(documents_df.where(shard_col == k)), out_dir,
-                    f"shard={k}", product_dir,
-                    lambda d: metrics(d).withColumn("shard", F.lit(k)),
-                    product)
+                    f"shard={k}", product_dir, metrics, product)
         committed.add(k)
         manifest["committed_shards"] = sorted(committed)
         _write_manifest(out_dir, manifest)

@@ -69,11 +69,11 @@ from ..kernels.mrc import mrc_mask_phase
 from ..kernels.optimise import (fast_mask_denoise_batch,
                                 optimise_gray2_batch, optimise_rgb2_batch)
 from ..kernels.textlayer import render_text_layer
-from ..pyworker import python_task
+from ..pyworker import number_spans, python_task
 
 __all__ = ["extract_one", "extract_document_local", "extract_spans",
-           "reassemble", "partition_metrics", "INTERMEDIATE_SCHEMA_DDL",
-           "OUTPUT_SCHEMA_DDL"]
+           "mrc_spans", "reassemble", "partition_metrics",
+           "INTERMEDIATE_SCHEMA_DDL", "OUTPUT_SCHEMA_DDL"]
 
 INTERMEDIATE_SCHEMA_DDL = (
     "doc_id string, in_offset int, page_kind string, ops_sha string, "
@@ -91,6 +91,22 @@ def _sha12(arr: np.ndarray) -> str:
     return hashlib.sha1(np.ascontiguousarray(arr).tobytes()).hexdigest()[:12]
 
 
+def mrc_spans(ref: str, word_data: list, decisions, mask: np.ndarray,
+              fg: np.ndarray, bg: np.ndarray) -> list[tuple[str, str, str]]:
+    """One MRC-decomposed image -> its output spans: the text of every
+    hOCR line the mask accepted, in line order, then one media span
+    ``<ref>#mrc=<mask>-<fg>-<bg>`` carrying the components' content
+    hashes."""
+    out = [("text", " ".join(
+                w["text"]
+                for w in word_data[d.para_idx]["lines"][d.line_idx]["words"]),
+            "")
+           for d in decisions if d.accepted]
+    out.append(("media", "",
+                f"{ref}#mrc={_sha12(mask)}-{_sha12(fg)}-{_sha12(bg)}"))
+    return out
+
+
 def _media_phase_a(media_ref: str, apply_denoise: bool = True):
     """Per-page part of the media path: raster, masks, line decisions.
     With ``apply_denoise=False`` the mask still needs the (batched)
@@ -102,23 +118,9 @@ def _media_phase_a(media_ref: str, apply_denoise: bool = True):
     word_data = spec_word_data(spec)
     mask, decisions, warnings = mrc_mask_phase(
         raster, word_data, dpi=spec["dpi"], apply_denoise=apply_denoise)
-    accepted = {(d.para_idx, d.line_idx) for d in decisions if d.accepted}
-    lines = []
-    for p_idx, para in enumerate(word_data):
-        for l_idx, line in enumerate(para["lines"]):
-            if (p_idx, l_idx) in accepted:
-                lines.append(" ".join(w["text"] for w in line["words"]))
     return {"bitonal": False, "spec": spec, "raster": raster, "mask": mask,
-            "lines": lines, "warnings": warnings}
-
-
-def _media_emit(media_ref: str, pa: dict, fg: np.ndarray,
-                bg: np.ndarray) -> list[tuple[str, str, str]]:
-    out = [("text", line_text, "") for line_text in pa["lines"]]
-    ref = (f"{media_ref}#mrc={_sha12(pa['mask'])}-"
-           f"{_sha12(fg)}-{_sha12(bg)}")
-    out.append(("media", "", ref))
-    return out
+            "word_data": word_data, "decisions": decisions,
+            "warnings": warnings}
 
 
 def extract_one(kind: str, text: str, media_ref: str):
@@ -160,7 +162,8 @@ def extract_one(kind: str, text: str, media_ref: str):
             else:
                 fg = optimise_gray2_batch(mask[None], raster[None], 3)[0]
                 bg = optimise_gray2_batch(~mask[None], raster[None], 10)[0]
-            out.extend(_media_emit(media_ref, pa, fg, bg))
+            out.extend(mrc_spans(media_ref, pa["word_data"],
+                                 pa["decisions"], mask, fg, bg))
     else:
         warnings.append(f"unknown-kind:{kind}")
 
@@ -203,9 +206,7 @@ def extract_document_local(doc: dict, skip_offsets=None,
             span["offset"], extract_one, span["kind"], span["text"],
             span["media_ref"])
         rows.extend(subs)
-    return {"doc_id": doc["doc_id"],
-            "spans": [{"kind": k, "text": t, "media_ref": m, "offset": i}
-                      for i, (k, t, m) in enumerate(rows)]}
+    return {"doc_id": doc["doc_id"], "spans": number_spans(rows)}
 
 
 @python_task
@@ -291,8 +292,10 @@ def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 share = (time.perf_counter() - t0) * 1000.0 / len(part)
                 for j, (slot, pa) in enumerate(part):
                     media_ref = rows[slot][4]
-                    results[slot] = (_media_emit(media_ref, pa, fg[j], bg[j]),
-                                     "", list(pa["warnings"]))
+                    results[slot] = (
+                        mrc_spans(media_ref, pa["word_data"],
+                                  pa["decisions"], pa["mask"], fg[j], bg[j]),
+                        "", list(pa["warnings"]))
                     elapsed[slot] += share
 
         yield pd.DataFrame({

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..pyworker import map_document_groups
+
 __all__ = ["imagestack_to_spans", "run_imagestack_checkpoint",
            "decode_page_image", "expand_item_pages"]
 
@@ -136,30 +138,24 @@ def _doc_rows(doc_id: str, pages: list, hocr) -> list[tuple]:
     per-image contract (hOCR-accepted MRC text lines + one
     content-addressed media span per page)."""
     from ..kernels.mrc import create_mrc_components
-    from ..sources.hocr import iter_pages, page_word_data
-    from .extract import _sha12
+    from ..sources.hocr import word_data_by_page
+    from .extract import mrc_spans
 
-    word_data_by_page: dict[int, list] = {}
-    if hocr:
-        for idx, page in enumerate(iter_pages(hocr)):
-            word_data_by_page[idx] = page_word_data(page)
+    words_by_page = word_data_by_page(hocr)
     pages, decode = expand_item_pages(pages)
     spans: list[tuple] = []
     for pidx, payload in pages:   # payload: page bytes, or a ZipInfo
-        raster = decode(payload, pidx)
-        words = word_data_by_page.get(pidx, [])
-        res = create_mrc_components(raster, words)
-        for dec in res.line_decisions:
-            if dec.accepted:
-                line = words[dec.para_idx]["lines"][dec.line_idx]
-                spans.append(
-                    ("text",
-                     " ".join(w["text"] for w in line["words"]), ""))
-        ref = (f"stack://{doc_id}/p{pidx}"
-               f"#mrc={_sha12(res.mask)}-{_sha12(res.foreground)}-"
-               f"{_sha12(res.background)}")
-        spans.append(("media", "", ref))
+        words = words_by_page.get(pidx, [])
+        res = create_mrc_components(decode(payload, pidx), words)
+        spans.extend(mrc_spans(f"stack://{doc_id}/p{pidx}", words,
+                               res.line_decisions, res.mask,
+                               res.foreground, res.background))
     return spans
+
+
+def _stack_error(msg: str) -> tuple:
+    """The error span of a failing imagestack document."""
+    return ("stack_error", msg, "")
 
 
 def imagestack_to_spans(df, image_col: str = "image",
@@ -171,37 +167,11 @@ def imagestack_to_spans(df, image_col: str = "image",
     whose single row has ``page_idx = -1`` is a WHOLE-DOCUMENT blob:
     the archival ``*_tif.zip`` item (pages = lexicographic entry
     order) or a multi-page TIFF (pages = next-IFD chain order)."""
-    import pandas as pd
-
     from ..operators.extract import OUTPUT_SCHEMA_DDL
 
-    has_hocr = hocr_col is not None and hocr_col in df.columns
-
-    def one_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id = pdf["doc_id"].iloc[0]
-        hocr = None
-        if has_hocr:
-            hv = pdf[hocr_col].dropna()
-            if len(hv):
-                hocr = hv.iloc[0]
-        pages = sorted(zip(pdf["page_idx"].values,
-                           pdf[image_col].values),
-                       key=lambda t: int(t[0]))
-        try:
-            rows = _doc_rows(doc_id, pages, hocr)
-        except Exception as exc:  # noqa: BLE001 — poison-doc guard
-            rows = [("stack_error",
-                     f"{type(exc).__name__}: {exc}"[:200], "")]
-        return pd.DataFrame({
-            "doc_id": [doc_id],
-            "spans": [[{"kind": k, "text": t, "media_ref": m,
-                        "offset": i}
-                       for i, (k, t, m) in enumerate(rows)]]})
-
-    cols = ["doc_id", "page_idx", image_col] + (
-        [hocr_col] if has_hocr else [])
-    return (df.select(*cols).groupBy("doc_id")
-            .applyInPandas(one_doc, schema=OUTPUT_SCHEMA_DDL))
+    first = [hocr_col if hocr_col in df.columns else None]
+    return map_document_groups(df, image_col, first, OUTPUT_SCHEMA_DDL,
+                               _doc_rows, _stack_error, spans=True)
 
 
 def run_imagestack_checkpoint(spark, df, out_dir: str,

@@ -22,13 +22,12 @@ hOCR scan coords disagree with the embedded image.
 
 from __future__ import annotations
 
-import hashlib
 import zlib
-from typing import Iterable, Iterator
 
 import numpy as np
 
-from ..pyworker import python_task
+from ..pyworker import map_documents
+from .extract import _sha12, mrc_spans
 
 __all__ = ["recode_existing_pdfs", "pdfs_to_spans", "recompress_pdfs",
            "run_pdf_checkpoint", "run_recompress_checkpoint",
@@ -40,45 +39,52 @@ PDFCOMP_SCHEMA_DDL = (
     "orig_bytes bigint, est_bytes bigint, error string")
 
 
-def _sha12(arr: np.ndarray) -> str:
-    return hashlib.sha1(np.ascontiguousarray(arr).tobytes()).hexdigest()[:12]
-
-
 def _est(arr: np.ndarray) -> int:
     return len(zlib.compress(np.ascontiguousarray(arr).tobytes(), 6))
 
 
-def _recode_one(doc_id: str, pdf: bytes, hocr) -> list[tuple]:
+def _image_pages(pdf: bytes, hocr, password: bytes | str = b""):
+    """The image-page walk both pdfcomp doors share: one structural
+    parse and one xref resolver per document (a per-page re-parse was
+    quadratic in page count).  Yields ``(page, reader, images)`` in page
+    order; ``images`` lazily yields ``(xref, raster, words, mrc)`` per
+    decodable image XObject, decomposed against the page's hOCR word
+    data."""
     from ..kernels.mrc import create_mrc_components
-    from ..sources.hocr import iter_pages, page_word_data
+    from ..sources.hocr import word_data_by_page
     from ..sources.pdf_meta import _Reader, extract_page_images, parse_pdf
 
-    word_data_by_page: dict[int, list] = {}
-    if hocr:
-        for idx, page in enumerate(iter_pages(hocr)):
-            word_data_by_page[idx] = page_word_data(page)
+    words_by_page = word_data_by_page(hocr)
+    meta = parse_pdf(pdf, password)
+    rd = _Reader(pdf, password)
 
-    # One structural parse + one xref resolver per document, shared by
-    # every page (the per-page re-parse was quadratic in page count).
-    meta = parse_pdf(pdf)
-    rd = _Reader(pdf)
-    rows = []
-    for page in meta["pages"]:
-        pidx = page["page_idx"]
-        words = word_data_by_page.get(pidx, [])
+    def images(pidx):
+        words = words_by_page.get(pidx, [])
         for xref, raster in extract_page_images(pdf, pidx, meta=meta, rd=rd):
-            res = create_mrc_components(raster, words)
-            accepted = sum(1 for d in res.line_decisions if d.accepted)
-            orig = raster.size  # uncompressed pixel bytes in the PDF
+            yield xref, raster, words, create_mrc_components(raster, words)
+
+    for page in meta["pages"]:
+        yield page, rd, images(page["page_idx"])
+
+
+def _recode_one(doc_id: str, pdf, hocr) -> list[tuple]:
+    """One PDF -> a ``PDFCOMP_SCHEMA_DDL`` row (after doc_id) per
+    recoded image XObject."""
+    rows = []
+    for page, _rd, images in _image_pages(bytes(pdf), hocr):
+        for xref, raster, _words, res in images:
             est = _est(res.mask) + _est(res.foreground) + _est(res.background)
-            rows.append((doc_id, pidx, xref,
-                         raster.shape[1], raster.shape[0], accepted,
+            rows.append((page["page_idx"], xref,
+                         raster.shape[1], raster.shape[0],
+                         sum(1 for d in res.line_decisions if d.accepted),
                          _sha12(res.mask), _sha12(res.foreground),
-                         _sha12(res.background), orig, est, None))
+                         _sha12(res.background),
+                         raster.size,  # uncompressed pixel bytes in the PDF
+                         est, None))
     return rows
 
 
-def _doc_spans(doc_id: str, pdf: bytes, hocr,
+def _doc_spans(doc_id: str, pdf, hocr=None,
                password: bytes | str = b"") -> list[tuple]:
     """One PDF document -> ordered (kind, text, media_ref) output spans.
 
@@ -88,22 +94,11 @@ def _doc_spans(doc_id: str, pdf: bytes, hocr,
     media span whose ref carries the content hashes of (mask, fg, bg) —
     the same content-addressed media contract the flagship pipeline
     emits (BASELINE.md codec boundary)."""
-    from ..kernels.mrc import create_mrc_components
-    from ..sources.hocr import iter_pages, page_word_data
-    from ..sources.pdf_meta import (_Reader, extract_page_images,
-                                    extract_text_strings, parse_pdf,
-                                    _stream_data, _get_ref)
+    from ..sources.pdf_meta import (extract_text_strings, _stream_data,
+                                    _get_ref)
 
-    word_data_by_page: dict[int, list] = {}
-    if hocr:
-        for idx, page in enumerate(iter_pages(hocr)):
-            word_data_by_page[idx] = page_word_data(page)
-
-    meta = parse_pdf(pdf, password)
-    rd = _Reader(pdf, password)
     spans: list[tuple] = []
-    for page in meta["pages"]:
-        pidx = page["page_idx"]
+    for page, rd, images in _image_pages(bytes(pdf), hocr, password):
         if page["has_text"]:
             content_id = _get_ref(rd.obj(page["oid"])[1], b"/Contents")
             body, d = rd.obj(content_id)
@@ -111,19 +106,11 @@ def _doc_spans(doc_id: str, pdf: bytes, hocr,
                     body, d, rd._decrypter(content_id))):
                 if s.strip():
                     spans.append(("text", s, ""))
-        words = word_data_by_page.get(pidx, [])
-        for xref, raster in extract_page_images(pdf, pidx, meta=meta, rd=rd):
-            res = create_mrc_components(raster, words)
-            for dec in res.line_decisions:
-                if dec.accepted:
-                    line = words[dec.para_idx]["lines"][dec.line_idx]
-                    spans.append(("text",
-                                  " ".join(w["text"] for w in line["words"]),
-                                  ""))
-            ref = (f"pdf://{doc_id}/p{pidx}/x{xref}"
-                   f"#mrc={_sha12(res.mask)}-{_sha12(res.foreground)}-"
-                   f"{_sha12(res.background)}")
-            spans.append(("media", "", ref))
+        for xref, _raster, words, res in images:
+            spans.extend(mrc_spans(
+                f"pdf://{doc_id}/p{page['page_idx']}/x{xref}", words,
+                res.line_decisions, res.mask, res.foreground,
+                res.background))
     return spans
 
 
@@ -134,39 +121,17 @@ def pdfs_to_spans(df, pdf_col: str = "pdf", hocr_col: str | None = "hocr",
     points spark-submit at a table of PDFs and gets the recoded span
     table, shard-checkpointed like every other front door.
     ``password`` opens user/owner-password-protected inputs (one
-    corpus-wide password, the batch-job shape; per-doc failures still
-    degrade to the pdf_error span)."""
-    import pandas as pd
-
+    corpus-wide password, the batch-job shape); a document that fails
+    gives one ``pdf_error`` span."""
     from ..operators.extract import OUTPUT_SCHEMA_DDL
-
-    @python_task
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdfb in batches:
-            ids, spans_col = [], []
-            hocrs = (pdfb[hocr_col].values
-                     if hocr_col and hocr_col in pdfb.columns
-                     else [None] * len(pdfb))
-            for doc_id, blob, hocr in zip(pdfb["doc_id"].values,
-                                          pdfb[pdf_col].values, hocrs):
-                try:
-                    rows = _doc_spans(doc_id, bytes(blob), hocr,
-                                      password)
-                except Exception as exc:  # noqa: BLE001 — poison-doc guard
-                    # same observable-failure contract as the HTML front
-                    # door's html_error span: the failing document stays
-                    # in the output, marked, never silently emptied
-                    rows = [("pdf_error",
-                             f"{type(exc).__name__}: {exc}"[:200], "")]
-                ids.append(doc_id)
-                spans_col.append([
-                    {"kind": k, "text": t, "media_ref": m, "offset": i}
-                    for i, (k, t, m) in enumerate(rows)])
-            yield pd.DataFrame({"doc_id": ids, "spans": spans_col})
 
     cols = ["doc_id", pdf_col] + (
         [hocr_col] if hocr_col and hocr_col in df.columns else [])
-    return df.select(*cols).mapInPandas(gen, schema=OUTPUT_SCHEMA_DDL)
+    return map_documents(
+        df, cols, OUTPUT_SCHEMA_DDL,
+        lambda doc_id, blob, hocr=None: _doc_spans(doc_id, blob, hocr,
+                                                   password),
+        lambda msg: ("pdf_error", msg, ""), spans=True)
 
 
 def run_pdf_checkpoint(spark, pdf_df, out_dir: str, shards: int = 16,
@@ -185,28 +150,12 @@ def run_pdf_checkpoint(spark, pdf_df, out_dir: str, shards: int = 16,
 
 
 def recode_existing_pdfs(df, pdf_col: str = "pdf", hocr_col: str = "hocr"):
-    """(doc_id, pdf, hocr) -> one row per recoded image XObject."""
-    import pandas as pd
-
-    @python_task
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "page_idx", "xref", "src_w", "src_h",
-                "accepted_lines", "mask_sha", "fg_sha", "bg_sha",
-                "orig_bytes", "est_bytes", "error"]
-        for pdfb in batches:
-            rows = []
-            for doc_id, blob, hocr in zip(pdfb["doc_id"].values,
-                                          pdfb[pdf_col].values,
-                                          pdfb[hocr_col].values):
-                try:
-                    rows.extend(_recode_one(doc_id, bytes(blob), hocr))
-                except Exception as exc:  # noqa: BLE001 — poison-doc guard
-                    rows.append((doc_id, -1, -1, 0, 0, 0, "", "", "",
-                                 0, 0, f"{type(exc).__name__}"))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("doc_id", pdf_col, hocr_col).mapInPandas(
-        gen, schema=PDFCOMP_SCHEMA_DDL)
+    """(doc_id, pdf, hocr) -> one row per recoded image XObject; a
+    failing document gives one ``page_idx = -1`` row with ``error``
+    set."""
+    return map_documents(
+        df, ["doc_id", pdf_col, hocr_col], PDFCOMP_SCHEMA_DDL, _recode_one,
+        lambda msg: (-1, -1, 0, 0, 0, "", "", "", 0, 0, msg))
 
 
 RECOMPRESS_SCHEMA_DDL = (
@@ -229,46 +178,21 @@ def recompress_pdfs(df, pdf_col: str = "pdf",
     (``password`` opens user/owner-protected corpora).
 
     Scale shape: one ``mapInPandas`` stage (the document row already
-    holds everything the rewrite needs — no shuffle at all); a poison
-    document (wrong password, malformed) degrades to a NULL pdf with
-    the error recorded, never a failed task."""
-    import pandas as pd
-
+    holds everything the rewrite needs — no shuffle at all); a failing
+    document gives a NULL pdf with ``error`` set."""
     from ..kernels.pdfrewrite import recompress_pdf
 
-    has_hocr = hocr_col is not None and hocr_col in df.columns
+    def doc(doc_id, blob, hocr=None):
+        r = recompress_pdf(bytes(blob), hocr, fg_downsample=fg_downsample,
+                           bg_downsample=bg_downsample, password=password)
+        return [(bytearray(r.pdf), r.n_pages, r.n_images, r.skipped,
+                 r.orig_image_bytes, r.new_image_bytes, None)]
 
-    @python_task
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdfb in batches:
-            rows = []
-            hocrs = (pdfb[hocr_col].values if has_hocr
-                     else [None] * len(pdfb))
-            for doc_id, blob, hocr in zip(pdfb["doc_id"].values,
-                                          pdfb[pdf_col].values, hocrs):
-                try:
-                    r = recompress_pdf(
-                        bytes(blob), hocr,
-                        fg_downsample=fg_downsample,
-                        bg_downsample=bg_downsample,
-                        password=password)
-                    rows.append((doc_id, bytearray(r.pdf),
-                                 np.int32(r.n_pages),
-                                 np.int32(r.n_images),
-                                 np.int32(r.skipped),
-                                 r.orig_image_bytes,
-                                 r.new_image_bytes, None))
-                except Exception as exc:  # noqa: BLE001 — poison guard
-                    rows.append((doc_id, None, np.int32(0),
-                                 np.int32(0), np.int32(0), 0, 0,
-                                 f"{type(exc).__name__}: {exc}"[:200]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "pdf", "n_pages", "n_images", "skipped",
-                "orig_image_bytes", "new_image_bytes", "error"])
-
-    cols = ["doc_id", pdf_col] + ([hocr_col] if has_hocr else [])
-    return df.select(*cols).mapInPandas(gen,
-                                        schema=RECOMPRESS_SCHEMA_DDL)
+    cols = ["doc_id", pdf_col] + (
+        [hocr_col] if hocr_col is not None and hocr_col in df.columns
+        else [])
+    return map_documents(df, cols, RECOMPRESS_SCHEMA_DDL, doc,
+                         lambda msg: (None, 0, 0, 0, 0, 0, msg))
 
 
 def run_recompress_checkpoint(spark, pdf_df, out_dir: str,

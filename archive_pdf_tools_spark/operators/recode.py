@@ -9,13 +9,14 @@ and assemble into one PDF per document (``kernels/pdfsink.py``).
 Scale shape: identical to the other front doors — ONE shuffle (the
 per-doc regroup), every page decode / MRC / encode / assembly step
 inside the grouped UDF, no driver-side state.  Output rows are
-(doc_id, pdf binary, n_pages, n_text_lines); a poison document
-degrades to a NULL pdf with the error recorded, never a failed task.
+(doc_id, pdf binary, n_pages, n_text_lines, error).
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from ..pyworker import map_document_groups
 
 __all__ = ["recode_to_pdf", "recode_document",
            "run_recode_checkpoint"]
@@ -133,13 +134,10 @@ def recode_document(pages: list, hocr, fg_downsample=3,
     from ..kernels.pages import downsample_box, parse_hq_pages
     from ..kernels.pdfsink import build_mrc_pdf, page_labels_pdf
     from ..kernels.textlayer import render_text_layer
-    from ..sources.hocr import iter_pages, page_word_data
+    from ..sources.hocr import word_data_by_page
     from .imagestack import expand_item_pages
 
-    word_data_by_page: dict[int, list] = {}
-    if hocr:
-        for idx, hp in enumerate(iter_pages(hocr)):
-            word_data_by_page[idx] = page_word_data(hp)
+    words_by_page = word_data_by_page(hocr)
 
     outline = None
     page_labels = None
@@ -181,7 +179,7 @@ def recode_document(pages: list, hocr, fg_downsample=3,
             raster = special_gray_convert(raster)
         if downsample is not None:
             raster, _warn = downsample_box(raster, downsample)
-        words = word_data_by_page.get(int(pidx), [])
+        words = words_by_page.get(int(pidx), [])
         text_ops = b""
         if words:
             h, w = raster.shape[:2]
@@ -261,48 +259,21 @@ def recode_to_pdf(df, image_col: str = "image",
     driver, not a thousand executors mid-job."""
     import inspect
 
-    import pandas as pd
-
     allowed = set(inspect.signature(recode_document).parameters)
     bad = set(recode_opts) - allowed
     if bad:
         raise TypeError(f"unknown recode option(s): {sorted(bad)}")
 
-    has_hocr = hocr_col is not None and hocr_col in df.columns
-    has_sd = scandata_col is not None and scandata_col in df.columns
+    def doc(doc_id, pages, hocr, scandata):
+        pdf, n_pages, n_lines = recode_document(
+            pages, hocr, fg_downsample=fg_downsample,
+            bg_downsample=bg_downsample, scandata=scandata, **recode_opts)
+        return [(bytearray(pdf), n_pages, n_lines, None)]
 
-    def _first(pdf_rows, col):
-        hv = pdf_rows[col].dropna()
-        return hv.iloc[0] if len(hv) else None
-
-    def one_doc(pdf_rows: pd.DataFrame) -> pd.DataFrame:
-        doc_id = pdf_rows["doc_id"].iloc[0]
-        hocr = _first(pdf_rows, hocr_col) if has_hocr else None
-        sd = _first(pdf_rows, scandata_col) if has_sd else None
-        pages = sorted(zip(pdf_rows["page_idx"].values,
-                           pdf_rows[image_col].values),
-                       key=lambda t: int(t[0]))
-        try:
-            pdf, n_pages, n_lines = recode_document(
-                pages, hocr, fg_downsample=fg_downsample,
-                bg_downsample=bg_downsample, scandata=sd,
-                **recode_opts)
-            err = None
-        except Exception as exc:  # noqa: BLE001 — poison-doc guard
-            pdf, n_pages, n_lines = None, 0, 0
-            err = f"{type(exc).__name__}: {exc}"[:200]
-        return pd.DataFrame({
-            "doc_id": [doc_id],
-            "pdf": [bytearray(pdf) if pdf is not None else None],
-            "n_pages": [np.int32(n_pages)],
-            "n_text_lines": [np.int32(n_lines)],
-            "error": [err]})
-
-    cols = ["doc_id", "page_idx", image_col] + (
-        [hocr_col] if has_hocr else []) + (
-        [scandata_col] if has_sd else [])
-    return (df.select(*cols).groupBy("doc_id")
-            .applyInPandas(one_doc, schema=OUTPUT_DDL))
+    first = [c if c in df.columns else None
+             for c in (hocr_col, scandata_col)]
+    return map_document_groups(df, image_col, first, OUTPUT_DDL, doc,
+                               lambda msg: (None, 0, 0, msg))
 
 
 def run_recode_checkpoint(spark, df, out_dir: str,

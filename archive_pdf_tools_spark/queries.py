@@ -1390,13 +1390,8 @@ def q_recode_pdf(spark, sf):
                     # recompute the expected mask from the source page
                     from .kernels.mrc import create_mrc_components
                     from .operators.imagestack import decode_page_image
-                    from .sources.hocr import iter_pages, page_word_data
-                    wd = []
-                    if hocr:
-                        for k2, hp in enumerate(iter_pages(hocr)):
-                            if k2 == pidx:
-                                wd = page_word_data(hp)
-                                break
+                    from .sources.hocr import word_data_by_page
+                    wd = word_data_by_page(hocr).get(pidx, [])
                     raster = decode_page_image(bytes(pages[pidx][1]))
                     res = create_mrc_components(
                         raster, wd, fg_downsample=3, bg_downsample=3)
@@ -1680,7 +1675,7 @@ def q_pdfcomp_pdf(spark, sf):
         from .kernels.jbig2codec import decode_jbig2
         from .kernels.mrc import create_mrc_components
         from .kernels.pdfrewrite import recompress_pdf
-        from .sources.hocr import iter_pages, page_word_data
+        from .sources.hocr import word_data_by_page
         from .sources.pdf_meta import (_Reader, _stream_data,
                                        extract_page_images, parse_pdf)
 
@@ -1754,10 +1749,7 @@ def q_pdfcomp_pdf(spark, sf):
                               if p["has_text"])
                 text_out = sum(1 for p in meta_out["pages"]
                                if p["has_text"])
-                words_by_page: dict[int, list] = {}
-                if hocr:
-                    for k2, hp in enumerate(iter_pages(hocr)):
-                        words_by_page[k2] = page_word_data(hp)
+                words_by_page = word_data_by_page(hocr)
                 out_xrefs: list[int] = []
                 smask_exact = True
                 for p in meta_out["pages"]:

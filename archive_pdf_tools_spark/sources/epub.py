@@ -31,9 +31,7 @@ computes the same outputs from public structure only:
   the document-information/XMP metadata — producer/creator defaults
   mirroring the reference's fallback behavior.
 
-Scale shape: one EPUB = one ``mapInPandas`` row (``epubs_to_pdf``),
-the same per-document poison-degradation contract as the PDF front
-doors.
+Scale shape: one EPUB = one ``mapInPandas`` row (``epubs_to_pdf``).
 """
 
 from __future__ import annotations
@@ -44,7 +42,7 @@ import re
 import zipfile
 from xml.etree import ElementTree as ET
 
-from ..pyworker import python_task
+from ..pyworker import map_documents
 
 __all__ = ["EpubError", "parse_epub", "epub_to_pdf", "epubs_to_pdf",
            "EPUB_SCHEMA_DDL"]
@@ -300,30 +298,16 @@ EPUB_SCHEMA_DDL = ("doc_id string, pdf binary, n_pages int, "
                    "skipped_links int, error string")
 
 
+def _epub_row(doc_id, blob) -> list[tuple]:
+    pdf, st = epub_to_pdf(bytes(blob))
+    return [(bytearray(pdf), st["n_pages"], st["n_chapters"],
+             st["toc_count"], st["ext_links"], st["skipped_links"], None)]
+
+
 def epubs_to_pdf(df, epub_col: str = "epub", id_col: str = "doc_id"):
     """(doc_id, epub binary) -> one finished PDF per book, with the
-    link/TOC accounting the reference prints.  Map-only; poison-doc
-    NULL degradation."""
-    import pandas as pd
-
-    @python_task
-    def gen(batches):
-        for rows in batches:
-            out = []
-            for doc_id, blob in zip(rows[id_col].values,
-                                    rows[epub_col].values):
-                try:
-                    pdf, st = epub_to_pdf(bytes(blob))
-                    out.append((doc_id, bytearray(pdf),
-                                st["n_pages"], st["n_chapters"],
-                                st["toc_count"], st["ext_links"],
-                                st["skipped_links"], None))
-                except Exception as exc:  # noqa: BLE001
-                    out.append((doc_id, None, 0, 0, 0, 0, 0,
-                                f"{type(exc).__name__}: {exc}"[:200]))
-            yield pd.DataFrame(out, columns=[
-                "doc_id", "pdf", "n_pages", "n_chapters", "toc_count",
-                "ext_links", "skipped_links", "error"])
-
-    return df.select(id_col, epub_col).mapInPandas(
-        gen, schema=EPUB_SCHEMA_DDL)
+    link/TOC accounting the reference prints.  Map-only; a failing book
+    gives a NULL pdf with ``error`` set."""
+    return map_documents(df, [id_col, epub_col], EPUB_SCHEMA_DDL,
+                         _epub_row,
+                         lambda msg: (None, 0, 0, 0, 0, 0, msg))

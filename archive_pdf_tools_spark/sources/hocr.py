@@ -28,13 +28,13 @@ from __future__ import annotations
 
 import io
 import json
-from typing import Iterable, Iterator
+from typing import Iterator
 
-from ..pyworker import python_task
+from ..pyworker import map_documents
 
 __all__ = ["parse_properties", "iter_pages", "page_dimensions",
            "page_scan_res", "page_word_data", "page_payload",
-           "hocr_documents"]
+           "word_data_by_page", "hocr_documents"]
 
 _LINE_CLASSES = frozenset(
     {"ocr_line", "ocr_header", "ocr_caption", "ocr_textfloat"})
@@ -279,32 +279,24 @@ def page_payload(page, doc_dpi=None) -> str:
     }, ensure_ascii=False, sort_keys=True)
 
 
-def _convert_batches(hocr_col: str, dpi_col):
+def word_data_by_page(markup) -> dict[int, list]:
+    """hOCR markup -> {page index: ``page_word_data``} in document
+    order; empty for absent (None or empty) markup."""
+    if not markup:
+        return {}
+    return {idx: page_word_data(page)
+            for idx, page in enumerate(iter_pages(markup))}
+
+
+def _page_spans(doc_id, markup, dpi=None):
+    """One document's text spans, one per page.  A generator, so markup
+    that breaks mid-stream keeps the pages parsed before the error,
+    followed by the ``hocr_error`` marker."""
     import pandas as pd
 
-    @python_task
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dpis = pdf[dpi_col].values if dpi_col else [None] * len(pdf)
-            out_ids, out_spans = [], []
-            for doc_id, markup, dpi in zip(pdf["doc_id"].values,
-                                           pdf[hocr_col].values, dpis):
-                dpi = None if dpi is None or pd.isna(dpi) else int(dpi)
-                spans = []
-                try:
-                    for idx, page in enumerate(iter_pages(markup)):
-                        spans.append({"kind": "text",
-                                      "text": page_payload(page, dpi),
-                                      "media_ref": "", "offset": idx})
-                except Exception:  # noqa: BLE001 — malformed markup must
-                    # not kill the job; the document surfaces with an
-                    # error span the metrics table can count.
-                    spans.append({"kind": "hocr_error", "text": "",
-                                  "media_ref": "", "offset": len(spans)})
-                out_ids.append(doc_id)
-                out_spans.append(spans)
-            yield pd.DataFrame({"doc_id": out_ids, "spans": out_spans})
-    return gen
+    dpi = None if dpi is None or pd.isna(dpi) else int(dpi)
+    for page in iter_pages(markup):
+        yield "text", page_payload(page, dpi), ""
 
 
 def hocr_documents(df, hocr_col: str = "hocr", dpi_col: str | None = None):
@@ -318,9 +310,8 @@ def hocr_documents(df, hocr_col: str = "hocr", dpi_col: str | None = None):
     in Python plus a corpus-sized Jackson ``from_json`` in the JVM."""
     from .corpus_source import SPANS_STRUCT_DDL
 
-    cols = ["doc_id", hocr_col] + ([dpi_col] if dpi_col else [])
-    src = df.select(*cols)
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    return src.mapInPandas(
-        _convert_batches(hocr_col, dpi_col),
-        schema=f"doc_id {id_type}, spans {SPANS_STRUCT_DDL}")
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return map_documents(
+        df, ["doc_id", hocr_col] + ([dpi_col] if dpi_col else []),
+        f"doc_id {id_type}, spans {SPANS_STRUCT_DDL}", _page_spans,
+        lambda msg: ("hocr_error", msg, ""), spans=True)

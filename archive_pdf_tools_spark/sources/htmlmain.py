@@ -25,7 +25,6 @@ page-at-a-time); the whole extractor is one map-only vectorized stage
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator
 
 __all__ = ["extract_main_spans", "html_documents"]
 
@@ -47,7 +46,7 @@ _VOID_TAGS = frozenset({"area", "base", "br", "col", "embed", "hr", "img",
 from html.parser import HTMLParser as _HTMLParser
 from xml.etree import ElementTree as _ET
 
-from ..pyworker import python_task
+from ..pyworker import map_documents
 
 
 class _Builder(_HTMLParser):
@@ -189,9 +188,21 @@ def extract_main_spans(markup: bytes | str, min_words: int = 3,
     return spans
 
 
+def _html_spans(doc_id, markup, payloads: bool) -> list[tuple]:
+    """One document's ``(kind, text, media_ref)`` spans; with
+    ``payloads`` each text span's prose is laid out as the extraction
+    kernel's page payload."""
+    if payloads:
+        from .spans_from_text import layout_text
+    return [(s["kind"],
+             layout_text(s["text"]) if payloads and s["kind"] == "text"
+             else s["text"], s["media_ref"])
+            for s in extract_main_spans(markup)]
+
+
 def html_documents(df, html_col: str = "html", payloads: bool = False):
     """(doc_id, html) -> interleaved (doc_id, spans); malformed markup
-    yields an ``html_error`` span instead of failing the job.
+    gives an ``html_error`` span.
 
     ``payloads=True`` additionally lays each text span's plain prose out
     as the extraction kernel's hOCR-like page payload
@@ -199,32 +210,11 @@ def html_documents(df, html_col: str = "html", payloads: bool = False):
     ``run_extraction`` directly (the job.py ``--input-format html``
     path); with the default False the spans carry the raw main text
     (the analysis-table shape the ``html_extract`` query checks)."""
-    import pandas as pd
-
     from .corpus_source import SPANS_STRUCT_DDL
 
-    @python_task
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if payloads:
-            from .spans_from_text import layout_text
-        for pdf in batches:
-            ids, out = [], []
-            for doc_id, markup in zip(pdf["doc_id"].values,
-                                      pdf[html_col].values):
-                try:
-                    spans = extract_main_spans(markup)
-                    if payloads:
-                        for s in spans:
-                            if s["kind"] == "text":
-                                s["text"] = layout_text(s["text"])
-                except Exception:  # noqa: BLE001 — poison-doc guard
-                    spans = [{"kind": "html_error", "text": "",
-                              "media_ref": "", "offset": 0}]
-                ids.append(doc_id)
-                out.append(spans)
-            yield pd.DataFrame({"doc_id": ids, "spans": out})
-
-    src = df.select("doc_id", html_col)
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    return src.mapInPandas(
-        gen, schema=f"doc_id {id_type}, spans {SPANS_STRUCT_DDL}")
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return map_documents(
+        df, ["doc_id", html_col],
+        f"doc_id {id_type}, spans {SPANS_STRUCT_DDL}",
+        lambda doc_id, markup: _html_spans(doc_id, markup, payloads),
+        lambda msg: ("html_error", msg, ""), spans=True)

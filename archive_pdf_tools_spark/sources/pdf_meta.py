@@ -33,7 +33,7 @@ from __future__ import annotations
 import re
 import zlib
 
-from ..pyworker import python_task
+from ..pyworker import map_documents
 
 __all__ = ["parse_pdf", "pdf_metadata", "PDF_META_SCHEMA_DDL"]
 
@@ -1107,37 +1107,22 @@ PDF_META_SCHEMA_DDL = (
 )
 
 
+def _page_rows(doc_id, blob) -> list[tuple]:
+    meta = parse_pdf(bytes(blob))
+    return [(page["page_idx"], float(page["width"]), float(page["height"]),
+             page["rotate"], page["n_images"], page["has_text"],
+             meta["recommended_format"], meta["scale"],
+             [(im["xref"], im["width"], im["height"], im["bits"],
+               im["mode"], im["format"]) for im in page["images"]],
+             [(ln["uri"], ln["xref"], ln["bbox"]) for ln in page["links"]],
+             None)
+            for page in meta["pages"]]
+
+
 def pdf_metadata(df, pdf_col: str = "pdf", id_col: str = "doc_id"):
-    """(doc_id, pdf binary) -> per-page metadata rows (mapInPandas)."""
-    import pandas as pd
-
-    @python_task
-    def _parse(batches):
-        for pdf_batch in batches:
-            rows = []
-            for doc_id, blob in zip(pdf_batch[id_col].values,
-                                    pdf_batch[pdf_col].values):
-                try:
-                    meta = parse_pdf(bytes(blob))
-                except (PdfError, Exception) as exc:  # noqa: BLE001
-                    rows.append((doc_id, -1, 0.0, 0.0, 0, 0, False,
-                                 "NONE", 0.0, [], [], str(exc)[:200]))
-                    continue
-                for page in meta["pages"]:
-                    rows.append((
-                        doc_id, page["page_idx"], float(page["width"]),
-                        float(page["height"]), page["rotate"],
-                        page["n_images"], page["has_text"],
-                        meta["recommended_format"], meta["scale"],
-                        [(im["xref"], im["width"], im["height"], im["bits"],
-                          im["mode"], im["format"])
-                         for im in page["images"]],
-                        [(ln["uri"], ln["xref"], ln["bbox"])
-                         for ln in page["links"]], None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "page_idx", "width", "height", "rotate",
-                "n_images", "has_text", "recommended_format", "scale",
-                "images", "links", "parse_error"])
-
-    return df.select(id_col, pdf_col).mapInPandas(
-        _parse, schema=PDF_META_SCHEMA_DDL)
+    """(doc_id, pdf binary) -> per-page metadata rows (mapInPandas); an
+    unparseable PDF gives one ``page_idx = -1`` row with
+    ``parse_error`` set."""
+    return map_documents(
+        df, [id_col, pdf_col], PDF_META_SCHEMA_DDL, _page_rows,
+        lambda msg: (-1, 0.0, 0.0, 0, 0, False, "NONE", 0.0, [], [], msg))

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
-from ..pyworker import python_task
+from ..pyworker import map_documents
 
 __all__ = ["parse_scandata", "scandata_df"]
 
@@ -101,28 +101,21 @@ SCANDATA_SCHEMA_DDL = (
     "doc_id string, skip_pages array<int>, page_numbers array<string>, "
     "dpi_per_page array<int>, document_dpi int, "
     "toc array<struct<title:string,level:int,label:string,leaf:string,"
-    "accessible_page:int>>"
+    "accessible_page:int>>, error string"
 )
 
 
+def _scandata_row(doc_id, xml_str) -> list[tuple]:
+    m = parse_scandata(xml_str)
+    return [(m["skip_pages"], m["page_numbers"], m["dpi_per_page"],
+             m["document_dpi"],
+             [(t["title"], t["level"], t["label"], t["leaf"],
+               t["accessible_page"]) for t in m["toc"]], None)]
+
+
 def scandata_df(df, xml_col: str = "scandata_xml", id_col: str = "doc_id"):
-    """(doc_id, scandata_xml) -> parsed metadata rows via mapInPandas."""
-    import pandas as pd
-
-    @python_task
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, xml_str in zip(pdf[id_col].values,
-                                       pdf[xml_col].values):
-                m = parse_scandata(xml_str)
-                rows.append((doc_id, m["skip_pages"], m["page_numbers"],
-                             m["dpi_per_page"], m["document_dpi"],
-                             [(t["title"], t["level"], t["label"], t["leaf"],
-                               t["accessible_page"]) for t in m["toc"]]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "skip_pages", "page_numbers", "dpi_per_page",
-                "document_dpi", "toc"])
-
-    return df.select(id_col, xml_col).mapInPandas(
-        _parse, schema=SCANDATA_SCHEMA_DDL)
+    """(doc_id, scandata_xml) -> parsed metadata rows via mapInPandas;
+    malformed XML gives a row of nulls with ``error`` set."""
+    return map_documents(df, [id_col, xml_col], SCANDATA_SCHEMA_DDL,
+                         _scandata_row,
+                         lambda msg: (None, None, None, None, None, msg))

@@ -70,37 +70,23 @@ _STACK_STATE_DDL = ("idxs array<int>, blobs array<binary>, hocr binary, "
                     "expected int")
 
 
-def _stack_rows(doc_id: str, idxs, blobs, hocr):
-    """Assemble one document's spans from accumulated pages — the BATCH
-    per-doc kernel (``operators/imagestack._doc_rows``), so stream and
-    batch output are the same function of the same pages."""
-    from ..operators.imagestack import _doc_rows
-
-    pages = sorted(((int(i), bytes(b)) for i, b in zip(idxs, blobs)),
-                   key=lambda t: t[0])
-    try:
-        return _doc_rows(doc_id, pages,
-                         bytes(hocr) if hocr is not None else None)
-    except Exception as exc:  # noqa: BLE001 — poison-doc guard
-        return [("stack_error",
-                 f"{type(exc).__name__}: {exc}"[:200], "")]
-
-
 def _make_assemble(hocr_col, expected_col, idle_flush_ms):
+    from ..operators.imagestack import _doc_rows, _stack_error
+    from ..pyworker import document_group
+
+    # the BATCH per-doc body, so stream and batch output are the same
+    # function of the same pages
+    one_doc = document_group(OUTPUT_SCHEMA_DDL, _doc_rows, _stack_error,
+                             "image", ["hocr"], spans=True)
+
     def assemble(key, pdf_iter, state):
         import pandas as pd
 
         (doc_id,) = key
 
-        def spans_pdf(rows):
-            return pd.DataFrame({
-                "doc_id": [doc_id],
-                "spans": [[{"kind": k, "text": t, "media_ref": m,
-                            "offset": i}
-                           for i, (k, t, m) in enumerate(rows)]]})
-
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype=object),
-                              "spans": pd.Series([], dtype=object)})
+        def spans_pdf(idxs, blobs, hocr):
+            return one_doc(pd.DataFrame({"doc_id": doc_id, "page_idx": idxs,
+                                         "image": blobs, "hocr": hocr}))
 
         if state.exists:
             idxs, blobs, hocr, expected = state.get
@@ -113,16 +99,16 @@ def _make_assemble(hocr_col, expected_col, idle_flush_ms):
             # is observable as missing trailing pages, never silent
             # partial-duplicate rows) and free the state row.
             state.remove()
-            yield spans_pdf(_stack_rows(doc_id, idxs, blobs, hocr))
+            yield spans_pdf(idxs, blobs, hocr)
             return
 
         for pdf in pdf_iter:
             idxs.extend(int(v) for v in pdf["page_idx"].values)
             blobs.extend(bytes(v) for v in pdf["image"].values)
-            if hocr_col and hocr_col in pdf.columns:
+            if hocr is None and hocr_col and hocr_col in pdf.columns:
                 hv = pdf[hocr_col].dropna()
                 if len(hv):
-                    hocr = bytes(hv.iloc[-1])
+                    hocr = bytes(hv.iloc[0])
             if expected_col in pdf.columns:
                 ev = pdf[expected_col].dropna()
                 if len(ev):
@@ -132,13 +118,14 @@ def _make_assemble(hocr_col, expected_col, idle_flush_ms):
 
         if expected >= 0 and len(idxs) >= expected:
             state.remove()
-            yield spans_pdf(_stack_rows(doc_id, idxs, blobs, hocr))
+            yield spans_pdf(idxs, blobs, hocr)
             return
 
         state.update((idxs, blobs, hocr, expected))
         if idle_flush_ms is not None:
             state.setTimeoutDuration(int(idle_flush_ms))
-        yield empty
+        yield pd.DataFrame({"doc_id": pd.Series([], dtype=object),
+                            "spans": pd.Series([], dtype=object)})
 
     return assemble
 
@@ -162,16 +149,16 @@ def stream_imagestack(spark, in_path: str, out_dir: str,
       ONE complete span row, the moment its declared page count has
       arrived.  Whole-item rows (``page_idx = -1``) complete
       immediately.  ``idle_flush_ms`` optionally flushes a quiescent
-      incomplete doc (bounded state for lossy feeds).  Output goes
-      through the streaming parquet sink, whose ``_spark_metadata``
-      manifest makes the file commit exactly-once.
+      incomplete doc (bounded state for lossy feeds).
     * **per-batch** (no ``n_pages``): the batch operator runs per
-      micro-batch via ``foreachBatch``, and ``commit_unit`` writes
-      ``spans/batch=<id>`` and its doc/span-count row to
-      ``metrics/batch=<id>``, both overwriting (idempotent on replay);
-      a document must then land within one micro-batch (the archival
-      ``*_tif.zip`` whole-item shape always does — it is a single
-      row)."""
+      micro-batch; a document must then land within one micro-batch
+      (the archival ``*_tif.zip`` whole-item shape always does — it is
+      a single row).
+
+    Both modes commit through ``foreachBatch``: ``commit_unit`` writes
+    the micro-batch's spans to ``spans/batch=<id>`` and its
+    doc/span-count row to ``metrics/batch=<id>``, both overwriting, so
+    a replayed micro-batch adds no duplicate rows."""
     from ..operators.imagestack import imagestack_to_spans
 
     if checkpoint_dir is None:
@@ -191,32 +178,26 @@ def stream_imagestack(spark, in_path: str, out_dir: str,
         f", {expected_col} int" if have_expected else "")
     stream = spark.readStream.schema(schema).parquet(in_path)
 
-    if not have_expected:
-        def process_batch(batch_df, batch_id: int):
-            commit_unit(imagestack_to_spans(batch_df, hocr_col=hocr_col),
-                        out_dir, f"batch={batch_id}", "spans",
-                        span_count_metrics)
+    if have_expected:
+        from pyspark.sql.streaming.state import GroupStateTimeout
 
-        writer = (stream.writeStream
-                  .foreachBatch(process_batch)
-                  .option("checkpointLocation", checkpoint_dir))
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        timeout = (GroupStateTimeout.NoTimeout if idle_flush_ms is None
+                   else GroupStateTimeout.ProcessingTimeTimeout)
+        stream = (stream.groupBy("doc_id")
+                  .applyInPandasWithState(
+                      _make_assemble(hocr_col, expected_col, idle_flush_ms),
+                      OUTPUT_SCHEMA_DDL, _STACK_STATE_DDL, "append",
+                      timeout))
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    def process_batch(batch_df, batch_id: int):
+        staged = (batch_df if have_expected
+                  else imagestack_to_spans(batch_df, hocr_col=hocr_col))
+        commit_unit(staged, out_dir, f"batch={batch_id}", "spans",
+                    span_count_metrics)
 
-    timeout = (GroupStateTimeout.NoTimeout if idle_flush_ms is None
-               else GroupStateTimeout.ProcessingTimeTimeout)
-    spans = (stream.groupBy("doc_id")
-             .applyInPandasWithState(
-                 _make_assemble(hocr_col, expected_col, idle_flush_ms),
-                 OUTPUT_SCHEMA_DDL, _STACK_STATE_DDL, "append", timeout))
-    writer = (spans.writeStream
-              .format("parquet")
-              .option("path", os.path.join(out_dir, "spans"))
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
+    writer = (stream.writeStream
+              .foreachBatch(process_batch)
+              .option("checkpointLocation", checkpoint_dir))
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -183,6 +183,28 @@ def test_malformed_markup_survives(spark):
     assert out["broken"][0]["kind"] == "hocr_error"
 
 
+def test_markup_truncated_mid_stream_keeps_parsed_pages(spark):
+    """Markup that breaks after its first page gives that page's span,
+    exactly as the whole document gives it, then one hocr_error span
+    naming the parse error."""
+    import pandas as pd
+
+    from archive_pdf_tools_spark.sources.hocr import hocr_documents
+
+    markup = synth_hocr(" ".join(f"w{i}" for i in range(40)),
+                        words_per_page=20)
+    first = markup.index("<div class='ocr_page'")
+    cut = markup.index("<div class='ocr_page'", first + 1)
+    hdf = spark.createDataFrame(pd.DataFrame({
+        "doc_id": ["whole", "cut"], "hocr": [markup, markup[:cut]]}))
+    out = {r["doc_id"]: r["spans"] for r in hocr_documents(hdf).collect()}
+    assert [s["kind"] for s in out["whole"]] == ["text", "text"]
+    assert [s["kind"] for s in out["cut"]] == ["text", "hocr_error"]
+    assert out["cut"][0] == out["whole"][0]
+    assert out["cut"][1]["text"].startswith("ParseError: ")
+    assert out["cut"][1]["offset"] == 1
+
+
 def test_hocr_roundtrip_fuzz():
     """Property: parse(render(payload)) == payload for randomized page
     structures — weird word text (XML-escapables, unicode), float

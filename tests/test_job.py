@@ -4,6 +4,7 @@ a run stopped after one shard, then a resume that commits the rest."""
 import os
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 
 import job
@@ -14,9 +15,8 @@ _SPANS_METRICS = [
     ("partition_id", "int"), ("doc_count", "bigint"),
     ("page_count", "bigint"), ("text_pages", "bigint"),
     ("media_pages", "bigint"), ("kernel_ms", "double"),
-    ("warning_kinds", "array<string>"), ("shard", "int")]
-_COUNT_METRICS = [("doc_count", "bigint"), ("span_count", "bigint"),
-                  ("shard", "int")]
+    ("warning_kinds", "array<string>")]
+_COUNT_METRICS = [("doc_count", "bigint"), ("span_count", "bigint")]
 
 # (input format, output format) -> the per-shard metrics schema
 FRONT_DOORS = {
@@ -27,13 +27,12 @@ FRONT_DOORS = {
     ("imagestack", "spans"): _COUNT_METRICS,
     ("imagestack", "pdf"): [
         ("doc_count", "bigint"), ("page_count", "bigint"),
-        ("pdf_bytes", "bigint"), ("error_count", "bigint"),
-        ("shard", "int")],
+        ("pdf_bytes", "bigint"), ("error_count", "bigint")],
     ("pdf", "pdf"): [
         ("doc_count", "bigint"), ("page_count", "bigint"),
         ("image_count", "bigint"), ("orig_image_bytes", "bigint"),
         ("new_image_bytes", "bigint"), ("pdf_bytes", "bigint"),
-        ("error_count", "bigint"), ("shard", "int")],
+        ("error_count", "bigint")],
 }
 
 
@@ -94,4 +93,9 @@ def test_front_door_commits_and_resumes(spark, tmp_path, in_fmt, out_fmt):
         metrics = spark.read.parquet(os.path.join(out, "metrics",
                                                   f"shard={k}"))
         assert metrics.dtypes == FRONT_DOORS[in_fmt, out_fmt]
+    # the shard lives in the directory name only, so pyarrow reads the
+    # whole metrics table and its shards are the manifest's
+    table = pq.read_table(os.path.join(out, "metrics"))
+    assert sorted(set(table.column("shard").to_pylist())) == \
+        m["committed_shards"]
 

@@ -305,7 +305,7 @@ def test_jpx_page_flows_through_full_mrc_extraction():
     jpx_rows = _recode_one("d", jpx_pdf, None)
     assert len(jpx_rows) == 1 == len(raw_rows)
     # (mask_sha, fg_sha, bg_sha, src dims) identical: lossless decode
-    assert jpx_rows[0][3:9] == raw_rows[0][3:9]
+    assert jpx_rows[0][2:8] == raw_rows[0][2:8]
 
 
 def test_undecodable_jpx_falls_back_to_metadata_only():

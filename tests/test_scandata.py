@@ -54,3 +54,23 @@ def test_scandata_df(spark):
     assert row["skip_pages"] == [0, 3]
     assert row["document_dpi"] == 300
     assert row["toc"][1]["title"] == "Title Page"
+
+
+def test_scandata_df_poison_row(spark):
+    """One malformed XML row gives one error row of nulls; the good
+    rows beside it are unchanged."""
+    good = [("d1", XML), ("d2", XML.replace("<dpi>300</dpi>",
+                                            "<dpi>600</dpi>"))]
+    schema = "doc_id string, scandata_xml string"
+    df = spark.createDataFrame(
+        [good[0], ("bad", "<book><pageData>"), good[1]],
+        schema).repartition(1)
+    got = {r["doc_id"]: r for r in scandata_df(df).collect()}
+    want = {r["doc_id"]: r for r in scandata_df(
+        spark.createDataFrame(good, schema)).collect()}
+    bad = got.pop("bad")
+    assert bad["error"].startswith("ParseError: no element found")
+    assert bad["skip_pages"] is None and bad["toc"] is None
+    assert got == want
+    assert [want[d]["document_dpi"] for d in ("d1", "d2")] == [300, 600]
+    assert all(r["error"] is None for r in want.values())

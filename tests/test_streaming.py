@@ -167,6 +167,28 @@ def test_stream_imagestack_doc_split_across_batches(spark, tmp_path):
                                          hocr_col=None).collect()}
     assert rows == want
 
+    # every micro-batch committed a metrics row beside its spans
+    def doc_count():
+        metrics = spark.read.parquet(os.path.join(out_dir, "metrics"))
+        return sum(r["doc_count"] for r in metrics.collect())
+    assert doc_count() == 2
+
+    # Replay: drop the last batch's commit record (and its checksum
+    # file), so the restart runs that micro-batch again; its overwrite
+    # adds no duplicate row.
+    commits = os.path.join(out_dir, "_stream_checkpoint", "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for name in (last, f".{last}.crc"):
+        os.remove(os.path.join(commits, name))
+    q3 = stream_imagestack(spark, in_dir, out_dir, hocr_col=None)
+    q3.awaitTermination(120)
+    assert last in os.listdir(commits)
+    replayed = spark.read.parquet(os.path.join(out_dir, "spans"))
+    assert replayed.count() == 2
+    assert {r["doc_id"]: [s.asDict() for s in r["spans"]]
+            for r in replayed.collect()} == want
+    assert doc_count() == 2
+
 
 def test_pdfsink_guards():
     """ADVICE r7: explicit None checks for pre-encoded streams (a
