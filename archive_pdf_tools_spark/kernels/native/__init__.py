@@ -38,6 +38,7 @@ import platform
 import subprocess
 import tempfile
 import threading
+from array import array
 
 import numpy as np
 
@@ -353,6 +354,8 @@ def _bind(lib) -> None:
         vp, i64, _I64P,
     ]
     lib.apts_text_layer.restype = ctypes.c_int32
+    lib.apts_text_payload.argtypes = [vp, i64] + [vp, i64] * 5 + [vp] * 4
+    lib.apts_text_payload.restype = ctypes.c_int32
 
 
 def _u8(a: np.ndarray):
@@ -374,15 +377,31 @@ _TEXT_PAGE = [{"lines": [{
 
 
 def _self_test(lib) -> bool:
-    """Round-trip a small block through both coders and render one text
-    page both ways; any mismatch disables the compiled path for the
-    process."""
+    """Round-trip a small block through both coders, render one text
+    page both ways and parse its payload both ways; any mismatch
+    disables the compiled path for the process."""
+    import json
+
     from ..jp2codec import t1_decode, t1_encode
-    from ..textlayer import _render_native, _render_text_layer_py
+    from ..textlayer import (PackedLines, _pack, _render_native,
+                             _render_text_layer_py)
 
     args = (_TEXT_PAGE, 612.0, 792.0, 72.0, 0.24)
     nat = _render_native(*args, _lib=lib)
     if nat is None or nat != _render_text_layer_py(*args):
+        return False
+    page = {"w": 2550, "h": 3300.5, "dpi": None, "scan_res": 300}
+    payload = json.dumps({"page": page, "paragraphs": _TEXT_PAGE},
+                         ensure_ascii=False).encode()
+    got = text_payload_native(payload, _lib=lib)
+    if got is None:
+        return False
+    fields, ints, nums, blob, text, lens = got
+    want = _pack(_TEXT_PAGE)
+    if (fields != tuple(page.values())
+            or [type(v) for v in fields] != [type(v) for v in page.values()]
+            or (ints, nums, blob) != want[:3]
+            or PackedLines(text, lens) != want[3] or want[4]):
         return False
 
     rng = np.random.default_rng(20260818)
@@ -785,6 +804,68 @@ def text_layer_native(ints, nums, blob: bytes, width, height, ppi,
 
 # Per-thread op-stream buffer: the foreign call releases the GIL.
 _tl_out = threading.local()
+
+
+def text_payload_native(payload, n: int | None = None, _lib=None):
+    """Parse one text span's JSON payload in C (``apts_text_payload``):
+    ``payload`` is a bytes-like object, or the address of ``n`` UTF-8
+    bytes (an Arrow string's slice of its data buffer).  Returns
+    ``((w, h, dpi, scan_res), ints, nums, blob, text, lens)``: the page
+    fields as the JSON spells them (int, float or None), the
+    ``textlayer._pack`` streams (``array('i')``, ``array('d')``, hex
+    payload bytes), and the kept line texts as one UTF-8 ``bytes`` with
+    each line's byte length in ``lens`` (``array('i')``).  None = the
+    parser declined the page (see ``apts_text_payload``)."""
+    lib = _lib if _lib is not None else _load()
+    if lib is None:
+        return None
+    if n is None:
+        n = len(payload)
+    buf = _tp_buf
+    if getattr(buf, "cap", 0) < n:
+        _tp_alloc(buf, max(n, 4096))
+    # rc 2 (an output buffer full) cannot happen with _tp_alloc's sizes;
+    # like a decline (1), it sends the page to the Python path
+    if lib.apts_text_payload(payload, n, *buf.args):
+        return None
+    ni, nd, nb, nt, nl = buf.counts
+    kinds, ints, floats = buf.page_t, buf.page_i, buf.page_d
+    fields = tuple(None if kinds[k] == 0 else
+                   ints[k] if kinds[k] == 1 else floats[k]
+                   for k in range(4))
+    return (fields, buf.iv[:ni], buf.dv[:nd],
+            ctypes.string_at(buf.blob_addr, nb),
+            ctypes.string_at(buf.txt_addr, nt), buf.ll[:nl])
+
+
+def _tp_alloc(buf, cap: int) -> None:
+    """(Re)allocate this thread's parse buffers and the argument tail of
+    the foreign call.  A payload of ``cap`` bytes fits: every word,
+    line and paragraph the parser stores takes at least 12 JSON bytes,
+    a code point's hex takes at most 4 per byte it is spelled in, and
+    the text at most one per byte."""
+    buf.cap = cap
+    buf.iv = array("i", bytes(4 * (cap // 4 + 64)))
+    buf.dv = array("d", bytes(8 * (cap // 4 + 64)))
+    buf.ll = array("i", bytes(4 * (cap // 4 + 64)))
+    blob = ctypes.create_string_buffer(5 * cap + 64)
+    txt = ctypes.create_string_buffer(2 * cap + 64)
+    buf.page_i = (ctypes.c_int64 * 4)()
+    buf.page_d = (ctypes.c_double * 4)()
+    buf.page_t = (ctypes.c_int32 * 4)()
+    buf.counts = (ctypes.c_int64 * 5)()
+    buf.blob_addr, buf.txt_addr = ctypes.addressof(blob), ctypes.addressof(txt)
+    buf.keep = (blob, txt)
+    buf.args = (buf.iv.buffer_info()[0], len(buf.iv),
+                buf.dv.buffer_info()[0], len(buf.dv),
+                buf.blob_addr, len(blob), buf.txt_addr, len(txt),
+                buf.ll.buffer_info()[0], len(buf.ll),
+                ctypes.addressof(buf.page_i), ctypes.addressof(buf.page_d),
+                ctypes.addressof(buf.page_t), ctypes.addressof(buf.counts))
+
+
+# Per-thread payload-parse buffers, for the same reason.
+_tp_buf = threading.local()
 
 
 def sauvola_native(img: np.ndarray, ww: int, wh: int, k: float,

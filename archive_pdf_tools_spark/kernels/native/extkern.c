@@ -3731,3 +3731,625 @@ EXPORT int32_t apts_text_layer(const int32_t *iv, int64_t ni,
     *out_len = o.n;
     return 0;
 }
+
+/* ------------------------------------------------ hOCR text payload
+ *
+ * One text span's JSON payload (corpus/generate.py::_text_payload,
+ * sources/hocr.py::page_payload) parsed straight into the streams
+ * apts_text_layer walks: what textlayer._pack builds from
+ * orjson.loads(payload)["paragraphs"], plus the page fields w, h, dpi
+ * and scan_res (int, float or null, as the JSON spells them) and the
+ * kept line texts as UTF-8 with their byte lengths.
+ *
+ * It declines (returns 1; the caller parses the page with orjson and
+ * runs _pack, which then decide it, error included) every payload
+ * whose parse it cannot reproduce bit for bit:
+ *   - anything orjson rejects or reads otherwise: invalid UTF-8, raw
+ *     control characters in strings, a BOM, trailing bytes, literals
+ *     other than true/false/null, nesting deeper than TP_DEPTH;
+ *   - \u escapes that decode to surrogates, paired or lone;
+ *   - a key the body reads that is missing or given twice, and a value
+ *     of a type it does not take (a string, bool or null in the
+ *     geometry, a non-string word text, a bbox not of 4 numbers, ...);
+ *   - ints outside int64 (orjson reads them as floats), number
+ *     spellings longer than TP_NUM_MAX, non-finite values and exponent
+ *     spellings that underflow (an exponent spelling is a float, as in
+ *     orjson: whether a size is an int or a float is what Tf prints);
+ *   - a locale whose decimal point is not '.' (strtod reads floats).
+ * Keys may come in any order; keys the body does not read are checked
+ * and skipped.  Ink is str.strip()'s whitespace set (tp_space; the
+ * tests hold it against every code point Python knows).  No code point
+ * the parser accepts is one codepoint_to_utf16be drops, so its pages
+ * have no dropped codepoints.
+ */
+#define TP_DEPTH 64
+#define TP_NUM_MAX 40
+
+enum { TP_NULL = 0, TP_INT = 1, TP_FLOAT = 2 };
+
+typedef struct {
+    const uint8_t *p, *end;
+    int32_t *iv;
+    double *dv;
+    uint8_t *blob, *txt;
+    int32_t *ll;
+    int64_t ni, nd, nb, nt, nl;
+    int64_t icap, dcap, bcap, tcap, lcap;
+} TP;
+
+typedef struct {
+    int type;
+    int64_t i;
+    double d;
+} TPNum;
+
+/* return codes: 0 ok, 1 decline, 2 an output buffer is full */
+#define TP_TRY(x) do { int rc_ = (x); if (rc_) return rc_; } while (0)
+#define TP_IS(k, kl, lit) \
+    ((kl) == (int)sizeof(lit) - 1 && !memcmp((k), (lit), sizeof(lit) - 1))
+
+static void tp_ws(TP *t) {
+    while (t->p < t->end && (*t->p == ' ' || *t->p == '\n'
+                             || *t->p == '\r' || *t->p == '\t'))
+        t->p++;
+}
+
+static int tp_peek(TP *t) {
+    tp_ws(t);
+    return t->p < t->end ? *t->p : -1;
+}
+
+static int tp_eat(TP *t, int c) {
+    if (tp_peek(t) != c) return 0;
+    t->p++;
+    return 1;
+}
+
+/* str.isspace(), the set str.strip() removes */
+static int tp_space(uint32_t c) {
+    if (c < 0x80) return (c >= 0x09 && c <= 0x0D) || (c >= 0x1C && c <= 0x20);
+    return c == 0x85 || c == 0xA0 || c == 0x1680
+        || (c >= 0x2000 && c <= 0x200A) || c == 0x2028 || c == 0x2029
+        || c == 0x202F || c == 0x205F || c == 0x3000;
+}
+
+/* One UTF-8 sequence at *pp, which advances past it; -1 = invalid
+ * (overlong, surrogate, beyond U+10FFFF, truncated). */
+static int32_t tp_utf8(const uint8_t **pp, const uint8_t *end) {
+    const uint8_t *s = *pp;
+    uint32_t c = s[0], min;
+    int n;
+    if (c < 0x80) {
+        *pp = s + 1;
+        return (int32_t)c;
+    }
+    if (c >= 0xC2 && c <= 0xDF) {
+        n = 1; c &= 0x1F; min = 0x80;
+    } else if (c >= 0xE0 && c <= 0xEF) {
+        n = 2; c &= 0x0F; min = 0x800;
+    } else if (c >= 0xF0 && c <= 0xF4) {
+        n = 3; c &= 0x07; min = 0x10000;
+    } else {
+        return -1;
+    }
+    if (end - s <= n) return -1;
+    for (int k = 1; k <= n; k++) {
+        if ((s[k] & 0xC0) != 0x80) return -1;
+        c = (c << 6) | (s[k] & 0x3F);
+    }
+    if (c < min || c > 0x10FFFF || (c >= 0xD800 && c <= 0xDFFF)) return -1;
+    *pp = s + n + 1;
+    return (int32_t)c;
+}
+
+static int tp_hex4(const uint8_t *s, uint32_t *v) {
+    uint32_t x = 0;
+    for (int k = 0; k < 4; k++) {
+        int c = s[k], d;
+        if (c >= '0' && c <= '9') d = c - '0';
+        else if (c >= 'a' && c <= 'f') d = c - 'a' + 10;
+        else if (c >= 'A' && c <= 'F') d = c - 'A' + 10;
+        else return 1;
+        x = x << 4 | (uint32_t)d;
+    }
+    *v = x;
+    return 0;
+}
+
+static void tp_hex_unit(uint8_t *o, uint32_t u) {
+    static const char hexd[] = "0123456789ABCDEF";
+    o[0] = (uint8_t)hexd[u >> 12 & 15];
+    o[1] = (uint8_t)hexd[u >> 8 & 15];
+    o[2] = (uint8_t)hexd[u >> 4 & 15];
+    o[3] = (uint8_t)hexd[u & 15];
+}
+
+/* A JSON string, t->p just past its opening quote.  With key set, its
+ * UTF-8 goes there (*klen = its length, or -1 when longer than kcap).
+ * With ink set (a word text), each code point goes to the blob as
+ * UTF-16BE hex (textlayer.codepoint_to_utf16be) and to the line text
+ * as UTF-8, and *ink becomes 1 at the first non-whitespace one. */
+static int tp_string(TP *t, char *key, int kcap, int *klen, int *ink) {
+    int kl = 0;
+    for (;;) {
+        const uint8_t *s = t->p;
+        uint8_t u8[4];
+        uint32_t c;
+        int n8;
+        if (s >= t->end || *s < 0x20) return 1;
+        if (*s < 0x80 && *s != '"' && *s != '\\') {      /* plain ASCII */
+            c = *s;
+            t->p = s + 1;
+            if (key) {
+                if (kl >= 0 && kl < kcap) key[kl++] = (char)c;
+                else kl = -1;
+            }
+            if (ink) {
+                if (t->nb + 4 > t->bcap || t->nt + 1 > t->tcap) return 2;
+                tp_hex_unit(t->blob + t->nb, c);
+                t->nb += 4;
+                t->txt[t->nt++] = (uint8_t)c;
+                if (!tp_space(c)) *ink = 1;
+            }
+            continue;
+        }
+        if (*s == '"') {
+            t->p = s + 1;
+            break;
+        }
+        if (*s == '\\') {
+            int adv = 2;
+            if (t->end - s < 2) return 1;
+            switch (s[1]) {
+            case '"': c = '"'; break;
+            case '\\': c = '\\'; break;
+            case '/': c = '/'; break;
+            case 'b': c = 8; break;
+            case 'f': c = 12; break;
+            case 'n': c = 10; break;
+            case 'r': c = 13; break;
+            case 't': c = 9; break;
+            case 'u':
+                if (t->end - s < 6 || tp_hex4(s + 2, &c)) return 1;
+                if (c >= 0xD800 && c <= 0xDFFF) return 1;
+                adv = 6;
+                break;
+            default:
+                return 1;
+            }
+            t->p = s + adv;
+            if (c < 0x80) {
+                u8[0] = (uint8_t)c;
+                n8 = 1;
+            } else if (c < 0x800) {
+                u8[0] = (uint8_t)(0xC0 | c >> 6);
+                u8[1] = (uint8_t)(0x80 | (c & 0x3F));
+                n8 = 2;
+            } else {
+                u8[0] = (uint8_t)(0xE0 | c >> 12);
+                u8[1] = (uint8_t)(0x80 | (c >> 6 & 0x3F));
+                u8[2] = (uint8_t)(0x80 | (c & 0x3F));
+                n8 = 3;
+            }
+        } else {
+            int32_t cp = tp_utf8(&t->p, t->end);
+            if (cp < 0) return 1;
+            c = (uint32_t)cp;
+            n8 = (int)(t->p - s);
+            memcpy(u8, s, (size_t)n8);
+        }
+        if (key) {
+            if (kl >= 0 && kl + n8 <= kcap) {
+                memcpy(key + kl, u8, (size_t)n8);
+                kl += n8;
+            } else {
+                kl = -1;
+            }
+        }
+        if (ink) {
+            if (t->nb + 8 > t->bcap || t->nt + 4 > t->tcap) return 2;
+            if (c < 0x10000) {
+                tp_hex_unit(t->blob + t->nb, c);
+                t->nb += 4;
+            } else {
+                uint32_t a = c - 0x10000;
+                tp_hex_unit(t->blob + t->nb, 0xD800 + (a >> 10 & 0x3FF));
+                tp_hex_unit(t->blob + t->nb + 4, 0xDC00 + (a & 0x3FF));
+                t->nb += 8;
+            }
+            memcpy(t->txt + t->nt, u8, (size_t)n8);
+            t->nt += n8;
+            if (!tp_space(c)) *ink = 1;
+        }
+    }
+    if (key) *klen = kl;
+    return 0;
+}
+
+/* A JSON number: an int spelling -> TP_INT ("-0" is the int 0), a
+ * fraction or exponent spelling -> TP_FLOAT ("-0.0" is -0.0), read as
+ * orjson and float() read it, correctly rounded: digits M < 2^53 over
+ * 10^k with k <= 22 is one exactly rounded division of two exact
+ * doubles, and other spellings go to strtod.  An exponent spelling
+ * with a nonzero digit that reads as zero or subnormal is declined
+ * (underflow). */
+static int tp_number(TP *t, TPNum *v) {
+    static const double p10[23] = {
+        1e0, 1e1, 1e2, 1e3, 1e4, 1e5, 1e6, 1e7, 1e8, 1e9, 1e10, 1e11,
+        1e12, 1e13, 1e14, 1e15, 1e16, 1e17, 1e18, 1e19, 1e20, 1e21, 1e22};
+    const uint8_t *s = t->p, *q = s;
+    uint64_t m = 0;
+    int neg = 0, nd = 0, nf = 0, ex = 0, nz = 0;
+    if (q < t->end && *q == '-') {
+        neg = 1;
+        q++;
+    }
+    if (q >= t->end || *q < '0' || *q > '9') return 1;
+    if (*q == '0') {
+        q++;
+        nd = 1;
+    } else {
+        nz = 1;
+        while (q < t->end && *q >= '0' && *q <= '9') {
+            if (++nd > 19) return 1;
+            m = m * 10 + (uint64_t)(*q++ - '0');
+        }
+    }
+    if (q < t->end && *q == '.') {
+        q++;
+        while (q < t->end && *q >= '0' && *q <= '9') {
+            if (nd + nf < 19) m = m * 10 + (uint64_t)(*q - '0');
+            nz |= *q != '0';
+            q++;
+            nf++;
+        }
+        if (!nf) return 1;
+    }
+    if (q < t->end && (*q == 'e' || *q == 'E')) {
+        int ne = 0;
+        ex = 1;
+        q++;
+        if (q < t->end && (*q == '+' || *q == '-')) q++;
+        while (q < t->end && *q >= '0' && *q <= '9') {
+            q++;
+            ne++;
+        }
+        if (!ne) return 1;
+    }
+    if (q - s > TP_NUM_MAX) return 1;
+    if (nf || ex) {
+        if (!ex && nd + nf <= 19 && m < (1ULL << 53) && nf <= 22) {
+            v->d = (double)m / p10[nf];
+            if (neg) v->d = -v->d;
+        } else {
+            char buf[TP_NUM_MAX + 1], *e;
+            memcpy(buf, s, (size_t)(q - s));
+            buf[q - s] = 0;
+            v->d = strtod(buf, &e);
+            if (e != buf + (q - s)) return 1;
+            if (ex && nz && !(fabs(v->d) >= 2.2250738585072014e-308))
+                return 1;
+        }
+        if (!isfinite(v->d)) return 1;
+        v->type = TP_FLOAT;
+        v->i = 0;
+    } else {
+        if (m > (uint64_t)INT64_MAX + neg) return 1;
+        v->type = TP_INT;
+        v->i = neg ? (int64_t)(0 - m) : (int64_t)m;
+        v->d = (double)v->i;
+    }
+    t->p = q;
+    return 0;
+}
+
+/* Checks and steps over any JSON value. */
+static int tp_skip(TP *t, int depth) {
+    int c = tp_peek(t);
+    TPNum v;
+    if (depth > TP_DEPTH) return 1;
+    if (c == '"') {
+        t->p++;
+        return tp_string(t, NULL, 0, NULL, NULL);
+    }
+    if (c == '{' || c == '[') {
+        int close = c == '{' ? '}' : ']';
+        t->p++;
+        if (tp_eat(t, close)) return 0;
+        do {
+            if (c == '{') {
+                if (!tp_eat(t, '"')) return 1;
+                TP_TRY(tp_string(t, NULL, 0, NULL, NULL));
+                if (!tp_eat(t, ':')) return 1;
+            }
+            TP_TRY(tp_skip(t, depth + 1));
+        } while (tp_eat(t, ','));
+        return tp_eat(t, close) ? 0 : 1;
+    }
+    if (c == 't' || c == 'f' || c == 'n') {
+        const char *lit = c == 't' ? "true" : c == 'f' ? "false" : "null";
+        size_t n = strlen(lit);
+        if ((size_t)(t->end - t->p) < n || memcmp(t->p, lit, n)) return 1;
+        t->p += n;
+        return 0;
+    }
+    if (c == '-' || (c >= '0' && c <= '9')) return tp_number(t, &v);
+    return 1;
+}
+
+/* The next member's key of an object ('{' or the previous member's
+ * ',' already read): *klen as tp_string gives it. */
+static int tp_key(TP *t, char *key, int kcap, int *klen) {
+    if (!tp_eat(t, '"')) return 1;
+    TP_TRY(tp_string(t, key, kcap, klen, NULL));
+    return tp_eat(t, ':') ? 0 : 1;
+}
+
+/* Opens an object or array; *more = 0 when it is empty. */
+static int tp_open(TP *t, int open, int *more) {
+    if (!tp_eat(t, open)) return 1;
+    *more = !tp_eat(t, open == '{' ? '}' : ']');
+    return 0;
+}
+
+/* After a member or element: ',' -> *more = 1, the close -> 0. */
+static int tp_next(TP *t, int close, int *more) {
+    if (tp_eat(t, ',')) {
+        *more = 1;
+        return 0;
+    }
+    *more = 0;
+    return tp_eat(t, close) ? 0 : 1;
+}
+
+static int tp_num_of(TP *t, TPNum *v) {
+    int c = tp_peek(t);
+    if (c != '-' && !(c >= '0' && c <= '9')) return 1;
+    return tp_number(t, v);
+}
+
+/* An array of exactly n numbers. */
+static int tp_nums(TP *t, TPNum *v, int n) {
+    int more, k = 0;
+    TP_TRY(tp_open(t, '[', &more));
+    while (more) {
+        if (k == n) return 1;
+        TP_TRY(tp_num_of(t, &v[k++]));
+        TP_TRY(tp_next(t, ']', &more));
+    }
+    return k == n ? 0 : 1;
+}
+
+static int tp_word(TP *t, int *ink) {
+    char key[24];
+    int kl, more, seen = 0;
+    int64_t ia = t->ni, da = t->nd;
+    if (t->ni + 1 > t->icap || t->nd + 6 > t->dcap) return 2;
+    t->ni += 1;
+    t->nd += 6;
+    TP_TRY(tp_open(t, '{', &more));
+    while (more) {
+        TP_TRY(tp_key(t, key, sizeof key, &kl));
+        if (TP_IS(key, kl, "text")) {
+            if (seen & 1 || !tp_eat(t, '"')) return 1;
+            seen |= 1;
+            if (t->nb + 5 > t->bcap) return 2;
+            if (t->nb) t->blob[t->nb++] = ' ';
+            TP_TRY(tp_string(t, NULL, 0, NULL, ink));
+            if (t->nb + 4 > t->bcap) return 2;
+            memcpy(t->blob + t->nb, "0020", 4);     /* synthetic space */
+            t->nb += 4;
+        } else if (TP_IS(key, kl, "bbox")) {
+            TPNum b[4];
+            if (seen & 2) return 1;
+            seen |= 2;
+            TP_TRY(tp_nums(t, b, 4));
+            for (int k = 0; k < 4; k++) t->dv[da + k] = b[k].d;
+        } else if (TP_IS(key, kl, "fontsize")) {
+            TPNum s;
+            if (seen & 4) return 1;
+            seen |= 4;
+            TP_TRY(tp_num_of(t, &s));
+            t->dv[da + 4] = s.d;
+            t->iv[ia] = s.type == TP_INT;
+        } else if (TP_IS(key, kl, "writing_direction")) {
+            TPNum d;
+            if (seen & 8) return 1;
+            seen |= 8;
+            TP_TRY(tp_num_of(t, &d));
+            t->dv[da + 5] = d.d;
+        } else {
+            TP_TRY(tp_skip(t, 8));
+        }
+        TP_TRY(tp_next(t, '}', &more));
+    }
+    return seen == 15 ? 0 : 1;
+}
+
+static int tp_line(TP *t, int *para_ink) {
+    char key[24];
+    int kl, more, seen = 0, line_ink = 0;
+    int32_t n_words = 0;
+    int64_t ia = t->ni, da = t->nd, ta = t->nt;
+    TPNum bbox[4], base[2];
+    if (t->ni + 2 > t->icap || t->nd + 5 > t->dcap) return 2;
+    t->ni += 2;
+    t->nd += 5;
+    TP_TRY(tp_open(t, '{', &more));
+    while (more) {
+        TP_TRY(tp_key(t, key, sizeof key, &kl));
+        if (TP_IS(key, kl, "bbox")) {
+            if (seen & 1) return 1;
+            seen |= 1;
+            TP_TRY(tp_nums(t, bbox, 4));
+        } else if (TP_IS(key, kl, "baseline")) {
+            if (seen & 2) return 1;
+            seen |= 2;
+            TP_TRY(tp_nums(t, base, 2));
+        } else if (TP_IS(key, kl, "words")) {
+            int wmore;
+            if (seen & 4) return 1;
+            seen |= 4;
+            TP_TRY(tp_open(t, '[', &wmore));
+            while (wmore) {
+                if (n_words) {          /* " ".join of the kept texts */
+                    if (t->nt + 1 > t->tcap) return 2;
+                    t->txt[t->nt++] = ' ';
+                }
+                TP_TRY(tp_word(t, &line_ink));
+                n_words++;
+                TP_TRY(tp_next(t, ']', &wmore));
+            }
+        } else {
+            TP_TRY(tp_skip(t, 6));
+        }
+        TP_TRY(tp_next(t, '}', &more));
+    }
+    if (seen != 7) return 1;
+    t->iv[ia] = n_words;
+    if (n_words) {
+        /* left, right, bottom, slope, intercept (the bbox top unused) */
+        TPNum *g[5] = {&bbox[0], &bbox[2], &bbox[3], &base[0], &base[1]};
+        int all_int = 1;
+        for (int k = 0; k < 5; k++) {
+            t->dv[da + k] = g[k]->d;
+            all_int &= g[k]->type == TP_INT;
+        }
+        t->iv[ia + 1] = all_int;
+    } else {
+        for (int k = 0; k < 5; k++) t->dv[da + k] = 0;
+        t->iv[ia + 1] = 0;
+    }
+    if (line_ink) {
+        if (t->nl + 1 > t->lcap) return 2;
+        t->ll[t->nl++] = (int32_t)(t->nt - ta);
+        *para_ink = 1;
+    } else {
+        t->nt = ta;
+    }
+    return 0;
+}
+
+/* One paragraph; one without ink leaves no trace (_pack's marks). */
+static int tp_para(TP *t, int32_t *n_paras) {
+    char key[24];
+    int kl, more, seen = 0, ink = 0;
+    int32_t n_lines = 0;
+    int64_t ni = t->ni, nd = t->nd, nb = t->nb, nt = t->nt, nl = t->nl;
+    if (t->ni + 1 > t->icap) return 2;
+    t->ni += 1;
+    TP_TRY(tp_open(t, '{', &more));
+    while (more) {
+        TP_TRY(tp_key(t, key, sizeof key, &kl));
+        if (TP_IS(key, kl, "lines")) {
+            int lmore;
+            if (seen) return 1;
+            seen = 1;
+            TP_TRY(tp_open(t, '[', &lmore));
+            while (lmore) {
+                TP_TRY(tp_line(t, &ink));
+                n_lines++;
+                TP_TRY(tp_next(t, ']', &lmore));
+            }
+        } else {
+            TP_TRY(tp_skip(t, 4));
+        }
+        TP_TRY(tp_next(t, '}', &more));
+    }
+    if (!seen) return 1;
+    if (ink) {
+        t->iv[ni] = n_lines;
+        (*n_paras)++;
+    } else {
+        t->ni = ni;
+        t->nd = nd;
+        t->nb = nb;
+        t->nt = nt;
+        t->nl = nl;
+    }
+    return 0;
+}
+
+static int tp_page(TP *t, int64_t *pi, double *pd, int32_t *pt) {
+    static const char *names[4] = {"w", "h", "dpi", "scan_res"};
+    char key[24];
+    int kl, more, seen = 0;
+    TP_TRY(tp_open(t, '{', &more));
+    while (more) {
+        int f = -1;
+        TP_TRY(tp_key(t, key, sizeof key, &kl));
+        for (int k = 0; k < 4; k++)
+            if (kl == (int)strlen(names[k]) && !memcmp(key, names[k], (size_t)kl))
+                f = k;
+        if (f < 0) {
+            TP_TRY(tp_skip(t, 3));
+        } else if (seen >> f & 1) {
+            return 1;
+        } else if (tp_peek(t) == 'n') {
+            seen |= 1 << f;
+            TP_TRY(tp_skip(t, 3));
+            pt[f] = TP_NULL;
+        } else {
+            TPNum v;
+            seen |= 1 << f;
+            TP_TRY(tp_num_of(t, &v));
+            pt[f] = v.type;
+            pi[f] = v.i;
+            pd[f] = v.d;
+        }
+        TP_TRY(tp_next(t, '}', &more));
+    }
+    return seen == 15 ? 0 : 1;
+}
+
+/* Returns 0 (counts = ints, nums, blob bytes, text bytes, lines),
+ * 1 = decline, 2 = an output buffer is too small.
+ * page_t[k] is TP_NULL/TP_INT/TP_FLOAT for w, h, dpi, scan_res, with
+ * the value in page_i[k] or page_d[k]. */
+EXPORT int32_t apts_text_payload(const uint8_t *js, int64_t n,
+                                 int32_t *iv, int64_t icap,
+                                 double *dv, int64_t dcap,
+                                 uint8_t *blob, int64_t bcap,
+                                 uint8_t *txt, int64_t tcap,
+                                 int32_t *ll, int64_t lcap,
+                                 int64_t *page_i, double *page_d,
+                                 int32_t *page_t, int64_t *counts) {
+    TP t = {js, js + n, iv, dv, blob, txt, ll, 0, 0, 0, 0, 0,
+            icap, dcap, bcap, tcap, lcap};
+    char key[24];
+    int kl, more, seen = 0;
+    int32_t n_paras = 0;
+    const struct lconv *lc = localeconv();
+    if (lc->decimal_point[0] != '.' || lc->decimal_point[1]) return 1;
+    if (icap < 1) return 2;
+    t.ni = 1;
+    TP_TRY(tp_open(&t, '{', &more));
+    while (more) {
+        TP_TRY(tp_key(&t, key, sizeof key, &kl));
+        if (TP_IS(key, kl, "page")) {
+            if (seen & 1) return 1;
+            seen |= 1;
+            TP_TRY(tp_page(&t, page_i, page_d, page_t));
+        } else if (TP_IS(key, kl, "paragraphs")) {
+            int pmore;
+            if (seen & 2) return 1;
+            seen |= 2;
+            TP_TRY(tp_open(&t, '[', &pmore));
+            while (pmore) {
+                TP_TRY(tp_para(&t, &n_paras));
+                TP_TRY(tp_next(&t, ']', &pmore));
+            }
+        } else {
+            TP_TRY(tp_skip(&t, 2));
+        }
+        TP_TRY(tp_next(&t, '}', &more));
+    }
+    if (seen != 3 || tp_peek(&t) != -1) return 1;
+    iv[0] = n_paras;
+    counts[0] = t.ni;
+    counts[1] = t.nd;
+    counts[2] = t.nb;
+    counts[3] = t.nt;
+    counts[4] = t.nl;
+    return 0;
+}

@@ -36,7 +36,8 @@ from . import native
 
 __all__ = ["prec", "floatbytes", "dist2", "get_word_baseline",
            "affine_matrix", "clip_baseline", "codepoint_to_utf16be",
-           "render_text_layer", "PageTextResult"]
+           "render_text_layer", "parse_payload", "PageTextResult",
+           "PackedLines", "PackedPage"]
 
 WRITING_DIRECTION_UNSPECIFIED = 0
 WRITING_DIRECTION_LEFT_TO_RIGHT = 1
@@ -137,6 +138,58 @@ def codepoint_to_utf16be(code: int):
     return True, res.encode("ascii")
 
 
+class PackedLines:
+    """Line texts as one UTF-8 ``bytes`` and each line's byte length,
+    as the compiled payload parser gives them; iterates, and compares,
+    as the list of ``str`` lines."""
+
+    __slots__ = ("data", "lens")
+
+    def __init__(self, data: bytes, lens):
+        self.data, self.lens = data, lens
+
+    def __iter__(self):
+        pos = 0
+        for n in self.lens:
+            yield self.data[pos:pos + n].decode()
+            pos += n
+
+    def __eq__(self, other):
+        return list(self) == list(other)
+
+    __hash__ = None
+
+
+class PackedPage:
+    """A payload's paragraphs as the compiled parser packed them, in
+    place of the paragraph list for ``render_text_layer``: ``packed``
+    is ``_pack``'s (ints, nums, blob, lines, dropped), and
+    ``paragraphs()`` parses the paragraph list for the Python body, which
+    runs when the op-stream kernel declines the page."""
+
+    __slots__ = ("packed", "paragraphs")
+
+    def __init__(self, packed, paragraphs):
+        self.packed, self.paragraphs = packed, paragraphs
+
+
+def parse_payload(payload, n, paragraphs):
+    """A text span's JSON payload as ``orjson.loads`` reads it, with the
+    paragraph list already packed: ``{"page": {"w", "h", "dpi",
+    "scan_res"}, "paragraphs": PackedPage}``.  ``payload`` is the
+    address of ``n`` UTF-8 bytes (or a bytes object of length ``n``);
+    ``paragraphs`` is the callable that parses the paragraph list if the
+    Python body needs it.  None when the compiled parser is not loaded
+    or declines the payload."""
+    got = native.text_payload_native(payload, n)
+    if got is None:
+        return None
+    (w, h, dpi, scan_res), ints, nums, blob, text, lens = got
+    return {"page": {"w": w, "h": h, "dpi": dpi, "scan_res": scan_res},
+            "paragraphs": PackedPage(
+                (ints, nums, blob, PackedLines(text, lens), 0), paragraphs)}
+
+
 @dataclass
 class PageTextResult:
     lines: list[str] = field(default_factory=list)      # per surviving line
@@ -198,9 +251,13 @@ def render_text_layer(word_data: list, width: float, height: float,
     Runs the compiled kernel (``native.apts_text_layer``) when it is
     loaded and the page is one it reproduces exactly; otherwise, and
     for every page it declines, the pure-Python body below, which is
-    the oracle the compiled kernel is tested against."""
+    the oracle the compiled kernel is tested against.  ``word_data``
+    may be a ``PackedPage`` (``parse_payload``); its lines then come
+    back as ``PackedLines`` unless the Python body runs."""
     res = _render_native(word_data, width, height, ppi, font_scale)
     if res is None:
+        if type(word_data) is PackedPage:
+            word_data = word_data.paragraphs()
         res = _render_text_layer_py(word_data, width, height, ppi,
                                     font_scale)
     return res
@@ -283,12 +340,15 @@ def _render_native(word_data, width, height, ppi, font_scale, _lib=None):
     lib = _lib if _lib is not None else native._load()
     if lib is None:
         return None
+    packed = type(word_data) is PackedPage
     # the Python body must see the same input again if this declines
-    if type(word_data) not in (list, tuple) or not _NUM_TYPES.issuperset(
-            (type(width), type(height), type(ppi), type(font_scale))):
+    if (not packed and type(word_data) not in (list, tuple)) \
+            or not _NUM_TYPES.issuperset(
+                (type(width), type(height), type(ppi), type(font_scale))):
         return None
     try:
-        ints, nums, blob, lines, dropped = _pack(word_data)
+        ints, nums, blob, lines, dropped = (
+            word_data.packed if packed else _pack(word_data))
         scale_mode = (0 if font_scale == 1
                       else 2 if type(font_scale) is int else 1)
         ops = native.text_layer_native(ints, nums, blob, width, height,

@@ -1034,3 +1034,327 @@ def test_text_layer_output_larger_than_first_buffer():
     py = tl._render_text_layer_py(page, 612.0, 1e15, 1e-6)
     assert len(py.text_ops) > first_estimate
     _assert_same(got[0], py)
+
+
+# ---------------------------------------------------- text payload parse
+
+def _py_payload(raw: bytes):
+    """What the Python path reads from a payload: the page fields (with
+    their types) and ``_pack``'s streams, or None where it raises."""
+    import orjson
+
+    try:
+        payload = orjson.loads(raw)
+        page = payload["page"]
+        fields = tuple(page[k] for k in ("w", "h", "dpi", "scan_res"))
+        return fields, tl._pack(payload["paragraphs"])
+    except Exception:  # noqa: BLE001
+        return None
+
+
+def _assert_payload_parity(raw: bytes):
+    """The C parse of ``raw`` equals the Python path's reading of it,
+    or the C parser declined it; returns whether it accepted."""
+    got = native.text_payload_native(raw)
+    if got is None:
+        return False
+    want = _py_payload(raw)
+    assert want is not None, raw
+    fields, ints, nums, blob, text, lens = got
+    w_fields, (w_ints, w_nums, w_blob, w_lines, w_dropped) = want
+    assert fields == w_fields, raw
+    assert [type(v) for v in fields] == [type(v) for v in w_fields], raw
+    assert ints == w_ints and blob == w_blob, raw
+    assert nums.tobytes() == w_nums.tobytes(), raw        # -0.0 too
+    assert list(tl.PackedLines(text, lens)) == w_lines and not w_dropped
+    return True
+
+
+def _spell(value, rng, escape: bool) -> str:
+    """One JSON spelling of ``value``, picked at random: keys in any
+    order, whitespace between tokens, floats spelled with exponents,
+    and unknown keys holding nested values."""
+    import json
+
+    ws = ["", "", " ", "\n  ", "\t", "\r\n"]
+
+    def pad():
+        return ws[rng.integers(len(ws))]
+
+    if isinstance(value, dict):
+        items = list(value.items())
+        rng.shuffle(items)
+        if rng.random() < 0.3:
+            extra = [None, True, False, -3, 2.5, "x\u00e9", [1, [2.0, {}]],
+                     {"k": [None, "\U0001f680"]}, "\\\"/"]
+            items.insert(int(rng.integers(len(items) + 1)),
+                         ("extra", extra[rng.integers(len(extra))]))
+        return "{" + ",".join(
+            pad() + json.dumps(k) + pad() + ":" + pad()
+            + _spell(v, rng, escape) + pad() for k, v in items) + "}"
+    if isinstance(value, list):
+        return "[" + ",".join(pad() + _spell(v, rng, escape) + pad()
+                              for v in value) + "]"
+    if isinstance(value, float) and rng.random() < 0.2:
+        return "%.17e" % value          # the same double, exponent-spelt
+    return json.dumps(value, ensure_ascii=escape)
+
+
+def test_text_payload_parity_fuzz():
+    """The C payload parser against orjson + ``_pack``, bit for bit:
+    key order, unknown keys, whitespace, escaped and raw non-ASCII text,
+    exponent spellings, negative zeros; every payload it declines
+    (escaped surrogates among them) the Python path decides."""
+    rng = np.random.default_rng(20261019)
+    accepted = 0
+    for i in range(800):
+        page = {"w": [2550, 2550.5, 612, -0.0][i % 4],
+                "h": [3300, 3300.25, 0][i % 3],
+                "dpi": [None, 300, 72.0][i % 3],
+                "scan_res": [None, 300, 0, -0.0][i % 4]}
+        payload = {"page": page, "paragraphs": _fuzz_page(rng)}
+        escape = bool(i % 2)
+        raw = _spell(payload, rng, escape).encode("utf-8", "surrogatepass")
+        ok = _assert_payload_parity(raw)
+        if not escape:
+            # raw UTF-8 has no surrogate escapes: the parser declines
+            # only what the Python path rejects (lone surrogates)
+            assert ok == (_py_payload(raw) is not None), raw
+        accepted += ok
+    assert accepted > 150
+
+
+_WORD = '{"text": %s, "bbox": [1, 2, 30, 12], "fontsize": 10.0, ' \
+        '"writing_direction": 0}'
+
+
+def _payload(word=_WORD % '"ab"', page='"w": 1700, "h": 2200, "dpi": 300, '
+             '"scan_res": null', line_extra="", top_extra=""):
+    return ('{"page": {%s}, "paragraphs": [{"lines": [{"bbox": [1, 2, 100, '
+            '12], "baseline": [0.01, -1.0], "words": [%s]%s}]}]%s}'
+            % (page, word, line_extra, top_extra)).encode()
+
+
+_DECLINED = {
+    "surrogate_pair_escape": _payload(_WORD % '"\\ud835\\udd18"'),
+    "lone_surrogate_escape": _payload(_WORD % '"a\\udcff"'),
+    "duplicate_word_key": _payload(_WORD % '"a", "text": "b"'),
+    "duplicate_page_key": _payload(page='"w": 1, "h": 2, "dpi": 3, '
+                                   '"scan_res": null, "w": 5'),
+    "missing_word_key": _payload('{"text": "a", "bbox": [1, 2, 3, 4], '
+                                 '"fontsize": 1}'),
+    "missing_page_key": _payload(page='"w": 1, "h": 2, "dpi": 3'),
+    "missing_paragraphs": b'{"page": {"w": 1, "h": 2, "dpi": 3, '
+                          b'"scan_res": 4}}',
+    "int_above_int64": _payload(_WORD.replace("30", "9223372036854775808")
+                                % '"a"'),
+    "int_below_int64": _payload(_WORD.replace("1,", "-9223372036854775809,")
+                                % '"a"'),
+    "int_above_uint64": _payload(_WORD.replace("30", "1" + "0" * 20) % '"a"'),
+    "infinite_spelling": _payload(_WORD.replace("10.0", "1e400") % '"a"'),
+    "underflow_spelling": _payload(_WORD.replace("10.0", "1e-400") % '"a"'),
+    "nan_literal": _payload(_WORD.replace("10.0", "NaN") % '"a"'),
+    "number_too_long": _payload(_WORD.replace("10.0", "1." + "0" * 45)
+                                % '"a"'),
+    "leading_zero": _payload(_WORD.replace("30", "030") % '"a"'),
+    "bool_geometry": _payload(_WORD.replace("30", "true") % '"a"'),
+    "null_fontsize": _payload(_WORD.replace("10.0", "null") % '"a"'),
+    "number_text": _payload(_WORD % "5"),
+    "short_bbox": _payload(_WORD.replace("30, ", "") % '"a"'),
+    "string_page_field": _payload(page='"w": "1", "h": 2, "dpi": 3, '
+                                  '"scan_res": 4'),
+    "lines_not_array": b'{"page": {"w": 1, "h": 2, "dpi": 3, "scan_res": 4}'
+                       b', "paragraphs": [{"lines": {}}]}',
+    "trailing_bytes": _payload() + b" x",
+    "top_level_array": b"[" + _payload() + b"]",
+    "bom": b"\xef\xbb\xbf" + _payload(),
+    "raw_control_char": _payload(_WORD % '"a\x01"'),
+    "bad_escape": _payload(_WORD % '"a\\x"'),
+    "deep_unknown_value": _payload(top_extra=', "x": ' + "[" * 80
+                                   + "]" * 80),
+    "empty": b"",
+    "not_json": b"{not json",
+    "invalid_utf8": _payload(_WORD % '"a"').replace(b'"a"', b'"a\xff"'),
+    "overlong_utf8": _payload(_WORD % '"a"').replace(b'"a"', b'"\xc0\xaf"'),
+    "utf8_surrogate": _payload(_WORD % '"a"').replace(b'"a"',
+                                                      b'"\xed\xa0\x80"'),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DECLINED))
+def test_text_payload_declines(case):
+    """Each class of payload the C parser cannot reproduce is declined,
+    and the extraction body then gives the Python path's page (the same
+    subs, digest and warnings, or the same ``extract-error`` marker)."""
+    import pandas as pd
+
+    from archive_pdf_tools_spark.operators import extract
+
+    raw = _DECLINED[case]
+    assert native.text_payload_native(raw) is None
+    try:
+        text = raw.decode()
+    except UnicodeDecodeError:
+        return                      # no str to put in a frame
+    want = extract._guarded(0, extract.extract_one, "text", text, "")
+    out = pd.concat(list(extract._extract_batches([pd.DataFrame([{
+        "doc_id": "d", "offset": 0, "kind": "text", "text": text,
+        "media_ref": ""}])])))
+    got = (int(out["in_offset"][0]), (out["subs"][0], out["ops_sha"][0],
+                                      list(out["warnings"][0])))
+    assert got == want
+
+
+_ACCEPTED = {
+    "negative_zero_int": _payload(_WORD.replace("1,", "-0,") % '"a"'),
+    "negative_zero_float": _payload(_WORD.replace("10.0", "-0.0") % '"a"'),
+    "exponent_float": _payload(_WORD.replace("10.0", "7e-05") % '"a"'),
+    "exponent_int_spelling": _payload(_WORD.replace("10.0", "1E2") % '"a"'),
+    "int64_edges": _payload(_WORD.replace("1, 2,", "-9223372036854775808, "
+                                          "9223372036854775807,") % '"a"'),
+    "escapes": _payload(_WORD % '"q\\"\\\\\\/\\b\\f\\n\\r\\t\\u00e9\\u0000"'),
+    "raw_astral": _payload(_WORD % '"\U0001d518\U0001f680"'),
+    "escaped_key": _payload(_WORD.replace('"text"', '"te\\u0078t"')
+                            % '"a"'),
+    "unknown_keys": _payload(line_extra=', "x": {"y": [1.5, null, true]}',
+                             top_extra=', "z": "\u00e9"'),
+    "reordered_keys": ('{"paragraphs": [{"lines": [{"words": [{'
+                       '"writing_direction": 1, "fontsize": 9, "text": '
+                       '"b", "bbox": [5, 6, 7, 8]}], "baseline": [0, 0], '
+                       '"bbox": [1, 2, 3, 4]}]}], "page": {"scan_res": 1.5, '
+                       '"dpi": null, "h": 2, "w": 1}}').encode(),
+    "whitespace": _payload().replace(b", ", b" \r\n,\t ").replace(
+        b": ", b"\n:\n"),
+    "blank_paragraph": _payload(_WORD % '"\\u3000 \\u2028"'),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ACCEPTED))
+def test_text_payload_accepts_exactly(case):
+    """Spellings the C parser reads exactly as orjson does are not
+    declined, and give the Python path's streams bit for bit."""
+    assert _assert_payload_parity(_ACCEPTED[case])
+
+
+def test_text_payload_ink_is_str_strip():
+    """Which words count as ink is ``str.strip()``'s answer for every
+    whitespace code point Python knows, its neighbours and the whole
+    BMP below U+3100, raw and escaped: a paragraph of one such word
+    is kept or left out exactly as ``_pack`` does."""
+    import json
+    import sys
+
+    space = [c for c in range(sys.maxunicode + 1) if chr(c).isspace()]
+    cps = sorted(({c + d for c in space for d in (-1, 0, 1)}
+                  | set(range(0x3100)) | {0x1F680, 0x10FFFF})
+                 - set(range(0xD800, 0xE000)))
+    assert max(space) < 0x3100
+    paras = [{"lines": [{"bbox": [0, 0, 10, 10], "baseline": [0, 0],
+                         "words": [{"text": chr(c), "bbox": [0, 0, 5, 5],
+                                    "fontsize": 8,
+                                    "writing_direction": 0}]}]}
+             for c in cps]
+    for escape in (False, True):
+        # escaped, an astral code point is a surrogate pair: declined
+        raw = json.dumps({"page": {"w": 1, "h": 1, "dpi": None,
+                                   "scan_res": None},
+                          "paragraphs": paras[:-2] if escape else paras},
+                         ensure_ascii=escape).encode()
+        assert _assert_payload_parity(raw)
+
+
+def test_text_payload_declines_no_corpus_page():
+    """The generator's text pages (raw UTF-8 astral words, exponent and
+    negative-zero spellings among them) all parse in C, so none falls
+    back to the Python parse, and each equals orjson + ``_pack``."""
+    from archive_pdf_tools_spark.corpus.generate import make_doc
+
+    n = 0
+    for d in range(150):
+        for s in make_doc(d, max_spans=40)["spans"]:
+            if s["kind"] == "text":
+                assert _assert_payload_parity(s["text"].encode()), s["text"]
+                n += 1
+    assert n > 1000
+
+
+def test_text_payload_from_arrow_buffers():
+    """The body hands the parser each row's bytes where they sit in the
+    Arrow data buffer, sliced arrays included; a declined or null row
+    comes back as its ``str`` (or None) for the Python path."""
+    import pyarrow as pa
+
+    from archive_pdf_tools_spark.operators.extract import _Payloads
+
+    raws = [_ACCEPTED["raw_astral"], None, _DECLINED["not_json"],
+            _ACCEPTED["escapes"], b""]
+    col = pa.array([None if r is None else r.decode() for r in raws],
+                   pa.string())
+    for offset in (0, 1):
+        rows = _Payloads(col.slice(offset))
+        for slot, raw in enumerate(raws[offset:]):
+            got = rows.parse(slot)
+            if raw in (_ACCEPTED["raw_astral"], _ACCEPTED["escapes"]):
+                packed = got["paragraphs"].packed
+                want = _py_payload(raw)[1]
+                assert packed[:3] == want[:3]
+                assert list(packed[3]) == want[3]
+                assert got["paragraphs"].paragraphs() == \
+                    __import__("json").loads(raw)["paragraphs"]
+            else:
+                assert got is None
+                assert rows.value(slot) == (None if raw is None
+                                            else raw.decode())
+    # an IPC stream whose offsets point past the data buffer reads
+    # without complaint; no row of it reaches the parser
+    raw = _ACCEPTED["raw_astral"]
+    batch = pa.record_batch([pa.array([raw.decode()])], names=["text"])
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, batch.schema) as w:
+        w.write_batch(batch)
+    stream = sink.getvalue().to_pybytes()
+    at = stream.rindex(np.array([0, len(raw)], np.int32).tobytes())
+    stream = (stream[:at] + np.array([0, len(raw) + 4096], np.int32)
+              .tobytes() + stream[at + 8:])      # the body's offsets
+    bad = pa.ipc.open_stream(stream).read_next_batch().column(0)
+    assert _Payloads(bad).parse(0) is None
+
+
+def test_text_payload_threads_keep_their_buffers():
+    """The parse releases the GIL too: threads parsing at once must each
+    get their own payload's streams, not another thread's."""
+    import json
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    rng = np.random.default_rng(8)
+    raws = [json.dumps({"page": {"w": 1 + i, "h": 2, "dpi": None,
+                                 "scan_res": None},
+                        "paragraphs": _fuzz_page(rng)},
+                       ensure_ascii=False).encode("utf-8", "surrogatepass")
+            for i in range(64)]
+    want = [native.text_payload_native(r) for r in raws]
+    assert sum(w is not None for w in want) > 20
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            futs = [ex.submit(native.text_payload_native, r)
+                    for _ in range(8) for r in raws]
+            got = [f.result(timeout=60) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert got == want * 8
+
+
+def test_text_payload_self_test_mismatch_falls_back(monkeypatch):
+    """A build whose payload parser disagrees with ``_pack`` fails the
+    load self-test too: the process runs pure Python."""
+    got = native.text_payload_native(_ACCEPTED["raw_astral"])
+    monkeypatch.setattr(native, "text_payload_native",
+                        lambda *a, **k: got)       # another page's parse
+    monkeypatch.setattr(native, "_tried", False)
+    monkeypatch.setattr(native, "_lib", None)
+    monkeypatch.setattr(native, "_status", native._status)
+    assert not native.available()
+    assert native.status() == "self-test mismatch; pure Python"

@@ -90,3 +90,50 @@ def test_mrc_lanczos_downsample_mode():
                               downsample_method="lanczos")
     assert a.background.shape == b.background.shape
     assert not np.array_equal(a.background, b.background)  # different filter
+
+
+# Bytes of every BLAS-backed output that reaches an artefact: Lanczos
+# downsampling (the gray ``@`` chain and the RGB ``einsum``) over random
+# shapes and factors, and the sRGB ICC profile (``np.linalg`` solves).
+_BLAS_PROBE = """
+import hashlib
+import numpy as np
+from archive_pdf_tools_spark.kernels.iccsrgb import srgb_icc_profile
+from archive_pdf_tools_spark.kernels.pages import downsample_lanczos
+rng = np.random.default_rng(11)
+h = hashlib.sha1()
+for shape in [(97, 61), (64, 64), (211, 173), (130, 47, 3), (33, 90, 3)]:
+    img = rng.integers(0, 256, shape, dtype=np.uint8)
+    for factor in (2, 3.5):
+        h.update(downsample_lanczos(img, factor)[0].tobytes())
+h.update(srgb_icc_profile())
+print(h.hexdigest())
+"""
+
+
+def test_blas_outputs_are_bit_stable_across_core_types():
+    """The same bytes whichever GEMM kernel OpenBLAS picks for the host:
+    forced to a core type without fused multiply-add (Sandybridge) and
+    to one with it (SkylakeX), as the JPEG DCT's were not before it
+    stopped using BLAS.  A host without AVX-512 cannot run SkylakeX."""
+    import os
+    import subprocess
+    import sys
+
+    import pytest
+
+    blas = np.show_config(mode="dicts")["Build Dependencies"]["blas"]
+    if "openblas" not in blas.get("name", ""):
+        pytest.skip(f"numpy is not built on OpenBLAS ({blas.get('name')})")
+    with open("/proc/cpuinfo") as f:
+        if "avx512f" not in f.read():
+            pytest.skip("no AVX-512: OpenBLAS cannot run SkylakeX here")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    digests = {}
+    for core in ("Sandybridge", "SkylakeX"):
+        env = dict(os.environ, OPENBLAS_CORETYPE=core,
+                   OPENBLAS_NUM_THREADS="1", PYTHONPATH=root)
+        digests[core] = subprocess.run(
+            [sys.executable, "-c", _BLAS_PROBE], env=env, check=True,
+            capture_output=True, text=True, timeout=120).stdout.strip()
+    assert len(set(digests.values())) == 1, digests

@@ -85,6 +85,38 @@ def test_skip_and_stop_after_match_local(spark, input_df, corpus):
             assert got[doc["doc_id"]] == want["spans"], doc["doc_id"]
 
 
+def test_guard_names_a_null_offset_value_error():
+    """A null offset is a ValueError marker whether it arrives as None
+    (the Arrow body, the oracle) or as NaN (a pandas frame), and the
+    page body never runs for it."""
+    from archive_pdf_tools_spark.operators.extract import _guarded
+
+    calls = []
+
+    def page():
+        calls.append(1)
+        return [("text", "x", "")], "sha", []
+
+    for null in (None, float("nan")):
+        assert _guarded(null, page) == (
+            None, ([], "", ["extract-error:ValueError"]))
+    assert calls == []
+    assert _guarded(3, page) == (3, ([("text", "x", "")], "sha", []))
+
+
+def test_page_row_arrow_schema_is_sparks(spark):
+    """The Arrow batches the extraction body yields have exactly the
+    types Spark maps the intermediate schema to."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from archive_pdf_tools_spark.operators.extract import (
+        INTERMEDIATE_SCHEMA_DDL, PAGE_ROW_SCHEMA)
+
+    want = to_arrow_schema(StructType.fromDDL(INTERMEDIATE_SCHEMA_DDL))
+    assert PAGE_ROW_SCHEMA.equals(want, check_metadata=True)
+
+
 def test_poison_row_does_not_kill_job(spark):
     """Malformed payloads become empty pages with an error marker in the
     metrics table; healthy rows are unaffected, and the single-process

@@ -58,7 +58,8 @@ def test_pricing_summary_partial_aggregate(spark):
 def test_extraction_single_regroup_shuffle(spark, tmp_path):
     """The extraction DAG shuffles exactly twice: the explicit salted
     repartition and the per-doc regroup — nothing else (rasters and
-    payloads never enter an extra shuffle)."""
+    payloads never enter an extra shuffle).  The kernel stage is one
+    MapInArrow: span rows cross into Python as Arrow, not pandas."""
     from archive_pdf_tools_spark.operators.extract import (
         OUTPUT_SCHEMA_DDL, extract_spans, reassemble)
     docs = spark.createDataFrame(
@@ -68,6 +69,8 @@ def test_extraction_single_regroup_shuffle(spark, tmp_path):
     import re
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange", p, re.MULTILINE))
     assert n_exchanges == 2, p
+    assert len(re.findall(r"^\(\d+\) MapInArrow", p, re.MULTILINE)) == 1, p
+    assert "MapInPandas" not in p, p
 
 
 def test_srp_signature_is_vectorized_not_interpreted(spark):

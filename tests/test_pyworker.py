@@ -128,6 +128,17 @@ def test_decorated_body_pickles_by_reference():
     assert pickle.loads(blob) is extract._extract_batches
 
 
+def test_arrow_body_pickles_by_reference():
+    """The Spark body (mapInArrow) travels to the workers as a reference
+    to the module attribute, like its pandas adapter above."""
+    import cloudpickle
+
+    from archive_pdf_tools_spark.operators import extract
+
+    blob = cloudpickle.dumps(extract._extract_arrow)
+    assert pickle.loads(blob) is extract._extract_arrow
+
+
 def test_worker_task_rereads_no_engine_archive(spark, tmp_path):
     """In a real worker: after ``_extract_batches`` ran on a one-page
     frame, ``invalidate_caches()`` re-reads no archive outside the
