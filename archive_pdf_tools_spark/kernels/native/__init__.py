@@ -383,7 +383,7 @@ def _self_test(lib) -> bool:
     import json
 
     from ..jp2codec import t1_decode, t1_encode
-    from ..textlayer import (PackedLines, _pack, _render_native,
+    from ..textlayer import (_lines, _pack, _render_native,
                              _render_text_layer_py)
 
     args = (_TEXT_PAGE, 612.0, 792.0, 72.0, 0.24)
@@ -401,7 +401,7 @@ def _self_test(lib) -> bool:
     if (fields != tuple(page.values())
             or [type(v) for v in fields] != [type(v) for v in page.values()]
             or (ints, nums, blob) != want[:3]
-            or PackedLines(text, lens) != want[3] or want[4]):
+            or _lines(text, lens) != want[3] or want[4]):
         return False
 
     rng = np.random.default_rng(20260818)

@@ -37,7 +37,7 @@ from . import native
 __all__ = ["prec", "floatbytes", "dist2", "get_word_baseline",
            "affine_matrix", "clip_baseline", "codepoint_to_utf16be",
            "render_text_layer", "parse_payload", "PageTextResult",
-           "PackedLines", "PackedPage"]
+           "PackedPage"]
 
 WRITING_DIRECTION_UNSPECIFIED = 0
 WRITING_DIRECTION_LEFT_TO_RIGHT = 1
@@ -138,28 +138,6 @@ def codepoint_to_utf16be(code: int):
     return True, res.encode("ascii")
 
 
-class PackedLines:
-    """Line texts as one UTF-8 ``bytes`` and each line's byte length,
-    as the compiled payload parser gives them; iterates, and compares,
-    as the list of ``str`` lines."""
-
-    __slots__ = ("data", "lens")
-
-    def __init__(self, data: bytes, lens):
-        self.data, self.lens = data, lens
-
-    def __iter__(self):
-        pos = 0
-        for n in self.lens:
-            yield self.data[pos:pos + n].decode()
-            pos += n
-
-    def __eq__(self, other):
-        return list(self) == list(other)
-
-    __hash__ = None
-
-
 class PackedPage:
     """A payload's paragraphs as the compiled parser packed them, in
     place of the paragraph list for ``render_text_layer``: ``packed``
@@ -171,6 +149,17 @@ class PackedPage:
 
     def __init__(self, packed, paragraphs):
         self.packed, self.paragraphs = packed, paragraphs
+
+
+def _lines(data: bytes, lens) -> list:
+    """The line texts of one UTF-8 ``bytes`` and each line's byte
+    length."""
+    lines = []
+    pos = 0
+    for n in lens:
+        lines.append(data[pos:pos + n].decode())
+        pos += n
+    return lines
 
 
 def parse_payload(payload, n, paragraphs):
@@ -187,7 +176,7 @@ def parse_payload(payload, n, paragraphs):
     (w, h, dpi, scan_res), ints, nums, blob, text, lens = got
     return {"page": {"w": w, "h": h, "dpi": dpi, "scan_res": scan_res},
             "paragraphs": PackedPage(
-                (ints, nums, blob, PackedLines(text, lens), 0), paragraphs)}
+                (ints, nums, blob, _lines(text, lens), 0), paragraphs)}
 
 
 @dataclass
@@ -252,8 +241,7 @@ def render_text_layer(word_data: list, width: float, height: float,
     loaded and the page is one it reproduces exactly; otherwise, and
     for every page it declines, the pure-Python body below, which is
     the oracle the compiled kernel is tested against.  ``word_data``
-    may be a ``PackedPage`` (``parse_payload``); its lines then come
-    back as ``PackedLines`` unless the Python body runs."""
+    may be a ``PackedPage`` (``parse_payload``)."""
     res = _render_native(word_data, width, height, ppi, font_scale)
     if res is None:
         if type(word_data) is PackedPage:

@@ -74,8 +74,7 @@ from ..kernels.dpi import page_geometry, pick_font_scaler
 from ..kernels.mrc import mrc_mask_phase
 from ..kernels.optimise import (fast_mask_denoise_batch,
                                 optimise_gray2_batch, optimise_rgb2_batch)
-from ..kernels.textlayer import (PackedLines, parse_payload,
-                                 render_text_layer)
+from ..kernels.textlayer import parse_payload, render_text_layer
 from ..pyworker import number_spans, python_task
 
 __all__ = ["extract_one", "extract_document_local", "extract_spans",
@@ -146,9 +145,7 @@ def _media_phase_a(media_ref: str, apply_denoise: bool = True):
 
 def _text_page(payload):
     """A parsed text payload -> (subs, ops_sha, warnings).  The
-    paragraphs are a list, or a ``PackedPage`` from ``parse_payload``:
-    then the subs are the ``PackedLines`` the kernel kept, unless the
-    Python body ran."""
+    paragraphs are a list, or a ``PackedPage`` from ``parse_payload``."""
     page = payload["page"]
     width, height, ppi, warnings = page_geometry(
         page["w"], page["h"], doc_dpi=page.get("dpi"))
@@ -161,10 +158,8 @@ def _text_page(payload):
     ops_sha = hashlib.sha1(res.text_ops).hexdigest()[:16]
     if res.dropped_codepoints:
         warnings.append("dropped-codepoints")
-    subs = res.lines
-    if type(subs) is not PackedLines:
-        subs = [("text", line_text, "") for line_text in subs]
-    return subs, ops_sha, warnings
+    return ([("text", line_text, "") for line_text in res.lines], ops_sha,
+            warnings)
 
 
 def extract_one(kind: str, text: str, media_ref: str):
@@ -272,14 +267,6 @@ class _Strings:
         self.parts.append(b)
         self.lens.append(len(b))
 
-    def extend(self, data: bytes, lens):
-        self.parts.append(data)
-        self.lens.extend(lens)
-
-    def repeat(self, s: bytes, k: int):
-        self.parts.append(s * k)
-        self.lens.extend(array("i", [len(s)]) * k)
-
     def array(self) -> pa.Array:
         offsets = np.zeros(len(self.lens) + 1, np.int64)
         np.cumsum(np.frombuffer(self.lens, np.int32), out=offsets[1:])
@@ -291,23 +278,16 @@ class _Strings:
 
 
 def _subs_array(results) -> pa.Array:
-    """The pages' subs -> ``array<struct<kind,text,media_ref>>``: lists
-    of tuples, or ``PackedLines`` copied over as they are."""
+    """The pages' subs (lists of (kind, text, media_ref) tuples) ->
+    ``array<struct<kind,text,media_ref>>``."""
     kind, text, ref = _Strings(), _Strings(), _Strings()
     ends = array("i", [0])
     for subs, _sha, _warns in results:
-        if type(subs) is PackedLines:
-            k = len(subs.lens)
-            kind.repeat(b"text", k)
-            text.extend(subs.data, subs.lens)
-            ref.repeat(b"", k)
-        else:
-            k = len(subs)
-            for sub_kind, sub_text, sub_ref in subs:
-                kind.add(sub_kind)
-                text.add(sub_text)
-                ref.add(sub_ref)
-        ends.append(ends[-1] + k)
+        for sub_kind, sub_text, sub_ref in subs:
+            kind.add(sub_kind)
+            text.add(sub_text)
+            ref.add(sub_ref)
+        ends.append(ends[-1] + len(subs))
     values = pa.StructArray.from_arrays(
         [kind.array(), text.array(), ref.array()], fields=list(_SUB_TYPE))
     return pa.ListArray.from_arrays(
@@ -395,14 +375,15 @@ def _extract_pages(batch: pa.RecordBatch) -> pa.RecordBatch:
         schema=PAGE_ROW_SCHEMA)
 
 
-def _coalesced(batches, min_rows: int = 512):
-    """Record batches concatenated to >= ``min_rows`` rows each: under
+def _coalesced(batches):
+    """Record batches concatenated to >= 512 rows each: under
     a small ``arrow.maxRecordsPerBatch`` (the session keeps it low for
     the payload-heavy queries) the same-shape optimise/denoise groups
     degenerate to ~1-2 pages each and their batch-vectorized row loops
     stop amortizing (measured 1.7 pages/group at 64-row batches).
     Memory-safe: span rows are small (refs + hOCR payloads — rasters are
     rendered inside this stage and never cross the boundary)."""
+    min_rows = 512
     pending: list = []
     rows = 0
     for b in batches:
@@ -430,7 +411,6 @@ def _extract_arrow(batches: Iterable[pa.RecordBatch]
         yield _extract_pages(batch)
 
 
-@python_task
 def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """``_extract_arrow`` for pandas frames of span rows (in-process
     callers: the kernel sample, tests): page rows come back as frames

@@ -1066,7 +1066,7 @@ def _assert_payload_parity(raw: bytes):
     assert [type(v) for v in fields] == [type(v) for v in w_fields], raw
     assert ints == w_ints and blob == w_blob, raw
     assert nums.tobytes() == w_nums.tobytes(), raw        # -0.0 too
-    assert list(tl.PackedLines(text, lens)) == w_lines and not w_dropped
+    assert tl._lines(text, lens) == w_lines and not w_dropped
     return True
 
 

@@ -120,17 +120,8 @@ def test_python_task_trims_on_entry_and_exit(worker, tmp_path, monkeypatch):
 
 
 def test_decorated_body_pickles_by_reference():
-    import cloudpickle
-
-    from archive_pdf_tools_spark.operators import extract
-
-    blob = cloudpickle.dumps(extract._extract_batches)
-    assert pickle.loads(blob) is extract._extract_batches
-
-
-def test_arrow_body_pickles_by_reference():
     """The Spark body (mapInArrow) travels to the workers as a reference
-    to the module attribute, like its pandas adapter above."""
+    to the module attribute."""
     import cloudpickle
 
     from archive_pdf_tools_spark.operators import extract
