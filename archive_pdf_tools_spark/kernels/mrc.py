@@ -165,14 +165,13 @@ def mrc_mask_phase(image: np.ndarray, hocr_word_data: list,
                    dpi: int | None = None,
                    downsample: float | None = None,
                    denoise_mask: str = DENOISE_FAST,
-                   gray_mode: str = "itu",
-                   apply_denoise: bool = True):
+                   gray_mode: str = "itu"):
     """Mask-building phase of the MRC decomposition (``mrc.py:358-399``):
     gray conversion, hOCR mask, threshold mask, denoise.  Returns
-    (mask, line_decisions, warnings).  Split out so the Spark operator
-    can run the fg/bg optimise phase batched across same-shape pages;
-    with ``apply_denoise=False`` the caller runs the (batched) denoise
-    itself."""
+    (mask, line_decisions, warnings).  Split out so a caller can run the
+    denoise and the fg/bg optimise itself: the extraction operator
+    passes ``DENOISE_NONE`` and calls both kernels through its own
+    module names, one page at a time."""
     warnings: list[str] = []
     is_rgb = image.ndim == 3
     if is_rgb:
@@ -192,15 +191,13 @@ def mrc_mask_phase(image: np.ndarray, hocr_word_data: list,
     create_threshold_mask(mask_arr, grayimgf, dpi=dpi)   # MIX_THRESHOLD=True
 
     if denoise_mask == DENOISE_FAST:
-        if apply_denoise:
-            mask_arr = fast_mask_denoise(mask_arr, 4, 2)  # mrc.py:388
+        mask_arr = fast_mask_denoise(mask_arr, 4, 2)      # mrc.py:388
     elif denoise_mask == DENOISE_BREGMAN:
         # The reference's optional TV mode (mrc.py:90-108); from-scratch
         # split-Bregman solver (kernels/bregman.py), same float-cast ->
         # weight=1.0 -> (>0.4) re-binarize contract.
-        if apply_denoise:
-            from .bregman import denoise_mask_bregman
-            mask_arr = denoise_mask_bregman(mask_arr)
+        from .bregman import denoise_mask_bregman
+        mask_arr = denoise_mask_bregman(mask_arr)
     elif denoise_mask != DENOISE_NONE:
         raise ValueError("Invalid denoise option: %s" % denoise_mask)
     return mask_arr, decisions, warnings

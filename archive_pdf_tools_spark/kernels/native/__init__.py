@@ -919,7 +919,7 @@ def mask_denoise_native(masks: np.ndarray, mincnt: int, n_size: int):
     """Batched raster-order mask denoise (B, h, w) -> denoised uint8
     batch, bit-exact mirror of ``optimise.py::fast_mask_denoise_slow``
     run per page (sequential same-window feedback included); None =
-    use the NumPy batch path."""
+    use the NumPy path (``optimise.fast_mask_denoise``)."""
     lib = _load()
     if lib is None:
         return None

@@ -182,94 +182,12 @@ def _optimise2(mask: np.ndarray, img: np.ndarray, n_size: int) -> np.ndarray:
 
 def _optimise2_batch(masks: np.ndarray, imgs: np.ndarray,
                      n_size: int) -> np.ndarray:
-    """Batched fast path: same per-page semantics as ``_optimise2`` with a
-    leading batch axis — with the compiled kernel available the batch
-    simply loops per item through C (the batching existed to amortize
-    the Python IIR row loop, which the C walk replaces outright); the
-    whole same-shape batch, amortizing NumPy dispatch (measured ~3x on
-    the full kernel).  masks (B,h,w) bool-ish, imgs (B,h,w[,ch]) uint8."""
-    from . import native as _ckern
-
-    if _ckern.available() and len(masks):
-        outs = [_ckern.optimise2_native(np.asarray(m) != 0, im, n_size)
-                for m, im in zip(masks, imgs)]
-        if all(o is not None for o in outs):
-            return np.stack(outs).reshape(np.asarray(imgs).shape)
-
-    masks_b = masks.astype(bool)
-    imgs = np.ascontiguousarray(imgs, dtype=np.uint8)
-    B, h, w = masks_b.shape
-    chans = 1 if imgs.ndim == 3 else imgs.shape[3]
-    img4 = imgs.reshape(B, h, w, chans)
-    new = img4.copy()
-    if h == 0 or w == 0 or B == 0:
-        return new.reshape(imgs.shape)
-
-    idt = _integral_dtype(h, w, 255)
-    xs_arr, iir_xcount, r0, r1, c0, c1 = _optimise_geometry(h, w, n_size)
-
-    # FIR integrals per page: cumsum over axes 1/2 with the batch axis
-    # broadcast through _windowed_sum_2d-equivalent gathers.
-    def wsum(arr, dtype):
-        S = np.zeros((B, h + 1, w + 1) + arr.shape[3:], dtype=dtype)
-        inner = S[:, 1:, 1:]
-        np.cumsum(arr, axis=1, dtype=dtype, out=inner)
-        np.cumsum(inner, axis=2, out=inner)
-        St = S[:, r1 + 1]
-        St -= S[:, r0]
-        out = St[:, :, c1 + 1]
-        out -= St[:, :, c0]
-        return out
-
-    masked_vals = np.where(masks_b[..., None], img4, np.uint8(0))
-    fir_val_full = wsum(masked_vals, idt)                  # (B,h,w,ch)
-    fir_cnt_full = wsum(masks_b.view(np.uint8), idt)       # (B,h,w)
-
-    iir_ycount = np.minimum(np.arange(h), n_size).astype(np.int32)
-    cnt_full = fir_cnt_full + (iir_ycount[:, None]
-                               * iir_xcount[None, :])[None, :, :]
-    zero_full = cnt_full == 0
-    any_zero_row = zero_full.any(axis=2)
-    np.maximum(cnt_full, 1, out=cnt_full)
-
-    cdt = np.int32 if 255 * (2 * n_size) * w < 2**31 else np.int64
-    iir_val_cols = np.zeros((B, w, chans), dtype=cdt)
-    iys_prev = iye_prev = 0
-    P = np.empty((B, w, chans), dtype=cdt)
-    iir_v = np.zeros((B, w, chans), dtype=cdt)
-    todo_rows = ~masks_b
-    any_todo = todo_rows.any(axis=2)        # (B, h)
-    any_zero = bool(any_zero_row.any())
-
-    for y in range(h):
-        ys = max(0, y - n_size)
-        while iys_prev < ys:
-            iir_val_cols -= new[:, iys_prev]
-            iys_prev += 1
-        while iye_prev < y:
-            iir_val_cols += new[:, iye_prev]
-            iye_prev += 1
-
-        if not any_todo[:, y].any():
-            continue
-
-        np.cumsum(iir_val_cols, axis=1, out=P)
-        iir_v[:, 0] = 0
-        if n_size < w:
-            iir_v[:, 1:n_size + 1] = P[:, 0:n_size]
-            np.subtract(P[:, n_size:w - 1], P[:, 0:w - 1 - n_size],
-                        out=iir_v[:, n_size + 1:])
-        else:
-            iir_v[:, 1:] = P[:, 0:w - 1]
-
-        vals = fir_val_full[:, y] + iir_v
-        res = vals // cnt_full[:, y][:, :, None]
-        if any_zero:
-            res[zero_full[:, y]] = 0
-        np.copyto(new[:, y], res.astype(np.uint8),
-                  where=todo_rows[:, y][:, :, None])
-
-    return new.reshape(imgs.shape)
+    """``_optimise2`` page by page over a leading batch axis: masks
+    (B,h,w) bool-ish, imgs (B,h,w[,ch]) uint8."""
+    out = np.empty(np.shape(imgs), np.uint8)
+    for i, (mask, img) in enumerate(zip(masks, imgs)):
+        out[i] = _optimise2(mask, img, n_size)
+    return out
 
 
 def optimise_gray2_batch(masks, imgs, n_size):
@@ -378,47 +296,17 @@ def fast_mask_denoise(mask: np.ndarray, mincnt: int = 4, n_size: int = 2) -> np.
 
 def fast_mask_denoise_batch(masks: np.ndarray, mincnt: int = 4,
                             n_size: int = 2) -> np.ndarray:
-    """Batched ``fast_mask_denoise`` over same-shape masks (B, h, w): the
-    per-row window sums vectorize across the batch; the rare sequential
-    fix-up (same-row feedback) resolves per page.  Per-page results are
-    bit-identical to the single-page kernel (tested)."""
+    """``fast_mask_denoise`` over same-shape masks (B, h, w): one C call
+    for the batch, else the NumPy kernel mask by mask."""
     from . import native as _ckern
 
     res = _ckern.mask_denoise_native(masks, mincnt, n_size)
     if res is not None:
         return res.view(bool)
-    m = masks.astype(np.uint8).copy()
-    B, h, w = m.shape
-    if h <= 2 * n_size or w <= 2 * n_size:
-        return m.astype(bool)
-    xs0 = np.arange(n_size, w - n_size) - n_size
-    xe0 = np.arange(n_size, w - n_size) + n_size + 1
-    c = np.empty((B, w + 1), dtype=np.int64)
-    c[:, 0] = 0
-    for y in range(n_size, h - n_size):
-        block = m[:, y - n_size:y + n_size + 1, :]
-        np.cumsum(block.sum(axis=1, dtype=np.int64), axis=1, out=c[:, 1:])
-        cnt0 = c[:, xe0] - c[:, xs0]          # (B, w-2n) incl. self
-        inner = m[:, y, n_size:w - n_size].astype(bool)
-        ambiguous = inner & (cnt0 - 1 < mincnt + 2 * n_size)
-        if not ambiguous.any():
-            continue
-        amb_pages = np.flatnonzero(ambiguous.any(axis=1))
-        for b in amb_pages:
-            row = m[b, y]
-            amb_idx = np.flatnonzero(ambiguous[b]) + n_size
-            cleared: list[int] = []
-            for x in amb_idx:
-                delta = 0
-                for cx in reversed(cleared):
-                    if cx < x - n_size:
-                        break
-                    delta += 1
-                cnt = int(cnt0[b, x - n_size]) - delta
-                if cnt - 1 < mincnt:
-                    row[x] = 0
-                    cleared.append(x)
-    return m.astype(bool)
+    out = np.empty(np.shape(masks), bool)
+    for i, mask in enumerate(masks):
+        out[i] = fast_mask_denoise(mask, mincnt, n_size)
+    return out
 
 
 def fast_mask_denoise_slow(mask: np.ndarray, mincnt: int = 4, n_size: int = 2) -> np.ndarray:

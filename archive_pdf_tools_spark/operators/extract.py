@@ -46,32 +46,18 @@ the reference's per-page timing/errors reporting (``recode.py:237-262,
 from __future__ import annotations
 
 import hashlib
-import json
 import time
 from array import array
 from typing import Iterable, Iterator
 
-try:                                    # optional fast path for the per-page
-    import orjson as _fastjson          # payload parse; stdlib json is the
-except ImportError:                     # fallback where it is not installed
-    _fastjson = None
-
-def _loads(payload: str):
-    # The Python parse: the oracle (extract_one) and the fallback for
-    # the payloads the compiled parser declines
-    # (``textlayer.parse_payload`` parses every other text page from
-    # its Arrow bytes).  orjson whenever the package is installed.
-    if _fastjson is not None:
-        return _fastjson.loads(payload)
-    return json.loads(payload)
-
 import numpy as np
+import orjson
 import pandas as pd
 import pyarrow as pa
 
 from ..corpus.rasters import page_spec, render_raster, spec_word_data
 from ..kernels.dpi import page_geometry, pick_font_scaler
-from ..kernels.mrc import mrc_mask_phase
+from ..kernels.mrc import DENOISE_NONE, mrc_mask_phase
 from ..kernels.optimise import (fast_mask_denoise_batch,
                                 optimise_gray2_batch, optimise_rgb2_batch)
 from ..kernels.textlayer import parse_payload, render_text_layer
@@ -127,22 +113,6 @@ def mrc_spans(ref: str, word_data: list, decisions, mask: np.ndarray,
     return out
 
 
-def _media_phase_a(media_ref: str, apply_denoise: bool = True):
-    """Per-page part of the media path: raster, masks, line decisions.
-    With ``apply_denoise=False`` the mask still needs the (batched)
-    denoise pass before hashing/optimise."""
-    spec = page_spec(media_ref)
-    raster = render_raster(spec)
-    if spec["bitonal"]:
-        return {"bitonal": True, "spec": spec, "raster": raster}
-    word_data = spec_word_data(spec)
-    mask, decisions, warnings = mrc_mask_phase(
-        raster, word_data, dpi=spec["dpi"], apply_denoise=apply_denoise)
-    return {"bitonal": False, "spec": spec, "raster": raster, "mask": mask,
-            "word_data": word_data, "decisions": decisions,
-            "warnings": warnings}
-
-
 def _text_page(payload):
     """A parsed text payload -> (subs, ops_sha, warnings).  The
     paragraphs are a list, or a ``PackedPage`` from ``parse_payload``."""
@@ -162,26 +132,35 @@ def _text_page(payload):
             warnings)
 
 
-def extract_one(kind: str, text: str, media_ref: str):
+def extract_one(kind: str, text, media_ref: str):
     """Extract one input span -> (list of (kind, text, media_ref),
-    ops_sha, warnings).  Pure function of the inputs."""
+    ops_sha, warnings).  Pure function of the inputs.  ``text`` is a
+    text span's JSON payload, or that payload already parsed by
+    ``textlayer.parse_payload``.
+
+    The kernels run one page at a time (``mrc.py:334-471``; the batch
+    kernels get a batch of one), called through this module's globals
+    so that perfbench's kernel sample can time each by patching it."""
     if kind == "text":
-        return _text_page(_loads(text))
+        return _text_page(text if isinstance(text, dict)
+                          else orjson.loads(text))
     if kind != "media":
         return [], "", [f"unknown-kind:{kind}"]
-    ph = _media_phase_a(media_ref)
-    if ph["bitonal"]:
-        return ([("media", "",
-                  f"{media_ref}#bitonal={_sha12(ph['raster'])}")], "", [])
-    raster, mask = ph["raster"], ph["mask"]
-    if raster.ndim == 3:
-        fg = optimise_rgb2_batch(mask[None], raster[None], 3)[0]
-        bg = optimise_rgb2_batch(~mask[None], raster[None], 10)[0]
-    else:
-        fg = optimise_gray2_batch(mask[None], raster[None], 3)[0]
-        bg = optimise_gray2_batch(~mask[None], raster[None], 10)[0]
-    return (mrc_spans(media_ref, ph["word_data"], ph["decisions"], mask,
-                      fg, bg), "", list(ph["warnings"]))
+    spec = page_spec(media_ref)
+    raster = render_raster(spec)
+    if spec["bitonal"]:
+        return ([("media", "", f"{media_ref}#bitonal={_sha12(raster)}")],
+                "", [])
+    word_data = spec_word_data(spec)
+    mask, decisions, warnings = mrc_mask_phase(
+        raster, word_data, dpi=spec["dpi"], denoise_mask=DENOISE_NONE)
+    mask = fast_mask_denoise_batch(mask[None], 4, 2)[0]     # mrc.py:388
+    optimise = (optimise_rgb2_batch if raster.ndim == 3
+                else optimise_gray2_batch)
+    fg = optimise(mask[None], raster[None], 3)[0]
+    bg = optimise(~mask[None], raster[None], 10)[0]
+    return (mrc_spans(media_ref, word_data, decisions, mask, fg, bg), "",
+            warnings)
 
 
 def _guarded(offset, page, *args):
@@ -252,7 +231,7 @@ class _Payloads:
         start = self.ends[slot]
         return parse_payload(
             self.base + start, self.ends[slot + 1] - start,
-            lambda: _loads(self.value(slot))["paragraphs"])
+            lambda: orjson.loads(self.value(slot))["paragraphs"])
 
 
 class _Strings:
@@ -300,70 +279,27 @@ def _as_string(col):
 
 
 def _extract_pages(batch: pa.RecordBatch) -> pa.RecordBatch:
-    """Span rows -> one page row per span (``PAGE_ROW_SCHEMA``).
-
-    Non-bitonal media pages are executed in two phases: per-page mask
-    building, then fg/bg optimise *batched across same-shape pages* of
-    the batch (the sequential IIR row loop runs once per shape group
-    instead of once per page — measured ~3x on the optimise kernel).
-    Results are bit-identical to the per-page path (tested)."""
-    # Cap the pixels stacked per optimise group (memory bound per worker).
-    max_group_px = 4_000_000
-    n = batch.num_rows
+    """Span rows -> one page row per span (``PAGE_ROW_SCHEMA``): each
+    row is ``extract_one`` under the poison-row guard, timed on its own;
+    a text payload the compiled parser accepts reaches it parsed."""
     texts = _Payloads(batch.column("text"))
-    media_refs = batch.column("media_ref").to_pylist()
-    results: list = [None] * n          # slot -> (subs, ops_sha, warns)
-    offsets: list = [None] * n
-    elapsed = [0.0] * n
-    deferred: dict[tuple, list] = {}    # (h,w,ndim) -> [(slot, phase)]
 
-    def first_phase(slot, kind, media_ref):
-        if kind == "text":
-            payload = texts.parse(slot)         # None: parse it in Python
-            if payload is not None:
-                return _text_page(payload)
-        if kind != "media":
-            return extract_one(kind, texts.value(slot), media_ref)
-        ph = _media_phase_a(media_ref, apply_denoise=False)
-        if ph["bitonal"]:
-            return ([("media", "",
-                      f"{media_ref}#bitonal={_sha12(ph['raster'])}")],
-                    "", [])
-        deferred.setdefault(ph["raster"].shape, []).append((slot, ph))
-        return None                     # filled in by the batched phase
+    def page(slot, kind, media_ref):
+        text = None
+        if kind == "text":              # parse() None: parse it in Python
+            text = texts.parse(slot) or texts.value(slot)
+        return extract_one(kind, text, media_ref)
 
+    offsets, results, elapsed = [], [], []
     rows = zip(batch.column("offset").to_pylist(),
-               batch.column("kind").to_pylist(), media_refs)
+               batch.column("kind").to_pylist(),
+               batch.column("media_ref").to_pylist())
     for slot, (offset, kind, media_ref) in enumerate(rows):
         t0 = time.perf_counter()
-        offsets[slot], results[slot] = _guarded(
-            offset, first_phase, slot, kind, media_ref)
-        elapsed[slot] = (time.perf_counter() - t0) * 1000.0
-
-    for key, group in deferred.items():
-        px = int(np.prod(key))
-        chunk = max(1, max_group_px // max(px, 1))
-        for i in range(0, len(group), chunk):
-            part = group[i:i + chunk]
-            t0 = time.perf_counter()
-            masks = fast_mask_denoise_batch(
-                np.stack([ph["mask"] for _s, ph in part]), 4, 2)
-            for j, (_s, ph) in enumerate(part):
-                ph["mask"] = masks[j]     # denoised mask is hashed
-            imgs = np.stack([ph["raster"] for _s, ph in part])
-            if imgs.ndim == 4:
-                fg = optimise_rgb2_batch(masks, imgs, 3)
-                bg = optimise_rgb2_batch(~masks, imgs, 10)
-            else:
-                fg = optimise_gray2_batch(masks, imgs, 3)
-                bg = optimise_gray2_batch(~masks, imgs, 10)
-            share = (time.perf_counter() - t0) * 1000.0 / len(part)
-            for j, (slot, ph) in enumerate(part):
-                results[slot] = (
-                    mrc_spans(media_refs[slot], ph["word_data"],
-                              ph["decisions"], ph["mask"], fg[j], bg[j]),
-                    "", list(ph["warnings"]))
-                elapsed[slot] += share
+        in_offset, result = _guarded(offset, page, slot, kind, media_ref)
+        elapsed.append((time.perf_counter() - t0) * 1000.0)
+        offsets.append(in_offset)
+        results.append(result)
 
     return pa.RecordBatch.from_arrays([
         _as_string(batch.column("doc_id")), pa.array(offsets, pa.int32()),
@@ -376,13 +312,14 @@ def _extract_pages(batch: pa.RecordBatch) -> pa.RecordBatch:
 
 
 def _coalesced(batches):
-    """Record batches concatenated to >= 512 rows each: under
-    a small ``arrow.maxRecordsPerBatch`` (the session keeps it low for
-    the payload-heavy queries) the same-shape optimise/denoise groups
-    degenerate to ~1-2 pages each and their batch-vectorized row loops
-    stop amortizing (measured 1.7 pages/group at 64-row batches).
-    Memory-safe: span rows are small (refs + hOCR payloads — rasters are
-    rendered inside this stage and never cross the boundary)."""
+    """Record batches concatenated to >= 512 rows each: under a small
+    ``arrow.maxRecordsPerBatch`` (the session keeps it low for the
+    payload-heavy queries) a batch's fixed cost (its column conversions
+    in, its Arrow arrays out) would be paid every 64 rows; without this
+    ``extract_text`` read slower in 5 of 6 A/B pairs (median throughput
+    ratio 0.97).  Memory-safe: span rows are small (refs + hOCR payloads
+    — rasters are rendered inside this stage and never cross the
+    boundary)."""
     min_rows = 512
     pending: list = []
     rows = 0

@@ -53,9 +53,10 @@ def trim_zip_import_cache() -> int:
 
 
 def python_task(body):
-    """Decorate a ``mapInPandas`` batch body so it trims the zip-import
-    cache when it starts and when it ends: importers created while the
-    task runs would otherwise be re-read before the next task.
+    """Decorate a ``mapInPandas`` or ``mapInArrow`` batch body so it
+    trims the zip-import cache when it starts and when it ends:
+    importers created while the task runs would otherwise be re-read
+    before the next task.
     ``functools.wraps`` keeps a module-level body pickled by reference."""
     @functools.wraps(body)
     def task(batches):

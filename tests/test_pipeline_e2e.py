@@ -164,8 +164,9 @@ def test_poison_row_does_not_kill_job(spark):
 
 
 def test_arrow_batch_size_invariance(spark, input_df, golden):
-    """The shape-grouped batched media path must produce identical output
-    regardless of how Arrow slices the batches."""
+    """The extraction body (batches coalesced to >= 512 rows, then one
+    page at a time) must produce identical output regardless of how
+    Arrow slices the batches."""
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
