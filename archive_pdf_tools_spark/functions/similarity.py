@@ -97,8 +97,15 @@ def ivf_fit_centroids(embeddings: DataFrame, n_centroids: int = 16,
     rows = (embeddings
             .orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
             .limit(sample).select("embedding").collect())
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    return _fit_centroids(
+        np.array([r["embedding"] for r in rows], dtype=np.float64),
+        n_centroids, iters, seed)
+
+
+def _fit_centroids(X: np.ndarray, n_centroids: int, iters: int,
+                   seed: int) -> np.ndarray:
+    """``ivf_fit_centroids`` on the collected sample rows ``X``."""
+    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
     # Farthest-first init (deterministic k-means++ flavour): a uniform
     # draw can seed two centroids inside one cluster and none in another,
@@ -149,6 +156,12 @@ def ivf_cells(embeddings: DataFrame, C: np.ndarray,
     emits only ids + cells so the (heavy) embedding column never rides
     the blocking shuffle — callers re-join on vec_id when they need the
     vectors back."""
+    return embeddings.select("vec_id", "embedding").mapInPandas(
+        _top_cells_batches(C, nprobe), schema="vec_id bigint, cell int")
+
+
+def _top_cells_batches(C: np.ndarray, nprobe: int):
+    """``ivf_cells``' batch body: each vector's ``nprobe`` best cells."""
     import pandas as pd
 
     def assign(batches):
@@ -166,8 +179,7 @@ def ivf_cells(embeddings: DataFrame, C: np.ndarray,
                 ids = np.zeros(0, np.int64)
                 cells = np.zeros(0, np.int32)
             yield pd.DataFrame({"vec_id": ids, "cell": cells})
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id bigint, cell int")
+    return assign
 
 
 def ivf_topk(embeddings: DataFrame, query: list[float], k: int = 10,

@@ -690,14 +690,6 @@ _SHINGLES_SQL = r"""
 
 
 def q_ngram_jaccard(spark, sf):
-    # The pair-count aggregation exchanges ~1 GB of nearly-all-distinct
-    # numeric pair keys at sf1; the default 64m AQE advisory coalesces
-    # its reduce side to a handful of tasks whose hash maps then spill
-    # (measured 31s -> 3s on the agg alone with 16m).  Scale-adaptive:
-    # AQE still sizes partitions from actual bytes, this only lowers the
-    # per-task target so the reduce side keeps the cluster busy.
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                   "16m")
     return D.ngram_jaccard_pairs(load_table(spark, sf, "documents"),
                                  n=3, tau=0.2, max_df=100)
 

@@ -9,21 +9,17 @@ fixture counterpart of an OCR engine's word boxes) and interleaves a
 seeded media span for every third document, so the flagship pipeline can
 run end-to-end on the driver's own parquet.
 
-Pure column-level construction would be possible but the payload is JSON;
-one vectorized UDF keeps it simple and the shape is built JVM-side with
-``from_json`` exactly like the synthetic source.
+The spans are built in ``pyworker.map_documents``, the guarded
+per-document body every front door runs.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterable, Iterator
 
-import pandas as pd
-
-from .corpus_source import SPANS_JSON_SCHEMA
+from .corpus_source import SPANS_STRUCT_DDL
 from ..corpus.rasters import make_media_ref
-from ..pyworker import python_task
+from ..pyworker import map_documents
 
 __all__ = ["documents_to_spans", "layout_text"]
 
@@ -66,28 +62,25 @@ def layout_payload(text: str, max_words: int = 400) -> dict:
     }
 
 
-@python_task
-def _convert(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
-            doc_key = f"tdoc_{int(doc_id):08d}"
-            spans = [{"kind": "text", "text": layout_text(text or ""),
-                      "media_ref": "", "offset": 0}]
-            if int(doc_id) % 3 == 0:
-                spans.append({"kind": "media", "text": "",
-                              "media_ref": make_media_ref(doc_key, 1,
-                                                          int(doc_id)),
-                              "offset": 1})
-            rows.append((doc_key, json.dumps(spans, ensure_ascii=False)))
-        yield pd.DataFrame(rows, columns=["doc_id", "spans_json"])
+def _doc_spans(doc_key, doc_id, text):
+    """One document's ``(kind, text, media_ref)`` spans: its laid-out
+    text page, then a seeded media page for every third document."""
+    gen_id = int(doc_id)
+    yield "text", layout_text(text or ""), ""
+    if gen_id % 3 == 0:
+        yield "media", "", make_media_ref(doc_key, 1, gen_id)
 
 
 def documents_to_spans(documents_df):
-    """documents (doc_id, text, ...) -> (doc_id, spans) interleaved."""
+    """documents (doc_id, text, ...) -> (doc_id, spans) interleaved, the
+    key ``tdoc_%08d`` of the numeric id; a document that fails to lay
+    out (a null id) gives a ``text_error`` span."""
     from pyspark.sql import functions as F
 
-    raw = documents_df.select("doc_id", "text").mapInPandas(
-        _convert, schema="doc_id string, spans_json string")
-    return raw.select(
-        "doc_id", F.from_json("spans_json", SPANS_JSON_SCHEMA).alias("spans"))
+    keyed = documents_df.select(
+        F.format_string("tdoc_%08d", "doc_id").alias("doc_key"),
+        "doc_id", "text")
+    return map_documents(
+        keyed, ["doc_key", "doc_id", "text"],
+        f"doc_id string, spans {SPANS_STRUCT_DDL}", _doc_spans,
+        lambda msg: ("text_error", msg, ""), spans=True)

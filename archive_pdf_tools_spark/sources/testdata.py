@@ -1,4 +1,11 @@
-"""Driver testdata parquet loaders (TESTDATA.md)."""
+"""Driver testdata parquet loaders (TESTDATA.md).
+
+``load_table`` is a plain ``spark.read.parquet`` of
+``<sf_dir>/<name>.parquet``: it leaves the caller's session conf as it
+found it.  Spark sizes the file splits from the data
+(``min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))``),
+and a one-row-group file is read by one task whatever the split size.
+"""
 
 from __future__ import annotations
 
@@ -7,23 +14,8 @@ import os
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
-# Scan split-size floor: the testdata tables arrive as ONE parquet file
-# each (lineitem at sf1 is ~130 MB), so the default 128 MB
-# spark.sql.files.maxPartitionBytes plans the whole scan as 1-2 tasks
-# and every scan-dominated query runs on 1-2 cores.  A smaller split
-# size recovers scan parallelism on few-file inputs while leaving
-# many-file warehouse layouts unaffected (their files already outnumber
-# cores; a file smaller than the split is never split further...  i.e.
-# only files BIGGER than this value are cut).  Only these testdata
-# loaders set it; ``job.py`` reads its input without them.
-_MAX_PARTITION_BYTES = "16m"
-
 
 def load_table(spark, sf_dir: str, name: str):
-    if spark.conf.get("spark.sql.files.maxPartitionBytes",
-                      None) != _MAX_PARTITION_BYTES:
-        spark.conf.set("spark.sql.files.maxPartitionBytes",
-                       _MAX_PARTITION_BYTES)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 

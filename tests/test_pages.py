@@ -94,10 +94,19 @@ def test_mrc_lanczos_downsample_mode():
 
 # Bytes of every BLAS-backed output that reaches an artefact: Lanczos
 # downsampling (the gray ``@`` chain and the RGB ``einsum``) over random
-# shapes and factors, and the sRGB ICC profile (``np.linalg`` solves).
+# shapes and factors, the sRGB ICC profile (``np.linalg`` solves), and
+# the ANN blocking keys over each testdata embeddings table given as an
+# argument: the IVF centroid fit, SRP signatures, the IVF cell argmax and
+# ``ivf_cells``' top-``nprobe``.  The raw ``X @ C.T`` scores are left
+# out: their last bits follow the GEMM kernel, the keys must not.
 _BLAS_PROBE = """
 import hashlib
+import sys
 import numpy as np
+import pyarrow.parquet as pq
+from archive_pdf_tools_spark.functions.similarity import (
+    _assign_batches, _fit_centroids, _srp_sig_batches, _top_cells_batches,
+    srp_planes)
 from archive_pdf_tools_spark.kernels.iccsrgb import srgb_icc_profile
 from archive_pdf_tools_spark.kernels.pages import downsample_lanczos
 rng = np.random.default_rng(11)
@@ -107,6 +116,15 @@ for shape in [(97, 61), (64, 64), (211, 173), (130, 47, 3), (33, 90, 3)]:
     for factor in (2, 3.5):
         h.update(downsample_lanczos(img, factor)[0].tobytes())
 h.update(srgb_icc_profile())
+for path in sys.argv[1:]:
+    pdf = pq.read_table(path, columns=["vec_id", "embedding"]).to_pandas()
+    C = _fit_centroids(np.array([np.asarray(v, np.float64)
+                                 for v in pdf["embedding"].values]), 16, 3, 17)
+    h.update(C.tobytes())
+    bodies = [_srp_sig_batches(srp_planes(C.shape[1])), _assign_batches(C),
+              *(_top_cells_batches(C, n) for n in (1, 2, 3))]
+    for body in bodies:
+        h.update(next(body(iter([pdf]))).iloc[:, -1].values.tobytes())
 print(h.hexdigest())
 """
 
@@ -114,13 +132,15 @@ print(h.hexdigest())
 def test_blas_outputs_are_bit_stable_across_core_types():
     """The same bytes whichever GEMM kernel OpenBLAS picks for the host:
     forced to a core type without fused multiply-add (Sandybridge) and
-    to one with it (SkylakeX), as the JPEG DCT's were not before it
-    stopped using BLAS.  A host without AVX-512 cannot run SkylakeX."""
+    to two with it (Haswell, SkylakeX), as the JPEG DCT's were not before
+    it stopped using BLAS.  A host without AVX-512 cannot run SkylakeX."""
     import os
     import subprocess
     import sys
 
     import pytest
+
+    from test_plans import SF
 
     blas = np.show_config(mode="dicts")["Build Dependencies"]["blas"]
     if "openblas" not in blas.get("name", ""):
@@ -129,11 +149,13 @@ def test_blas_outputs_are_bit_stable_across_core_types():
         if "avx512f" not in f.read():
             pytest.skip("no AVX-512: OpenBLAS cannot run SkylakeX here")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tables = [os.path.join(os.path.dirname(SF), sf, "embeddings.parquet")
+              for sf in ("sf0.001", "sf0.01", "sf0.1")]
     digests = {}
-    for core in ("Sandybridge", "SkylakeX"):
+    for core in ("Sandybridge", "Haswell", "SkylakeX"):
         env = dict(os.environ, OPENBLAS_CORETYPE=core,
                    OPENBLAS_NUM_THREADS="1", PYTHONPATH=root)
         digests[core] = subprocess.run(
-            [sys.executable, "-c", _BLAS_PROBE], env=env, check=True,
+            [sys.executable, "-c", _BLAS_PROBE, *tables], env=env, check=True,
             capture_output=True, text=True, timeout=120).stdout.strip()
     assert len(set(digests.values())) == 1, digests

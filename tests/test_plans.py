@@ -282,3 +282,36 @@ def test_recompress_is_map_only(spark):
     p = plan_str(recompress_pdfs(df))
     assert "Exchange" not in p
     assert "MapInPandas" in p
+
+
+def test_building_queries_leaves_session_conf_unchanged(spark):
+    """Building a registry query or the driver's ``entry`` DataFrame
+    writes nothing to the caller's session conf.  Each one is built in
+    its own ``newSession()`` (a fresh SQL conf), so a write is seen on
+    every build, not only the first one in the shared session."""
+    import importlib.util
+    import os
+
+    from archive_pdf_tools_spark.queries import QUERIES
+
+    spec = importlib.util.spec_from_file_location(
+        "spark_entry", os.path.join(os.path.dirname(__file__), "..",
+                                    "__spark_entry__.py"))
+    driver = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(driver)
+    builds = {name: (lambda s, fn=fn: fn(s, SF))
+              for name, (fn, _sql) in QUERIES.items()}
+    builds["__spark_entry__.entry"] = driver.entry
+
+    changed = {}
+    for name, build in builds.items():
+        session = spark.newSession()
+        before = session.conf.getAll
+        build(session)
+        after = session.conf.getAll
+        diff = {k: (before.get(k), after.get(k))
+                for k in before.keys() | after.keys()
+                if before.get(k) != after.get(k)}
+        if diff:
+            changed[name] = diff
+    assert not changed

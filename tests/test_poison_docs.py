@@ -168,3 +168,28 @@ def test_poison_document_gives_one_marker(spark, door):
     assert marks[0].startswith(f"{cls}: ") and len(marks[0]) <= 200
     assert got == want
     assert not any(markers(rows) for rows in want.values())
+
+
+def test_null_document_id_gives_one_text_error_span(spark):
+    """``documents_to_spans`` runs the same guarded body: a document
+    whose id is null gives one ``text_error`` span, and its neighbours
+    (one with a media span, one without) come out as they do alone."""
+    from archive_pdf_tools_spark.sources.spans_from_text import (
+        documents_to_spans)
+
+    def run(rows):
+        return _by_doc(documents_to_spans(spark.createDataFrame(
+            rows, "doc_id bigint, text string").repartition(1)))
+
+    good = [(3, PROSE), (4, PROSE)]
+    got = run([good[0], (None, PROSE), good[1]])
+    want = run(good)
+
+    assert {d: [s["kind"] for s in rows[0]["spans"]]
+            for d, rows in want.items()} == {
+        "tdoc_00000003": ["text", "media"], "tdoc_00000004": ["text"]}
+    (bad,) = set(got) - set(want)
+    assert [tuple(s) for r in got.pop(bad) for s in r["spans"]] == [
+        ("text_error", "ValueError: cannot convert float NaN to integer",
+         "", 0)]
+    assert got == want
