@@ -12,7 +12,7 @@ Layout
 - ``corpus/``    deterministic synthetic generator for the interleaved
                  ``(doc_id, spans)`` input table and its media rasters.
 - ``operators/`` Spark operators: the vectorized extraction kernel
-                 (``mapInPandas``), salted repartitioning, span reassembly,
+                 (``mapInArrow``), salted repartitioning, span reassembly,
                  checkpoint/resume, metrics.
 - ``sources/``   table readers (parquet dirs, the driver testdata tables).
 - ``functions/`` column-level libraries for large-scale pipelines: dedup

@@ -1,10 +1,8 @@
 """Deterministic interleaved-documents generator (FIXTURES.md §1-§2).
 
-Produces rows in exactly the BASELINE.json input_hint shape::
-
-    doc_id: string
-    spans:  array<struct<kind: string, text: string,
-                         media_ref: string, offset: int>>
+Produces rows in exactly the BASELINE.json input_hint shape: a
+``doc_id`` string and ``spans`` of type ``pyworker.SPANS_DDL``, the
+``(kind, text, media_ref, offset)`` structs.
 
 Text spans carry a JSON-encoded hOCR-like payload (page dims / dpi /
 scan_res + paragraphs→lines→words) mirroring the structure the reference
@@ -23,10 +21,9 @@ parallel: the Spark source builds partitions of doc indices and calls
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 
+from ..kernels.textlayer import dump_payload
 from .rasters import make_media_ref
 
 __all__ = ["make_doc", "make_documents", "doc_ids", "SEED"]
@@ -107,10 +104,8 @@ def _text_payload(rng) -> str:
             y += line_h + int(rng.integers(4, 20))
         paragraphs.append({"lines": lines})
 
-    return json.dumps({
-        "page": {"w": w, "h": h, "dpi": dpi, "scan_res": scan_res},
-        "paragraphs": paragraphs,
-    }, ensure_ascii=False, sort_keys=True)
+    return dump_payload({"w": w, "h": h, "dpi": dpi, "scan_res": scan_res},
+                        paragraphs)
 
 
 def _n_spans(rng, max_spans: int) -> int:

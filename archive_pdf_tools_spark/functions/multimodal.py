@@ -27,6 +27,7 @@ import pandas as pd
 from ..corpus.rasters import page_spec, render_raster
 from ..kernels.grayconvert import rgb_to_gray
 from ..kernels.sauvola import threshold_image
+from ..pyworker import python_task
 
 __all__ = ["CODECS_AVAILABLE", "decode_image", "media_features",
            "resize_media", "sample_frames", "FEATURES_SCHEMA_DDL",
@@ -78,6 +79,18 @@ def decode_image(payload: bytes) -> np.ndarray:
     raise AssertionError("unreachable")
 
 
+def _media_refs(documents_df):
+    """documents (doc_id, spans) -> one ``media_ref`` row per media
+    span."""
+    from pyspark.sql import functions as F
+
+    return (documents_df
+            .select(F.explode("spans").alias("s"))
+            .where(F.col("s.kind") == "media")
+            .select(F.col("s.media_ref").alias("media_ref")))
+
+
+@python_task
 def _features_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         recs = []
@@ -98,13 +111,8 @@ def _features_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]
 
 def media_features(documents_df):
     """documents (doc_id, spans) -> per-media-span feature rows."""
-    from pyspark.sql import functions as F
-
-    refs = (documents_df
-            .select(F.explode("spans").alias("s"))
-            .where(F.col("s.kind") == "media")
-            .select(F.col("s.media_ref").alias("media_ref")))
-    return refs.mapInPandas(_features_batches, schema=FEATURES_SCHEMA_DDL)
+    return _media_refs(documents_df).mapInPandas(
+        _features_batches, schema=FEATURES_SCHEMA_DDL)
 
 
 RESIZE_SCHEMA_DDL = ("media_ref string, src_w int, src_h int, dst_w int, "
@@ -118,10 +126,9 @@ def resize_media(documents_df, factor: float = 2.0):
     only refs + hashes cross stage boundaries."""
     import hashlib
 
-    from pyspark.sql import functions as F
-
     from ..kernels.pages import downsample_box
 
+    @python_task
     def _resize(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             recs = []
@@ -137,11 +144,8 @@ def resize_media(documents_df, factor: float = 2.0):
                 "media_ref", "src_w", "src_h", "dst_w", "dst_h",
                 "too_small", "content_sha"])
 
-    refs = (documents_df
-            .select(F.explode("spans").alias("s"))
-            .where(F.col("s.kind") == "media")
-            .select(F.col("s.media_ref").alias("media_ref")))
-    return refs.mapInPandas(_resize, schema=RESIZE_SCHEMA_DDL)
+    return _media_refs(documents_df).mapInPandas(
+        _resize, schema=RESIZE_SCHEMA_DDL)
 
 
 FRAMES_SCHEMA_DDL = ("media_ref string, frame_idx int, ts_ms int, "
@@ -155,10 +159,9 @@ def sample_frames(documents_df, every_n: int = 5, fps: float = 10.0):
     ``every_n``-th frame is materialized with its timestamp + features.
     1->N flat map, one Arrow batch per input batch — the real-codec swap
     changes only the decode call."""
-    from pyspark.sql import functions as F
-
     from ..corpus.rasters import ref_seed
 
+    @python_task
     def _frames(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             recs = []
@@ -177,8 +180,5 @@ def sample_frames(documents_df, every_n: int = 5, fps: float = 10.0):
                 "media_ref", "frame_idx", "ts_ms", "mean_intensity",
                 "is_keyframe"])
 
-    refs = (documents_df
-            .select(F.explode("spans").alias("s"))
-            .where(F.col("s.kind") == "media")
-            .select(F.col("s.media_ref").alias("media_ref")))
-    return refs.mapInPandas(_frames, schema=FRAMES_SCHEMA_DDL)
+    return _media_refs(documents_df).mapInPandas(
+        _frames, schema=FRAMES_SCHEMA_DDL)

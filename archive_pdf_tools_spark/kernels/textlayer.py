@@ -27,6 +27,7 @@ Quirks preserved on purpose (they are the reference's semantics):
 
 from __future__ import annotations
 
+import json
 from array import array
 from dataclasses import dataclass, field
 from functools import lru_cache
@@ -36,8 +37,8 @@ from . import native
 
 __all__ = ["prec", "floatbytes", "dist2", "get_word_baseline",
            "affine_matrix", "clip_baseline", "codepoint_to_utf16be",
-           "render_text_layer", "parse_payload", "PageTextResult",
-           "PackedPage"]
+           "render_text_layer", "dump_payload", "parse_payload",
+           "PageTextResult", "PackedPage"]
 
 WRITING_DIRECTION_UNSPECIFIED = 0
 WRITING_DIRECTION_LEFT_TO_RIGHT = 1
@@ -160,6 +161,14 @@ def _lines(data: bytes, lens) -> list:
         lines.append(data[pos:pos + n].decode())
         pos += n
     return lines
+
+
+def dump_payload(page, paragraphs) -> str:
+    """A text span's JSON payload, the format ``parse_payload`` reads:
+    ``{"page": page, "paragraphs": paragraphs}`` with sorted keys and
+    non-ASCII text kept as is."""
+    return json.dumps({"page": page, "paragraphs": paragraphs},
+                      ensure_ascii=False, sort_keys=True)
 
 
 def parse_payload(payload, n, paragraphs):

@@ -61,7 +61,7 @@ from ..kernels.mrc import DENOISE_NONE, mrc_mask_phase
 from ..kernels.optimise import (fast_mask_denoise_batch,
                                 optimise_gray2_batch, optimise_rgb2_batch)
 from ..kernels.textlayer import parse_payload, render_text_layer
-from ..pyworker import number_spans, python_task
+from ..pyworker import SPANS_DDL, number_spans, python_task
 
 __all__ = ["extract_one", "extract_document_local", "extract_spans",
            "mrc_spans", "reassemble", "partition_metrics",
@@ -73,10 +73,7 @@ INTERMEDIATE_SCHEMA_DDL = (
     "subs array<struct<kind:string,text:string,media_ref:string>>"
 )
 
-OUTPUT_SCHEMA_DDL = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>"
-)
+OUTPUT_SCHEMA_DDL = f"doc_id string, spans {SPANS_DDL}"
 
 # INTERMEDIATE_SCHEMA_DDL as Spark maps it to Arrow (list items are
 # named "element"), and the span rows the extraction body reads.

@@ -30,7 +30,7 @@ import sys
 import zipimport
 
 __all__ = ["trim_zip_import_cache", "python_task", "guarded_rows",
-           "number_spans", "map_documents", "document_group",
+           "SPANS_DDL", "number_spans", "map_documents", "document_group",
            "map_document_groups"]
 
 
@@ -81,6 +81,11 @@ def guarded_rows(doc, error, doc_id, *values) -> list:
     except Exception as exc:  # noqa: BLE001 — poison-document guard
         rows.append(error(f"{type(exc).__name__}: {exc}"[:200]))
     return rows
+
+
+# The type of the ``spans`` column ``number_spans`` fills.
+SPANS_DDL = ("array<struct<kind:string,text:string,media_ref:string,"
+             "offset:int>>")
 
 
 def number_spans(spans) -> list[dict]:

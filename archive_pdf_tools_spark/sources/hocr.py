@@ -27,10 +27,10 @@ Design notes:
 from __future__ import annotations
 
 import io
-import json
 from typing import Iterator
 
-from ..pyworker import map_documents
+from ..kernels.textlayer import dump_payload
+from ..pyworker import SPANS_DDL, map_documents
 
 __all__ = ["parse_properties", "iter_pages", "page_dimensions",
            "page_scan_res", "page_word_data", "page_payload",
@@ -270,13 +270,11 @@ def page_word_data(page) -> list:
 
 def page_payload(page, doc_dpi=None) -> str:
     """Page element -> the extraction kernel's JSON text-span payload
-    (same serialization as the synthetic corpus: sorted keys)."""
+    (``textlayer.dump_payload``, as the synthetic corpus writes it)."""
     w, h = page_dimensions(page)
-    return json.dumps({
-        "page": {"w": w, "h": h, "dpi": doc_dpi,
-                 "scan_res": page_scan_res(page)},
-        "paragraphs": page_word_data(page),
-    }, ensure_ascii=False, sort_keys=True)
+    return dump_payload({"w": w, "h": h, "dpi": doc_dpi,
+                         "scan_res": page_scan_res(page)},
+                        page_word_data(page))
 
 
 def word_data_by_page(markup) -> dict[int, list]:
@@ -306,12 +304,9 @@ def hocr_documents(df, hocr_col: str = "hocr", dpi_col: str | None = None):
     parsed word data, so the result feeds ``run_extraction`` unchanged.
     Parsing happens executor-side inside one vectorized stage (map-only,
     no shuffle); the span structs cross the boundary as Arrow structs
-    directly — the old spans-JSON indirection paid a json.dumps per doc
-    in Python plus a corpus-sized Jackson ``from_json`` in the JVM."""
-    from .corpus_source import SPANS_STRUCT_DDL
-
+    directly."""
     id_type = df.schema["doc_id"].dataType.simpleString()
     return map_documents(
         df, ["doc_id", hocr_col] + ([dpi_col] if dpi_col else []),
-        f"doc_id {id_type}, spans {SPANS_STRUCT_DDL}", _page_spans,
+        f"doc_id {id_type}, spans {SPANS_DDL}", _page_spans,
         lambda msg: ("hocr_error", msg, ""), spans=True)

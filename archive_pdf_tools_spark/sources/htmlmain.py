@@ -46,7 +46,7 @@ _VOID_TAGS = frozenset({"area", "base", "br", "col", "embed", "hr", "img",
 from html.parser import HTMLParser as _HTMLParser
 from xml.etree import ElementTree as _ET
 
-from ..pyworker import map_documents
+from ..pyworker import SPANS_DDL, map_documents
 
 
 class _Builder(_HTMLParser):
@@ -210,11 +210,9 @@ def html_documents(df, html_col: str = "html", payloads: bool = False):
     ``run_extraction`` directly (the job.py ``--input-format html``
     path); with the default False the spans carry the raw main text
     (the analysis-table shape the ``html_extract`` query checks)."""
-    from .corpus_source import SPANS_STRUCT_DDL
-
     id_type = df.schema["doc_id"].dataType.simpleString()
     return map_documents(
         df, ["doc_id", html_col],
-        f"doc_id {id_type}, spans {SPANS_STRUCT_DDL}",
+        f"doc_id {id_type}, spans {SPANS_DDL}",
         lambda doc_id, markup: _html_spans(doc_id, markup, payloads),
         lambda msg: ("html_error", msg, ""), spans=True)

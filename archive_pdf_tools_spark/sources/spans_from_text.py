@@ -15,11 +15,9 @@ per-document body every front door runs.
 
 from __future__ import annotations
 
-import json
-
-from .corpus_source import SPANS_STRUCT_DDL
 from ..corpus.rasters import make_media_ref
-from ..pyworker import map_documents
+from ..kernels.textlayer import dump_payload
+from ..pyworker import SPANS_DDL, map_documents
 
 __all__ = ["documents_to_spans", "layout_text"]
 
@@ -31,8 +29,7 @@ PAGE_W = 1000
 
 def layout_text(text: str, max_words: int = 400) -> str:
     """Deterministic hOCR-like payload for a prose string."""
-    return json.dumps(layout_payload(text, max_words),
-                      ensure_ascii=False, sort_keys=True)
+    return dump_payload(**layout_payload(text, max_words))
 
 
 def layout_payload(text: str, max_words: int = 400) -> dict:
@@ -82,5 +79,5 @@ def documents_to_spans(documents_df):
         "doc_id", "text")
     return map_documents(
         keyed, ["doc_key", "doc_id", "text"],
-        f"doc_id string, spans {SPANS_STRUCT_DDL}", _doc_spans,
+        f"doc_id string, spans {SPANS_DDL}", _doc_spans,
         lambda msg: ("text_error", msg, ""), spans=True)

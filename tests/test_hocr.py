@@ -139,11 +139,9 @@ def test_hocr_documents_feed_extraction(spark):
     the JSON-payload path on the same synthetic pages."""
     import pandas as pd
 
+    from archive_pdf_tools_spark.operators.extract import OUTPUT_SCHEMA_DDL
     from archive_pdf_tools_spark.plans import run_extraction
-    from archive_pdf_tools_spark.sources.corpus_source import (
-        SPANS_JSON_SCHEMA)
     from archive_pdf_tools_spark.sources.hocr import hocr_documents
-    from pyspark.sql import functions as F
 
     texts = {f"doc_{i:03d}": " ".join((PROSE * (i + 1)).split()[: 30 * (i + 1)])
              for i in range(6)}
@@ -155,13 +153,8 @@ def test_hocr_documents_feed_extraction(spark):
     via_hocr = run_extraction(hocr_documents(hdf), with_metrics=False)[0]
 
     jdf = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": list(texts),
-            "spans_json": [json.dumps(
-                [{"kind": "text", "text": layout_text(t),
-                  "media_ref": "", "offset": 0}]) for t in texts.values()]})
-    ).select("doc_id",
-             F.from_json("spans_json", SPANS_JSON_SCHEMA).alias("spans"))
+        [(doc_id, [("text", layout_text(t), "", 0)])
+         for doc_id, t in texts.items()], OUTPUT_SCHEMA_DDL)
     via_json = run_extraction(jdf, with_metrics=False)[0]
 
     a = {r["doc_id"]: r["spans"] for r in via_hocr.collect()}

@@ -910,7 +910,7 @@ def test_text_layer_error_parity(spark, native_modes):
     import json
 
     from archive_pdf_tools_spark.operators.extract import (
-        extract_spans, partition_metrics)
+        OUTPUT_SCHEMA_DDL, extract_spans, partition_metrics)
 
     def span(offset, mutate=None):
         paras = json.loads(json.dumps(native._TEXT_PAGE))
@@ -933,11 +933,9 @@ def test_text_layer_error_parity(spark, native_modes):
              span(5, lambda _w, p: p[0].pop("lines")),
              span(6, setter("fontsize", "big"))]
     rows = [("d0", spans[:4]), ("d1", spans[4:])]
-    ddl = ("doc_id string, spans array<struct<kind:string,text:string,"
-           "media_ref:string,offset:int>>")
     seen = []
     for _mode in native_modes(spark):
-        docs = spark.createDataFrame(rows, ddl)
+        docs = spark.createDataFrame(rows, OUTPUT_SCHEMA_DDL)
         ext = extract_spans(docs, num_partitions=2)
         pages = sorted(
             (r["doc_id"], r["in_offset"], tuple(r["warnings"]),

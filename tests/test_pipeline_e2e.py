@@ -32,6 +32,27 @@ def input_df(spark, corpus):
     return spark.createDataFrame(rows, schema=OUTPUT_SCHEMA_DDL)
 
 
+@pytest.mark.parametrize("max_spans", [16, 2000])
+def test_synthetic_source_equals_generator(spark, max_spans):
+    """The Spark synthetic source gives the driver-side generator's
+    documents row for row (ids, spans, offsets) in
+    ``OUTPUT_SCHEMA_DDL``'s schema; 40 documents include one of 1735
+    spans when ``max_spans`` allows it."""
+    from pyspark.sql.types import StructType
+
+    from archive_pdf_tools_spark.operators.extract import OUTPUT_SCHEMA_DDL
+    from archive_pdf_tools_spark.sources import synthetic_documents
+
+    df = synthetic_documents(spark, 40, max_spans=max_spans)
+    assert df.schema == StructType.fromDDL(OUTPUT_SCHEMA_DDL)
+    got = sorted((r["doc_id"], [s.asDict() for s in r["spans"]])
+                 for r in df.collect())
+    want = [(d["doc_id"], d["spans"])
+            for d in make_documents(40, max_spans=max_spans)]
+    assert got == want
+    assert max(len(spans) for _, spans in want) == min(max_spans, 1735)
+
+
 def test_spark_matches_local_runner(spark, input_df, golden):
     out = reassemble(extract_spans(input_df, num_partitions=8))
     got = {r["doc_id"]: [s.asDict() for s in r["spans"]]
