@@ -29,7 +29,7 @@ round-trip (mask bit-exact, fg/bg through the JP2 decoder, text-op
 digest) is the test contract.
 
 Scale shape: one document = one PDF assembled inside the per-doc
-``applyInPandas`` group (``operators/recode.py``) — no driver-side
+``applyInArrow`` group (``operators/recode.py``) — no driver-side
 state, no cross-document coordination.
 """
 

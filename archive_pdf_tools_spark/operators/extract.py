@@ -16,9 +16,10 @@ rows cross the Python boundary once, as Arrow record batches: the body
 reads the payload, kind, offset and media_ref columns straight from them,
 a text page's JSON payload is parsed in C from the Arrow data buffer
 (``textlayer.parse_payload``; orjson + the Python packer only for pages
-the C parser declines), and the page rows go back as Arrow arrays built
-without pandas.  ``_extract_batches`` is the same body behind a
-pandas-in/pandas-out adapter, for in-process callers.
+the C parser declines), and the page rows go back as one record batch
+built by ``pyworker.arrow_batch``, without pandas.  ``_extract_batches``
+is the same body behind a pandas-in/pandas-out adapter, for in-process
+callers.
 
 Per-span outputs:
 
@@ -47,7 +48,6 @@ from __future__ import annotations
 
 import hashlib
 import time
-from array import array
 from typing import Iterable, Iterator
 
 import numpy as np
@@ -61,7 +61,7 @@ from ..kernels.mrc import DENOISE_NONE, mrc_mask_phase
 from ..kernels.optimise import (fast_mask_denoise_batch,
                                 optimise_gray2_batch, optimise_rgb2_batch)
 from ..kernels.textlayer import parse_payload, render_text_layer
-from ..pyworker import SPANS_DDL, number_spans, python_task
+from ..pyworker import SPANS_DDL, arrow_batch, number_spans, python_task
 
 __all__ = ["extract_one", "extract_document_local", "extract_spans",
            "mrc_spans", "reassemble", "partition_metrics",
@@ -209,7 +209,7 @@ class _Payloads:
     that do not stay inside the data buffer send every row there."""
 
     def __init__(self, col):
-        self.col = _as_string(col)
+        self.col = pa.array(col, pa.string())
         _valid, offsets, data = self.col.buffers()
         ends = np.frombuffer(offsets, np.int32, len(self.col) + 1,
                              4 * self.col.offset)
@@ -229,50 +229,6 @@ class _Payloads:
         return parse_payload(
             self.base + start, self.ends[slot + 1] - start,
             lambda: orjson.loads(self.value(slot))["paragraphs"])
-
-
-class _Strings:
-    """A string column built from UTF-8 pieces and their lengths."""
-
-    def __init__(self):
-        self.parts: list = []
-        self.lens = array("i")
-
-    def add(self, s: str):
-        b = s.encode()
-        self.parts.append(b)
-        self.lens.append(len(b))
-
-    def array(self) -> pa.Array:
-        offsets = np.zeros(len(self.lens) + 1, np.int64)
-        np.cumsum(np.frombuffer(self.lens, np.int32), out=offsets[1:])
-        if offsets[-1] >= 2 ** 31:
-            raise ValueError("string column over 2 GiB in one batch")
-        return pa.StringArray.from_buffers(
-            len(self.lens), pa.py_buffer(offsets.astype(np.int32)),
-            pa.py_buffer(b"".join(self.parts)))
-
-
-def _subs_array(results) -> pa.Array:
-    """The pages' subs (lists of (kind, text, media_ref) tuples) ->
-    ``array<struct<kind,text,media_ref>>``."""
-    kind, text, ref = _Strings(), _Strings(), _Strings()
-    ends = array("i", [0])
-    for subs, _sha, _warns in results:
-        for sub_kind, sub_text, sub_ref in subs:
-            kind.add(sub_kind)
-            text.add(sub_text)
-            ref.add(sub_ref)
-        ends.append(ends[-1] + len(subs))
-    values = pa.StructArray.from_arrays(
-        [kind.array(), text.array(), ref.array()], fields=list(_SUB_TYPE))
-    return pa.ListArray.from_arrays(
-        pa.array(np.frombuffer(ends, np.int32)), values,
-        type=PAGE_ROW_SCHEMA.field("subs").type)
-
-
-def _as_string(col):
-    return col if col.type == pa.string() else col.cast(pa.string())
 
 
 def _extract_pages(batch: pa.RecordBatch) -> pa.RecordBatch:
@@ -298,14 +254,10 @@ def _extract_pages(batch: pa.RecordBatch) -> pa.RecordBatch:
         offsets.append(in_offset)
         results.append(result)
 
-    return pa.RecordBatch.from_arrays([
-        _as_string(batch.column("doc_id")), pa.array(offsets, pa.int32()),
-        _as_string(batch.column("kind")),
-        pa.array([r[1] for r in results], pa.string()),
-        pa.array([r[2] for r in results],
-                 PAGE_ROW_SCHEMA.field("warnings").type),
-        pa.array(elapsed, pa.float64()), _subs_array(results)],
-        schema=PAGE_ROW_SCHEMA)
+    subs, shas, warnings = zip(*results) if results else ((), (), ())
+    return arrow_batch([batch.column("doc_id"), offsets,
+                        batch.column("kind"), shas, warnings, elapsed, subs],
+                       PAGE_ROW_SCHEMA)
 
 
 def _coalesced(batches):

@@ -12,7 +12,7 @@ decomposition per page, and per-doc span assembly in ``page_idx``
 order (order is DATA, never file order — the S1 contract).
 
 Scale shape: the only shuffle is the per-doc regroup
-(``groupBy(doc_id).applyInPandas``), the same partitioning the
+(``groupBy(doc_id).applyInArrow``), the same partitioning the
 flagship extraction reuses; page decode + MRC run inside the grouped
 UDF with no driver-side state, and the checkpoint protocol is the
 shared ``checkpoint.run_sharded``.

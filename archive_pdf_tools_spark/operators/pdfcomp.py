@@ -177,7 +177,7 @@ def recompress_pdfs(df, pdf_col: str = "pdf",
     Encrypted inputs decrypt-and-rewrite into plain PDFs
     (``password`` opens user/owner-protected corpora).
 
-    Scale shape: one ``mapInPandas`` stage (the document row already
+    Scale shape: one ``mapInArrow`` stage (the document row already
     holds everything the rewrite needs — no shuffle at all); a failing
     document gives a NULL pdf with ``error`` set."""
     from ..kernels.pdfrewrite import recompress_pdf

@@ -16,10 +16,14 @@ reading the archive.  Archives under the SparkFiles root (``--py-files``,
 which is what the invalidation is for.
 
 The same module holds the one per-document body every front door runs
-(``map_documents``, and ``map_document_groups`` for pages regrouped by
-document): the batch loop, the poison-document guard and the output
-frame live here once, and a door supplies only ``doc(doc_id, ...)`` and
-the row that marks a failed document.
+(``map_documents`` under ``mapInArrow``, and ``map_document_groups``
+under ``applyInArrow`` for pages regrouped by document): the batch
+loop, the poison-document guard and the output batch live here once,
+and a door supplies only ``doc(doc_id, ...)`` and the row that marks a
+failed document.  Values cross the boundary as Arrow both ways: a
+column's values reach ``doc`` through ``to_pylist`` (a null is None),
+and ``arrow_batch`` builds every output batch, extraction's page rows
+included, with ``pa.array`` per column of the Arrow schema.
 """
 
 from __future__ import annotations
@@ -29,9 +33,11 @@ import os
 import sys
 import zipimport
 
+import pyarrow as pa
+
 __all__ = ["trim_zip_import_cache", "python_task", "guarded_rows",
-           "SPANS_DDL", "number_spans", "map_documents", "document_group",
-           "map_document_groups"]
+           "SPANS_DDL", "number_spans", "arrow_schema", "arrow_batch",
+           "map_documents", "group_rows", "map_document_groups"]
 
 
 def trim_zip_import_cache() -> int:
@@ -53,7 +59,7 @@ def trim_zip_import_cache() -> int:
 
 
 def python_task(body):
-    """Decorate a ``mapInPandas`` or ``mapInArrow`` batch body so it
+    """Decorate a ``mapInArrow`` (or ``mapInPandas``) batch body so it
     trims the zip-import cache when it starts and when it ends:
     importers created while the task runs would otherwise be re-read
     before the next task.
@@ -103,71 +109,83 @@ def _out_rows(doc_id, rows, spans: bool) -> list:
     return [(doc_id, *row) for row in rows]
 
 
-def _column_names(schema: str) -> list:
+def arrow_schema(schema: str) -> pa.Schema:
+    """A DDL schema as Spark maps it to Arrow.  Driver-side: Spark's DDL
+    parser needs the session."""
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    return StructType.fromDDL(schema).names
+    return to_arrow_schema(StructType.fromDDL(schema))
+
+
+def arrow_batch(columns, schema: pa.Schema) -> pa.RecordBatch:
+    """Columns (Python sequences, or Arrow arrays passed through) -> one
+    ``schema`` record batch, ``pa.array(column, field.type)`` each."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, field.type) for col, field in zip(columns, schema)],
+        schema=schema)
+
+
+def _rows_batch(rows, schema: pa.Schema) -> pa.RecordBatch:
+    return arrow_batch(list(zip(*rows)) or [()] * len(schema), schema)
 
 
 def map_documents(df, cols, schema: str, doc, error, spans: bool = False):
     """The per-document driver: ``df.select(*cols)`` (``cols[0]`` the
-    document id) through one ``mapInPandas`` stage that calls
+    document id) through one ``mapInArrow`` stage that calls
     ``doc(doc_id, *values)`` once per input row under ``guarded_rows``
-    and builds the ``schema`` output frame.  With ``spans`` the doc's
-    rows are ``(kind, text, media_ref)`` spans and each document gives
-    one ``(doc_id, spans)`` row; otherwise each row the doc gives is one
-    output row after its doc_id."""
-    import pandas as pd
-
-    names = _column_names(schema)
+    (a null arrives as None) and builds one ``schema`` record batch per
+    input batch.  With ``spans`` the doc's rows are ``(kind, text,
+    media_ref)`` spans and each document gives one ``(doc_id, spans)``
+    row; otherwise each row the doc gives is one output row after its
+    doc_id."""
+    out_schema = arrow_schema(schema)
 
     @python_task
     def body(batches):
         for batch in batches:
             out = []
-            for values in zip(*(batch[c].values for c in cols)):
+            for values in zip(*(col.to_pylist() for col in batch.columns)):
                 out.extend(_out_rows(
                     values[0], guarded_rows(doc, error, *values), spans))
-            yield pd.DataFrame(out, columns=names)
+            yield _rows_batch(out, out_schema)
 
-    return df.select(*cols).mapInPandas(body, schema=schema)
+    return df.select(*cols).mapInArrow(body, schema=schema)
 
 
-def document_group(schema: str, doc, error, image_col: str = "image",
-                   first_cols=(), spans: bool = False):
-    """The grouped counterpart's per-document body, for
-    ``applyInPandas``: one document's page rows -> its ``schema``
-    output frame.  Pages are ``[(page_idx, image)]`` sorted by ``page_idx``; each of
-    ``first_cols`` contributes its first non-null value (None when it
-    has none, or when the column is None: absent from the input), so
-    ``doc(doc_id, pages, *firsts)`` runs under ``guarded_rows``."""
-    import pandas as pd
-
-    names = _column_names(schema)
-
-    def one_doc(group):
-        doc_id = group["doc_id"].iloc[0]
-        pages = sorted(zip(group["page_idx"].values,
-                           group[image_col].values),
-                       key=lambda t: int(t[0]))
-        firsts = []
-        for col in first_cols:
-            vals = group[col].dropna() if col is not None else ()
-            firsts.append(vals.iloc[0] if len(vals) else None)
-        return pd.DataFrame(_out_rows(
-            doc_id, guarded_rows(doc, error, doc_id, pages, *firsts),
-            spans), columns=names)
-
-    return one_doc
+def group_rows(doc, error, spans: bool, doc_id, pages, *firsts) -> list:
+    """The grouped counterpart's per-document body: ``pages``
+    (``(page_idx, image)`` pairs) sorted by page_idx, then
+    ``doc(doc_id, pages, *firsts)`` under ``guarded_rows`` -> the
+    document's output rows.  ``map_document_groups`` and the stateful
+    streaming assembly both run it."""
+    pages = sorted(pages, key=lambda page: page[0])
+    return _out_rows(
+        doc_id, guarded_rows(doc, error, doc_id, pages, *firsts), spans)
 
 
 def map_document_groups(df, image_col: str, first_cols, schema: str, doc,
                         error, spans: bool = False):
     """``map_documents`` for page rows: ``(doc_id, page_idx, image_col,
     *first_cols)`` regrouped by document (one shuffle) through
-    ``document_group``."""
+    ``applyInArrow`` and ``group_rows``.  Each of ``first_cols``
+    contributes its first non-null value (None when it has none, or when
+    the column is None: absent from the input)."""
     cols = ["doc_id", "page_idx", image_col,
             *(c for c in first_cols if c is not None)]
-    return (df.select(*cols).groupBy("doc_id").applyInPandas(
-        document_group(schema, doc, error, image_col, first_cols, spans),
-        schema=schema))
+    out_schema = arrow_schema(schema)
+
+    def first(table, col):
+        vals = table.column(col).drop_null() if col is not None else ()
+        return vals[0].as_py() if len(vals) else None
+
+    def one_doc(table):
+        pages = zip(table.column("page_idx").to_pylist(),
+                    table.column(image_col).to_pylist())
+        doc_id = table.column("doc_id")[0].as_py()
+        rows = group_rows(doc, error, spans, doc_id, pages,
+                          *(first(table, c) for c in first_cols))
+        return pa.Table.from_batches([_rows_batch(rows, out_schema)])
+
+    return (df.select(*cols).groupBy("doc_id")
+            .applyInArrow(one_doc, schema=schema))

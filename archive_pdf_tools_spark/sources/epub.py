@@ -31,7 +31,7 @@ computes the same outputs from public structure only:
   the document-information/XMP metadata — producer/creator defaults
   mirroring the reference's fallback behavior.
 
-Scale shape: one EPUB = one ``mapInPandas`` row (``epubs_to_pdf``).
+Scale shape: one EPUB = one ``mapInArrow`` row (``epubs_to_pdf``).
 """
 
 from __future__ import annotations

@@ -290,9 +290,7 @@ def _page_spans(doc_id, markup, dpi=None):
     """One document's text spans, one per page.  A generator, so markup
     that breaks mid-stream keeps the pages parsed before the error,
     followed by the ``hocr_error`` marker."""
-    import pandas as pd
-
-    dpi = None if dpi is None or pd.isna(dpi) else int(dpi)
+    dpi = None if dpi is None else int(dpi)
     for page in iter_pages(markup):
         yield "text", page_payload(page, dpi), ""
 

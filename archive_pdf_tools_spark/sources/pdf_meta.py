@@ -24,7 +24,7 @@ the residual families stay metadata-only via each codec's header
 probe.
 
 Spark surface: ``pdf_metadata(df)`` maps ``(doc_id, pdf binary)`` rows to
-per-page metadata rows via ``mapInPandas`` (1->N, UDTF-shaped — SURVEY
+per-page metadata rows via ``mapInArrow`` (1->N, UDTF-shaped — SURVEY
 §2.8), keeping the raw bytes out of any shuffle.
 """
 
@@ -1120,7 +1120,7 @@ def _page_rows(doc_id, blob) -> list[tuple]:
 
 
 def pdf_metadata(df, pdf_col: str = "pdf", id_col: str = "doc_id"):
-    """(doc_id, pdf binary) -> per-page metadata rows (mapInPandas); an
+    """(doc_id, pdf binary) -> per-page metadata rows (mapInArrow); an
     unparseable PDF gives one ``page_idx = -1`` row with
     ``parse_error`` set."""
     return map_documents(

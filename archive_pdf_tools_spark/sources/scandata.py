@@ -16,7 +16,7 @@ Re-derives ``internetarchivepdf/scandata.py:23-150`` with stdlib
 Scandata is per-document metadata: at scale it rides along as a small
 struct column (or a broadcast dim table keyed by doc_id), never a
 shuffle-heavy side.  ``scandata_df`` parses a column of XML strings via
-``mapInPandas``.
+``mapInArrow`` (``pyworker.map_documents``).
 """
 
 from __future__ import annotations
@@ -114,7 +114,7 @@ def _scandata_row(doc_id, xml_str) -> list[tuple]:
 
 
 def scandata_df(df, xml_col: str = "scandata_xml", id_col: str = "doc_id"):
-    """(doc_id, scandata_xml) -> parsed metadata rows via mapInPandas;
+    """(doc_id, scandata_xml) -> parsed metadata rows via mapInArrow;
     malformed XML gives a row of nulls with ``error`` set."""
     return map_documents(df, [id_col, xml_col], SCANDATA_SCHEMA_DDL,
                          _scandata_row,

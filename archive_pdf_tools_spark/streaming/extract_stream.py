@@ -72,21 +72,21 @@ _STACK_STATE_DDL = ("idxs array<int>, blobs array<binary>, hocr binary, "
 
 def _make_assemble(hocr_col, expected_col, idle_flush_ms):
     from ..operators.imagestack import _doc_rows, _stack_error
-    from ..pyworker import document_group
-
-    # the BATCH per-doc body, so stream and batch output are the same
-    # function of the same pages
-    one_doc = document_group(OUTPUT_SCHEMA_DDL, _doc_rows, _stack_error,
-                             "image", ["hocr"], spans=True)
+    from ..pyworker import group_rows
 
     def assemble(key, pdf_iter, state):
         import pandas as pd
 
         (doc_id,) = key
 
+        def frame(rows):
+            return pd.DataFrame(rows, columns=["doc_id", "spans"])
+
         def spans_pdf(idxs, blobs, hocr):
-            return one_doc(pd.DataFrame({"doc_id": doc_id, "page_idx": idxs,
-                                         "image": blobs, "hocr": hocr}))
+            # the BATCH per-doc body, so stream and batch output are the
+            # same function of the same pages
+            return frame(group_rows(_doc_rows, _stack_error, True, doc_id,
+                                    zip(idxs, blobs), hocr))
 
         if state.exists:
             idxs, blobs, hocr, expected = state.get
@@ -124,8 +124,7 @@ def _make_assemble(hocr_col, expected_col, idle_flush_ms):
         state.update((idxs, blobs, hocr, expected))
         if idle_flush_ms is not None:
             state.setTimeoutDuration(int(idle_flush_ms))
-        yield pd.DataFrame({"doc_id": pd.Series([], dtype=object),
-                            "spans": pd.Series([], dtype=object)})
+        yield frame([])
 
     return assemble
 

@@ -176,6 +176,23 @@ def test_malformed_markup_survives(spark):
     assert out["broken"][0]["kind"] == "hocr_error"
 
 
+def test_dpi_column_reaches_the_payload(spark):
+    """``dpi_col`` sets every page payload's ``dpi``: 300 where the row
+    has 300, null where the row's dpi is null."""
+    from archive_pdf_tools_spark.sources.hocr import hocr_documents
+
+    markup = synth_hocr(PROSE, words_per_page=20)
+    hdf = spark.createDataFrame(
+        [("at300", markup, 300), ("nodpi", markup, None)],
+        "doc_id string, hocr string, dpi int")
+    out = {r["doc_id"]: [json.loads(s["text"])["page"]["dpi"]
+                         for s in r["spans"]]
+           for r in hocr_documents(hdf, dpi_col="dpi").collect()}
+    n_pages = len(list(iter_pages(markup)))
+    assert n_pages >= 1
+    assert out == {"at300": [300] * n_pages, "nodpi": [None] * n_pages}
+
+
 def test_markup_truncated_mid_stream_keeps_parsed_pages(spark):
     """Markup that breaks after its first page gives that page's span,
     exactly as the whole document gives it, then one hocr_error span

@@ -272,7 +272,7 @@ def test_kmeans_update_stage_partial_aggregates(spark):
 
 def test_recompress_is_map_only(spark):
     """The PDF recompress front door never shuffles: the document row
-    already holds everything the rewrite needs (one mapInPandas over
+    already holds everything the rewrite needs (one mapInArrow over
     the scan — the 100-TB shape for a per-doc transform)."""
     from archive_pdf_tools_spark.operators.pdfcomp import recompress_pdfs
 
@@ -281,7 +281,78 @@ def test_recompress_is_map_only(spark):
         "doc_id string, pdf binary, hocr binary")
     p = plan_str(recompress_pdfs(df))
     assert "Exchange" not in p
-    assert "MapInPandas" in p
+    assert "MapInArrow" in p
+
+
+def _door_html(spark):
+    from archive_pdf_tools_spark.sources.htmlmain import html_documents
+    return html_documents(spark.createDataFrame(
+        [("d", "<p>x</p>")], "doc_id string, html string"))
+
+
+def _door_hocr(spark):
+    from archive_pdf_tools_spark.sources.hocr import hocr_documents
+    return hocr_documents(spark.createDataFrame(
+        [("d", "<html/>", 300)], "doc_id string, hocr string, dpi int"),
+        dpi_col="dpi")
+
+
+def _door_synthetic(spark):
+    from archive_pdf_tools_spark.sources.corpus_source import (
+        synthetic_documents)
+    return synthetic_documents(spark, 2)
+
+
+def _door_documents(spark):
+    from archive_pdf_tools_spark.sources.spans_from_text import (
+        documents_to_spans)
+    return documents_to_spans(spark.createDataFrame(
+        [(1, "x")], "doc_id bigint, text string"))
+
+
+def _door_pdf_spans(spark):
+    from archive_pdf_tools_spark.operators.pdfcomp import pdfs_to_spans
+    return pdfs_to_spans(spark.createDataFrame(
+        [("d", bytearray(b"%PDF-"), None)],
+        "doc_id string, pdf binary, hocr binary"))
+
+
+def _door_scandata(spark):
+    from archive_pdf_tools_spark.sources.scandata import scandata_df
+    return scandata_df(spark.createDataFrame(
+        [("d", "<book/>")], "doc_id string, scandata_xml string"))
+
+
+def _stack_df(spark):
+    return spark.createDataFrame(
+        [("d", 0, bytearray(b"x"), None, None)],
+        "doc_id string, page_idx int, image binary, hocr binary, "
+        "scandata string")
+
+
+def _door_imagestack(spark):
+    from archive_pdf_tools_spark.operators.imagestack import (
+        imagestack_to_spans)
+    return imagestack_to_spans(_stack_df(spark))
+
+
+def _door_recode_pdf(spark):
+    from archive_pdf_tools_spark.operators.recode import recode_to_pdf
+    return recode_to_pdf(_stack_df(spark))
+
+
+@pytest.mark.parametrize("door", [
+    _door_html, _door_hocr, _door_synthetic, _door_documents,
+    _door_pdf_spans, _door_scandata, _door_imagestack, _door_recode_pdf],
+    ids=lambda door: door.__name__[len("_door_"):])
+def test_pyworker_doors_plan_no_pandas_node(spark, door):
+    """Every door built on ``pyworker`` crosses the Python boundary as
+    Arrow: its plan has a MapInArrow or FlatMapGroupsInArrow node and no
+    pandas map or group node."""
+    p = plan_str(door(spark))
+    assert "MapInArrow" in p or "FlatMapGroupsInArrow" in p, p
+    assert "MapInPandas" not in p, p
+    assert "FlatMapGroupsInPandas" not in p, p
 
 
 def test_building_queries_leaves_session_conf_unchanged(spark):

@@ -172,7 +172,8 @@ def test_poison_document_gives_one_marker(spark, door):
 
 def test_null_document_id_gives_one_text_error_span(spark):
     """``documents_to_spans`` runs the same guarded body: a document
-    whose id is null gives one ``text_error`` span, and its neighbours
+    whose id is null (None across the Arrow boundary) gives one
+    ``text_error`` span, and its neighbours
     (one with a media span, one without) come out as they do alone."""
     from archive_pdf_tools_spark.sources.spans_from_text import (
         documents_to_spans)
@@ -190,6 +191,6 @@ def test_null_document_id_gives_one_text_error_span(spark):
         "tdoc_00000003": ["text", "media"], "tdoc_00000004": ["text"]}
     (bad,) = set(got) - set(want)
     assert [tuple(s) for r in got.pop(bad) for s in r["spans"]] == [
-        ("text_error", "ValueError: cannot convert float NaN to integer",
-         "", 0)]
+        ("text_error", "TypeError: int() argument must be a string, a "
+         "bytes-like object or a real number, not 'NoneType'", "", 0)]
     assert got == want

@@ -62,9 +62,10 @@ COMMENT = {
         "verify — O(sum cell^2), not O(n^2), and no raster-sized rows "
         "in the wide shuffle."),
     "html_extract": (
-        "HTML front door: two map-only vectorized stages (fixture synth, "
-        "boilerplate-strip parse) + the tiny spread exchange; per-doc "
-        "span analytics stay array-level (no explode shuffle)."),
+        "HTML front door: two map-only vectorized stages (the fixture "
+        "synth's MapInPandas, the boilerplate-strip parse's MapInArrow "
+        "through pyworker.map_documents) + the tiny spread exchange; "
+        "per-doc span analytics stay array-level (no explode shuffle)."),
     "pii_scrub": (
         "The 100-TB shape: a 3-column pruned scan, ONE codegen Project "
         "carrying every regexp_count/regexp_replace, partial "
